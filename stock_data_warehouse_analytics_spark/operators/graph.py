@@ -115,7 +115,11 @@ def _connected_components_driver(fwd: DataFrame):
     small-graph body of :func:`connected_components`.  Returns the
     same (node, comp) frame (comp = min member id, components are
     unique), as a literal relation; None when the node type cannot
-    ride a literal plan (caller falls back to the distributed loop)."""
+    ride a literal plan (caller falls back to the distributed loop).
+    Null endpoints match the loop, whose equi-joins never match a
+    null: an edge with a null joins nothing, its non-null endpoint
+    still appears as a node, and the null itself is one (null, null)
+    row."""
     from .localrel import literal_df
 
     node_t = fwd.schema["a"].dataType.simpleString()
@@ -123,6 +127,7 @@ def _connected_components_driver(fwd: DataFrame):
         return None
     pairs = [(r.a, r.b) for r in fwd.collect()]
     parent: dict = {}
+    has_null = False
 
     def find(x):
         root = x
@@ -133,8 +138,13 @@ def _connected_components_driver(fwd: DataFrame):
         return root
 
     for a, b in pairs:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
+        for x in (a, b):
+            if x is None:
+                has_null = True
+            else:
+                parent.setdefault(x, x)
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[ra] = rb
@@ -147,6 +157,8 @@ def _connected_components_driver(fwd: DataFrame):
         if m is None or n < m:
             comp_min[r] = n
     rows = sorted((n, comp_min[find(n)]) for n in parent)
+    if has_null:
+        rows.append((None, None))
     return literal_df(
         fwd.sparkSession, rows, f"node {node_t}, comp {node_t}"
     )

@@ -105,7 +105,7 @@ def regression_next_day(mining: DataFrame, min_rows: int = 20) -> DataFrame:
     w = ordered_window(["Ticker"], ["Date"])
     df = (
         mining.withColumn("Target_NextDay", lead_("Close", w))
-        .na.drop(subset=["Target_NextDay"])
+        .na.drop(subset=["Target_NextDay", *features])  # F4, before the fit
         .select("Ticker", "Date", "Target_NextDay", *features)
     )
 
@@ -185,6 +185,8 @@ def kmeans_exact_small(features: DataFrame, k: int = 3) -> DataFrame:
     n = len(pdf)
     if n > 12:
         raise ValueError("exact k-means is for bounded inputs; use kmeans_clusters")
+    if n < k:  # no assignment uses all k labels (sklearn raises too)
+        raise ValueError(f"n_samples={n} should be >= n_clusters={k}")
     X = _standardize_pop(pdf, ["Return", "Volume"])
 
     best, best_sse = None, np.inf

@@ -9,12 +9,11 @@ half-even parity.
 
 from __future__ import annotations
 
-import weakref
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.derivations import np_round, with_time_dims
+from ..session import session_memo
 
 __all__ = [
     "prepare_olap_frame",
@@ -35,10 +34,7 @@ def prepare_olap_frame(fact: DataFrame, min_year: int = 2024) -> DataFrame:
 # scan is metadata-sized OUTPUT but a full-table scan per pivot call —
 # at 100× that is a real job per query invocation.  Keyed by the frame's
 # semanticHash (public API), verified with sameSemantics to rule out
-# hash collisions; entries die with their session (weak keys).
-_TICKER_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[int, tuple[DataFrame, list[str]]]]" = (
-    weakref.WeakKeyDictionary()
-)
+# hash collisions; the per-session dict lives in ``session_memo``.
 _TICKER_SCANS = [0]  # scan counter, observable by the plan-shape test
 _TICKER_CACHE_MAX = 8  # FIFO bound on cached (frame, tickers) entries
 
@@ -56,7 +52,7 @@ def _tickers_of(df: DataFrame) -> list[str]:
     # cached enumeration — call spark.catalog.clearCache()/rebuild the
     # session (or simply pass `tickers=` explicitly) after mutating
     # source files mid-session.
-    per_session = _TICKER_CACHE.setdefault(df.sparkSession, {})
+    per_session = session_memo(df.sparkSession, "stock_olap.tickers", dict)
     key = df.semanticHash()
     hit = per_session.get(key)
     if hit is not None and df.sameSemantics(hit[0]):

@@ -10,11 +10,10 @@ readout.
 
 from __future__ import annotations
 
-import weakref as _weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_memo
 from ..sources.tables import load_table
 from ..streaming.guardrails import srm_windowed
 from .ab_testing import (
@@ -757,11 +756,6 @@ def eval_ab_cumulative_tstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("d")
 
 
-_MOMENTS_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def _daily_cum_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d, n_c, n_t, mc, mt, vc, vt) at every day-D experiment
     snapshot over the FIXED user universe (users with no events by
@@ -775,18 +769,15 @@ def _daily_cum_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     committee panel each need this day-grain table; without the memo
     the panel re-derives the (user, day) pass three times over.  The
     checkpointed frame is day-grain (one row per calendar day), so
-    the memo is calendar-bounded, never fact-sized.  STALENESS
-    CONTRACT: same as ``ab_testing.user_day_purchases`` — the key is
-    never invalidated; rewriting parquet under ``sf_dir`` within one
-    SparkSession serves the pre-rewrite snapshot (intended: inputs are
-    immutable per run; a mutating pipeline must start a fresh session
-    or key on a dir fingerprint)."""
-    per_session = _MOMENTS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        per_session[sf_dir] = _daily_cum_moments_build(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return per_session[sf_dir]
+    the memo is calendar-bounded, never fact-sized.  Cached by
+    ``session_memo`` (staleness contract there)."""
+    return session_memo(
+        spark,
+        ("ab_testing2.moments", sf_dir),
+        lambda: _daily_cum_moments_build(spark, sf_dir).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 def _daily_cum_moments_build(spark: SparkSession, sf_dir: str) -> DataFrame:

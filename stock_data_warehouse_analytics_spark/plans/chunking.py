@@ -17,12 +17,11 @@ those exact integers the same way on both engines, then rounded to
 
 from __future__ import annotations
 
-import weakref as _weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.chunking import chunk_documents
+from ..session import session_memo
 from ..sources.tables import load_table
 from .registry import register
 
@@ -813,17 +812,12 @@ def hybrid_fused_candidates(
     return _rrf_fuse(sparse, dense, out_depth=out_depth)
 
 
-_LEGS_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def _hybrid_legs_for(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The staged depth-_HY_DEPTH (sparse, dense) leg rankings over the
     STANDARD document chunking, localCheckpointed eagerly and memoized
-    per (session, sf_dir) — the ``_daily_cum_moments`` `_MOMENTS_CACHE`
+    per (session, sf_dir) — the ``_daily_cum_moments`` staging
     pattern applied to retrieval (r7 verdict action #2).  THREE
     registered consumers share one chunk+shingle pass per session:
     ``chunk_hybrid_rrf_topk``, ``eval_rag_retrieval_recall`` and
@@ -832,21 +826,19 @@ def _hybrid_legs_for(
     corpus-sized explode + df census + both leg joins run ONCE per
     session instead of once per panel.  The checkpointed frames are
     candidate-list-grain (≤ |query chunks| × depth rows each), never
-    corpus-sized.  STALENESS CONTRACT: same as ``_MOMENTS_CACHE`` —
-    the key is never invalidated; rewriting parquet under ``sf_dir``
-    within one SparkSession serves the pre-rewrite snapshot (inputs
-    are immutable per run; a mutating pipeline must start a fresh
-    session or key on a dir fingerprint)."""
-    per_session = _LEGS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    corpus-sized.  Cached by ``session_memo`` (staleness contract
+    there)."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
         sparse, dense = _legs_from_tf(
             _chunk_tf_for(spark, sf_dir), leg_depth=_HY_DEPTH
         )
-        per_session[sf_dir] = (
+        return (
             sparse.localCheckpoint(eager=True),
             dense.localCheckpoint(eager=True),
         )
-    return per_session[sf_dir]
+
+    return session_memo(spark, ("chunking.legs", sf_dir), build)
 
 
 def _chunk_tf_for(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,13 +846,10 @@ def _chunk_tf_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the STANDARD chunking — the substrate both the hybrid legs
     and the hashed-vector build (``chunk_hashed_vectors``) start from;
     staged once per (session, sf_dir) so the corpus explode runs once
-    for the whole chunk family.  Same staleness contract as
-    ``_hybrid_legs_for``."""
+    for the whole chunk family."""
     from ..functions.text import shingles
 
-    per_session = _LEGS_CACHE.setdefault(spark, {})
-    key = (sf_dir, "_tf")
-    if key not in per_session:
+    def build() -> DataFrame:
         ch = chunk_documents(
             load_table(spark, sf_dir, "documents"),
             chunk_tokens=CHUNK_TOKENS,
@@ -872,8 +861,9 @@ def _chunk_tf_for(spark: SparkSession, sf_dir: str) -> DataFrame:
             "chunk_id",
             F.explode(shingles(F.col("chunk_text"), SHINGLE_K)).alias("term"),
         ).filter(F.length("term") > 0)
-        per_session[key] = tf.localCheckpoint(eager=True)
-    return per_session[key]
+        return tf.localCheckpoint(eager=True)
+
+    return session_memo(spark, ("chunking.legs", sf_dir, "_tf"), build)
 
 
 def _hybrid_legs(

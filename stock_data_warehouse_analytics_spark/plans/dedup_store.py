@@ -22,15 +22,10 @@ Correctness is unchanged: the stored frames are the IDENTICAL
 expressions the operators build internally (the operators take them
 via the ``sh``/``sig`` override params), just materialized once.
 
-Cache stance: WeakKeyDictionary on the session (the `_IVF_CACHE` /
-`_hybrid_legs_for` pattern).  STALENESS contract: keyed by sf_dir;
-test data is immutable per run — a pipeline that rewrites parquet
-under sf_dir must start a fresh session.
+Cached by ``session.session_memo`` (staleness contract there).
 """
 
 from __future__ import annotations
-
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,57 +35,43 @@ from ..operators.dedup import (
     shingle_table,
     simhash_near_pairs,
 )
+from ..session import session_memo
 from ..sources.tables import load_table
-
-_STORE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _slot(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    per_session = _STORE.setdefault(spark, {})
-    key = (sf_dir, name)
-    if key not in per_session:
-        per_session[key] = build().localCheckpoint(eager=True)
-    return per_session[key]
 
 
 def staged_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical capped shingle table: (doc_id, shingle), word
     3-grams, df ≤ max(50, 1% of corpus)."""
-    return _slot(
+    return session_memo(
         spark,
-        sf_dir,
-        "shingles",
+        ("dedup_store", sf_dir, "shingles"),
         lambda: shingle_table(
             load_table(spark, sf_dir, "documents"), "text", 3, max_df="auto"
-        ),
+        ).localCheckpoint(eager=True),
     )
 
 
 def staged_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical 16-permutation MinHash signature table
     (doc_id, mh0..mh15), built over :func:`staged_shingles`."""
-    return _slot(
+    return session_memo(
         spark,
-        sf_dir,
-        "signatures",
+        ("dedup_store", sf_dir, "signatures"),
         lambda: minhash_signatures(
             None, n_hashes=16, sh=staged_shingles(spark, sf_dir)
-        ),
+        ).localCheckpoint(eager=True),
     )
 
 
 def staged_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical (n_hashes=16, bands=4) LSH candidate pairs
     (doc_a < doc_b), built over :func:`staged_signatures`."""
-    return _slot(
+    return session_memo(
         spark,
-        sf_dir,
-        "candidates",
+        ("dedup_store", sf_dir, "candidates"),
         lambda: minhash_candidate_pairs(
             None, n_hashes=16, bands=4, sig=staged_signatures(spark, sf_dir)
-        ),
+        ).localCheckpoint(eager=True),
     )
 
 
@@ -100,11 +81,10 @@ def staged_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_detector_ensemble``.  Pair-grain (≤ candidate pairs), so
     the checkpoint is tiny; the 60-conditional-sum signature agg runs
     once per session instead of once per consumer."""
-    return _slot(
+    return session_memo(
         spark,
-        sf_dir,
-        "simhash_pairs",
+        ("dedup_store", sf_dir, "simhash_pairs"),
         lambda: simhash_near_pairs(
             load_table(spark, sf_dir, "documents"), max_hamming=8, bands=4
-        ),
+        ).localCheckpoint(eager=True),
     )

@@ -24,6 +24,7 @@ from ..operators.dedup import (
     simhash_near_pairs,
     span_coverage,
 )
+from ..session import session_memo
 from ..sources.tables import load_table
 from ..operators.localrel import literal_df
 from .registry import register
@@ -166,26 +167,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production pipeline persists it once per crawl.  The table is
 # ≤ one row per doc participating in a candidate pair (≪ corpus) and
 # connected_components already localCheckpoints its iterations, so one
-# more checkpoint pins the final assignment.  Entries die with their
-# session (WeakKeyDictionary, same stance as _SPANS_CACHE below).
-import weakref as _weakref
-
-_CC_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
+# more checkpoint pins the final assignment.
 
 
 def _cc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) from MinHash(16)+LSH(4) pairs closed by
-    distributed connected components, memoized per (session, sf_dir).
-    Staleness contract: see ``ab_testing.user_day_purchases`` — the
-    memo is never invalidated; inputs are immutable per session."""
-    per_session = _CC_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    distributed connected components, memoized per (session, sf_dir)
+    by ``session_memo`` (staleness contract there)."""
+
+    def build() -> DataFrame:
         from .dedup_store import staged_candidates
 
         edges = staged_candidates(spark, sf_dir)
-        per_session[sf_dir] = (
+        return (
             connected_components(edges, src="doc_a", dst="doc_b")
             .select(
                 F.col("node").alias("doc_id"),
@@ -193,7 +187,8 @@ def _cc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    return per_session[sf_dir]
+
+    return session_memo(spark, ("llm_dedup.cc", sf_dir), build)
 
 
 @register(
@@ -386,23 +381,17 @@ spans AS (
 # table per sf_dir — two registered queries (the span list and the
 # coverage rollup) consume the same spans; the table is ~shared-token
 # volume, far smaller than the corpus, so materializing it once is the
-# production shape (a pipeline would persist it).  Entries die with
-# their session.
-import weakref
-
-_SPANS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+# production shape (a pipeline would persist it).
 
 
 def _substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_session = _SPANS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        d = load_table(spark, sf_dir, "documents")
-        per_session[sf_dir] = exact_substring_spans(
-            d, k=_SUBSTR_K
-        ).localCheckpoint(eager=True)
-    return per_session[sf_dir]
+    return session_memo(
+        spark,
+        ("llm_dedup.spans", sf_dir),
+        lambda: exact_substring_spans(
+            load_table(spark, sf_dir, "documents"), k=_SUBSTR_K
+        ).localCheckpoint(eager=True),
+    )
 
 
 @register(

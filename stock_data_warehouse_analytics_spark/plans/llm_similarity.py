@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import weakref
-
 from ..operators.similarity import (
     _plane,
     kcenter_select,
@@ -29,16 +27,14 @@ from ..operators.similarity import (
     topk_ivf_probe,
     topk_lsh,
 )
+from ..session import session_memo
 from ..sources.tables import load_table
 from .registry import register
 
 # Session-scoped IVF quantizer cache: fit once per (session, sf_dir),
 # probe many times — the deployment shape (the quantizer is a bounded
 # k×dim artifact; refitting per query batch would re-run k-means|| on
-# the whole corpus).  Weak session keys like sources.tables._TABLE_CACHE.
-_IVF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
+# the whole corpus).
 
 
 def ivf_quantizer(
@@ -47,15 +43,16 @@ def ivf_quantizer(
     """(assigned, centers) for the standard corpus quantizer
     (n_cells=16, seed 42, maxIter 5) — fit on first use per session,
     reused by every subsequent probe."""
-    per_session = _IVF_CACHE.setdefault(spark, {})
-    key = sf_dir
-    if key not in per_session:
-        e = load_table(spark, sf_dir, "embeddings")
-        # maxIter 5: a coarse quantizer needs rough cells, not
-        # convergence — k-means|| init does most of the work and each
-        # Lloyd iteration is a driver-coordinated job round
-        per_session[key] = fit_ivf_quantizer(e, n_cells=16, max_iter=5)
-    return per_session[key]
+    # maxIter 5: a coarse quantizer needs rough cells, not
+    # convergence — k-means|| init does most of the work and each
+    # Lloyd iteration is a driver-coordinated job round
+    return session_memo(
+        spark,
+        ("llm_similarity.ivf", sf_dir),
+        lambda: fit_ivf_quantizer(
+            load_table(spark, sf_dir, "embeddings"), n_cells=16, max_iter=5
+        ),
+    )
 
 _DIM = 64
 # normalize-once mirror of operators.similarity.normalize: per-element
@@ -193,32 +190,19 @@ _TUNE_K = 5
 _NCELLS_SWEEP = (4, 8, 16, 32)  # quantizer sizes; nprobe fixed below
 _NCELLS_NPROBE = 2
 
-# Per-(session, sf_dir, n_cells) quantizer cache for the N_CELLS sweep:
-# each sweep point is a DIFFERENT index (refit required), but within a
-# session each index is fit once — sampled via fit_sample_per_cell so
-# every Lloyd pass is codebook-sized, not corpus-sized.
-_NCELLS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# Shared brute-force truth for the tuning curves: the fixed
-# (vec_id < _TUNE_NQ, k=_TUNE_K) ground-truth list is identical for
-# every recall eval — ≤ k·|Q| rows, materialized once per
-# (session, sf_dir).
-_TUNE_TRUTH_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _tune_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_session = _TUNE_TRUTH_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    """Shared brute-force truth for the tuning curves: the fixed
+    (vec_id < _TUNE_NQ, k=_TUNE_K) ground-truth list is identical for
+    every recall eval — ≤ k·|Q| rows, materialized once per
+    (session, sf_dir)."""
+
+    def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
         queries = e.filter(F.col("vec_id") < _TUNE_NQ)
-        per_session[sf_dir] = topk_bruteforce(
-            e, queries, k=_TUNE_K
-        ).localCheckpoint(eager=True)
-    return per_session[sf_dir]
+        return topk_bruteforce(e, queries, k=_TUNE_K).localCheckpoint(eager=True)
+
+    return session_memo(spark, ("llm_similarity.tune_truth", sf_dir), build)
 
 
 def _lloyd_numpy(X, H, k: int, iters: int):
@@ -267,8 +251,7 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     from ..operators.kmeans import assign_codes_multi
     from ..operators.similarity import normalize
 
-    per_session = _NCELLS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    def build():
         e = load_table(spark, sf_dir, "embeddings")
         cp = e.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -338,8 +321,9 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
             ],
             "n_cells int, cell int, cvec array<double>",
         )
-        per_session[sf_dir] = (multi, centers, centers_all)
-    return per_session[sf_dir]
+        return (multi, centers, centers_all)
+
+    return session_memo(spark, ("llm_similarity.ncells", sf_dir), build)
 
 
 def _ncells_quantizer(
@@ -744,23 +728,22 @@ def emb_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_IVF2_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def ivf2_quantizer(spark: SparkSession, sf_dir: str):
     """Session-cached two-level quantizer (4 coarse × 4 sub) — fit on
     first use, reused by every probe (the ivf_quantizer stance)."""
-    per_session = _IVF2_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        e = load_table(spark, sf_dir, "embeddings")
-        # 3 Lloyd iterations per level: like the IVF-PQ fit, recall is
-        # routing-bound, not codebook-polish-bound (measured identical)
-        per_session[sf_dir] = fit_ivf2_quantizer(
-            e, n_coarse=4, n_sub=4, max_iter=3, sub_iters=3
-        )
-    return per_session[sf_dir]
+    # 3 Lloyd iterations per level: like the IVF-PQ fit, recall is
+    # routing-bound, not codebook-polish-bound (measured identical)
+    return session_memo(
+        spark,
+        ("llm_similarity.ivf2", sf_dir),
+        lambda: fit_ivf2_quantizer(
+            load_table(spark, sf_dir, "embeddings"),
+            n_coarse=4,
+            n_sub=4,
+            max_iter=3,
+            sub_iters=3,
+        ),
+    )
 
 
 @register(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..operators.dedup import hash_int60
+from ..session import session_memo
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
 from .registry import register
@@ -42,24 +43,17 @@ _PPL_FLAG = 30.0  # gate threshold: ppl above this ⇒ "too surprising"
 
 # Per-doc perplexity frame, memoized per (session, sf_dir) so the
 # curriculum planner (plans/stat_models2.mix_curriculum_schedule) and
-# the gate panel share ONE scored materialization — the same
-# WeakKeyDictionary stance as llm_dedup._cc_assignment.
-import weakref as _weakref
-
-_PPL_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
+# the gate panel share ONE scored materialization.
 
 
 def doc_ppl_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, ppl): add-one bigram-LM perplexity per document
     (the ``text_lm_perplexity`` scoring pipeline, factored out and
     memoized per session — localCheckpointed so consumers don't re-run
-    the two corpus passes).  Staleness contract: see
-    ``ab_testing.user_day_purchases`` — the (session, sf_dir) memo is
-    never invalidated, so inputs are assumed immutable per session."""
-    per_session = _PPL_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    the two corpus passes).  Cached by ``session_memo`` (staleness
+    contract there)."""
+
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         toks = d.select("doc_id", "source", tokens(F.col("text")).alias("t"))
         bi = toks.select(
@@ -91,14 +85,15 @@ def doc_ppl_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("lp"),
             )
         )
-        per_session[sf_dir] = (
+        return (
             scored.groupBy("doc_id", "source")
             .agg(
                 F.round(F.exp(-dsum("lp") / F.count(F.lit(1))), 6).alias("ppl")
             )
             .localCheckpoint(eager=False)
         )
-    return per_session[sf_dir]
+
+    return session_memo(spark, ("lm.ppl", sf_dir), build)
 
 
 @register(

@@ -21,18 +21,15 @@ interpolated independently — so the q=0.5 value out of a
 (pinned by tests/test_fast_aggregates.py::test_quantile_panel_matches
 _lone_calls).
 
-Cache stance: WeakKeyDictionary on the session (like
-llm_similarity._IVF_CACHE); STALENESS contract: keyed by sf_dir, test
-data is immutable.
+Cached by ``session.session_memo`` (staleness contract there).
 """
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.ranking import grouped_exact_quantiles
+from ..session import session_memo
 from ..sources.tables import load_table
 
 # Canonical quantile panel per (table, group_col, value_col): the
@@ -53,10 +50,6 @@ _PANELS: dict[tuple[str, str, str], list[tuple[str, float]]] = {
     ("events", "event_type", "value"): [("q50", 0.5)],
 }
 
-_QSTORE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def quantile_panel(
     spark: SparkSession,
@@ -73,11 +66,11 @@ def quantile_panel(
     ``grouped_exact_quantiles`` itself."""
     key = (table, group_col, value_col)
     quantiles = _PANELS[key]  # KeyError = not a registered panel
-    per_session = _QSTORE_CACHE.setdefault(spark, {})
-    cache_key = (sf_dir, *key)
-    if cache_key not in per_session:
+
+    def build() -> DataFrame:
         df = load_table(spark, sf_dir, table).select(group_col, value_col)
-        per_session[cache_key] = grouped_exact_quantiles(
+        return grouped_exact_quantiles(
             df, group_col, value_col, quantiles
         ).localCheckpoint(eager=True)
-    return per_session[cache_key]
+
+    return session_memo(spark, ("quantile_store", sf_dir, *key), build)

@@ -5,13 +5,12 @@ deduped corpus and a training run.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..operators.text_ml import bpe_train_merges
+from ..session import session_memo
 from ..sources.tables import load_table
 from .registry import register
 
@@ -170,10 +169,7 @@ def mix_token_budget_per_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Per-session memo of the trained (merges, vocab) pair per sf_dir —
 # training is 10 sequential Spark jobs; both BPE queries reuse one fit
-# (the ivf_quantizer stance).  Entries die with their session.
-_BPE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
-    weakref.WeakKeyDictionary()
-)
+# (the ivf_quantizer stance).
 
 
 def trained_bpe(spark: SparkSession, sf_dir: str):
@@ -181,11 +177,11 @@ def trained_bpe(spark: SparkSession, sf_dir: str):
     fit on first use per (session, sf_dir), reused afterwards.  The
     vocab frame is already localCheckpoint-materialized by the trainer
     loop, so reuse costs no recomputation."""
-    per_session = _BPE_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        d = load_table(spark, sf_dir, "documents")
-        per_session[sf_dir] = bpe_train_merges(d, rounds=10)
-    return per_session[sf_dir]
+    return session_memo(
+        spark,
+        ("tokenizer.bpe", sf_dir),
+        lambda: bpe_train_merges(load_table(spark, sf_dir, "documents"), rounds=10),
+    )
 
 
 @register(
@@ -250,14 +246,13 @@ def trained_bpe_half(spark: SparkSession, sf_dir: str):
     """(merges_df, vocab) trained on the EVEN-doc_id half only — the
     'existing tokenizer' of the incremental-encoding query.  Cached
     per (session, sf_dir) under a distinct key."""
-    per_session = _BPE_CACHE.setdefault(spark, {})
-    key = sf_dir + "#even"
-    if key not in per_session:
+    def build():
         d = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 2 == 0
         )
-        per_session[key] = bpe_train_merges(d, rounds=10)
-    return per_session[key]
+        return bpe_train_merges(d, rounds=10)
+
+    return session_memo(spark, ("tokenizer.bpe", sf_dir + "#even"), build)
 
 
 VOCAB_KEEP = 16  # finite-vocab cutoff (the corpus vocabulary is ~31

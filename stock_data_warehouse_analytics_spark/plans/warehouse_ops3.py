@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import session_memo
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
 from .registry import register
@@ -473,14 +474,8 @@ def stream_multimodal_meta_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filter reversal); a real pipeline decodes a corpus once and indexes
 # many times, so the queries should too.  localCheckpoint also cuts
 # the self-join lineage (the banded candidate join would otherwise
-# re-run the codec on both sides).  Weak session keys like
-# llm_similarity._IVF_CACHE; STALENESS: keyed by sf_dir, same
-# contract as every staged frame here (test data is immutable).
-import weakref as _weakref  # noqa: E402 — scoped to the cache below
-
-_PNG_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
+# re-run the codec on both sides).  Cached by ``session_memo``
+# (staleness contract there).
 
 
 def _png_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,19 +490,19 @@ def _png_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_png_group_blobs,
     )
 
-    per_session = _PNG_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         # the sf0.1 documents scan is ONE parquet split — repartition
         # so the per-image codec work fans out across cores; at scale
         # the corpus already arrives multi-split
         blobs = synth_png_group_blobs(d.repartition(32, "doc_id"), group=4)
-        per_session[sf_dir] = (
+        return (
             decode_png_with_ahash(blobs)
             .repartition(8)
             .localCheckpoint(eager=True)
         )
-    return per_session[sf_dir]
+
+    return session_memo(spark, ("warehouse_ops3.png", sf_dir), build)
 
 
 @register(

@@ -19,7 +19,7 @@ import weakref
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_for_engine"]
+__all__ = ["get_spark", "session_memo", "tune_for_engine"]
 
 
 def _cpus() -> int:
@@ -50,6 +50,35 @@ def tune_for_engine(spark: SparkSession) -> SparkSession:
     conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     _ship_package(spark)
     return spark
+
+
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def session_memo(spark: SparkSession, key, build):
+    """Return the value memoized under ``key`` for ``spark``, calling
+    ``build()`` to make it on first use.
+
+    This is the one staging cache of the package: every session-scoped
+    substrate (staged frames, fitted quantizers, trained vocabularies,
+    lazy table scans) lives here, under a key prefixed by the name of
+    the substrate so that keys never collide.  A ``build`` that raises
+    stores nothing, so the next call builds again.  Entries are held
+    weakly by session: they die with their session, and a
+    ``newSession()`` gets its own.
+
+    STALENESS CONTRACT: entries are never invalidated.  Keys name their
+    inputs (an ``sf_dir`` path, a table, a parameter), not their
+    contents, so rewriting the parquet under ``sf_dir`` within one
+    session serves the pre-rewrite snapshot to every later query.  That
+    is intended: inputs are immutable per run, and a staged substrate
+    is a snapshot.  A pipeline that mutates its input directory
+    mid-session must start a fresh session.
+    """
+    per_session = _MEMO.setdefault(spark, {})
+    if key not in per_session:
+        per_session[key] = build()
+    return per_session[key]
 
 
 # weak so (a) entries die with their session and (b) a NEW session

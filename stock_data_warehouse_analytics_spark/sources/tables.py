@@ -14,10 +14,11 @@ Scan-level scale notes (the part that matters at 100 TB):
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import session_memo
 
 TESTDATA_TABLES = (
     "region",
@@ -40,25 +41,16 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # catalog/metastore round-trip at cluster scale.  This caches scan
 # METADATA only; the data path stays a fresh scan per action (the
 # "no caching of unbounded inputs" stance below is about data).
-# Keyed by a *weak* session reference: entries die with their session,
-# so a new session that reuses a dead session's id() can never receive
-# DataFrames bound to a stopped context.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
-    per_session = _TABLE_CACHE.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table(spark, sf_dir, name)
-    per_session[key] = df
-    return df
+    return session_memo(
+        spark,
+        ("tables", os.path.abspath(sf_dir), name),
+        lambda: _read_table(spark, sf_dir, name),
+    )
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -123,25 +123,34 @@ def test_connected_components_driver_path_matches_loop(spark, as_string):
         connected_components,
     )
 
-    edges = [(1, 2), (2, 3), (5, 4), (7, 7), (10, 11), (11, 10), (4, 12)]
-    if as_string:
-        edges = [(f"n{a:02d}", f"n{b:02d}") for a, b in edges]
-        schema = "src string, dst string"
-    else:
-        schema = "src long, dst long"
-    df = spark.createDataFrame(edges, schema)
-    old = os.environ.get("SPARK_GRAFT_CC_SMALL_BYTES")
-    try:
-        os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = "0"  # force the loop
-        loop = _rows(connected_components(df))
-        os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = str(1 << 40)  # force driver
-        drv = _rows(connected_components(df))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_CC_SMALL_BYTES", None)
+    plain = [(1, 2), (2, 3), (5, 4), (7, 7), (10, 11), (11, 10), (4, 12)]
+    # a null endpoint on either side, a node seen only beside a null,
+    # and an all-null edge
+    with_nulls = plain + [(3, None), (None, 13), (None, None)]
+    for edges in (plain, with_nulls):
+        if as_string:
+            edges = [
+                tuple(None if x is None else f"n{x:02d}" for x in e)
+                for e in edges
+            ]
+            schema = "src string, dst string"
         else:
-            os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = old
-    assert loop == drv
+            schema = "src long, dst long"
+        df = spark.createDataFrame(edges, schema)
+        old = os.environ.get("SPARK_GRAFT_CC_SMALL_BYTES")
+        try:
+            os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = "0"  # force the loop
+            loop = _rows(connected_components(df))
+            # force the driver path: a checkpointed frame whose size
+            # Catalyst does not know reports Long.MaxValue bytes
+            os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = str((1 << 63) - 1)
+            drv = _rows(connected_components(df))
+        finally:
+            if old is None:
+                os.environ.pop("SPARK_GRAFT_CC_SMALL_BYTES", None)
+            else:
+                os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = old
+        assert loop == drv
 
 
 def test_literal_map_rejects_non_string_keys():

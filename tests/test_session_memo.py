@@ -1,0 +1,111 @@
+"""``session.session_memo``: the one session-scoped staging cache.
+
+Driver-only: no test here runs a Spark job.
+"""
+
+from __future__ import annotations
+
+import gc
+import os
+import weakref
+
+import pytest
+
+from stock_data_warehouse_analytics_spark.session import _MEMO, session_memo
+
+PKG_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "stock_data_warehouse_analytics_spark",
+)
+
+
+class _Value:
+    """A weak-referenceable stand-in for a staged substrate."""
+
+
+class _Counter:
+    """A ``build`` that counts its calls and returns a fresh value."""
+
+    def __init__(self):
+        self.calls = 0
+
+    def __call__(self):
+        self.calls += 1
+        return _Value()
+
+
+def test_second_call_returns_same_object_without_rebuilding(spark):
+    build = _Counter()
+    first = session_memo(spark, ("test_memo", "same"), build)
+    again = session_memo(spark, ("test_memo", "same"), build)
+    assert again is first
+    assert build.calls == 1
+
+
+def test_distinct_keys_get_distinct_entries(spark):
+    build = _Counter()
+    a = session_memo(spark, ("test_memo", "a"), build)
+    b = session_memo(spark, ("test_memo", "b"), build)
+    assert a is not b
+    assert build.calls == 2
+
+
+def test_new_session_gets_its_own_entries(spark):
+    build = _Counter()
+    key = ("test_memo", "per_session")
+    mine = session_memo(spark, key, build)
+    other = spark.newSession()
+    theirs = session_memo(other, key, build)
+    assert theirs is not mine
+    assert build.calls == 2
+    assert session_memo(spark, key, build) is mine
+
+
+def test_failed_build_stores_nothing(spark):
+    key = ("test_memo", "flaky")
+    calls = []
+
+    def flaky():
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("first build fails")
+        return "built"
+
+    with pytest.raises(RuntimeError):
+        session_memo(spark, key, flaky)
+    assert session_memo(spark, key, flaky) == "built"
+    assert session_memo(spark, key, flaky) == "built"
+    assert len(calls) == 2
+
+
+def test_entries_die_with_their_session(spark):
+    other = spark.newSession()
+    value = weakref.ref(session_memo(other, ("test_memo", "dies"), _Counter()))
+    assert other in _MEMO
+    assert value() is not None
+    del other
+    # SparkSession() re-binds pyspark's RDD.toDF patch to the newest
+    # session; build one more so that patch lets go of ``other``
+    spark.newSession()
+    gc.collect()
+    assert value() is None
+
+
+def test_weak_key_dictionary_only_in_session_module():
+    """Every session-scoped cache goes through ``session_memo``: a
+    hand-rolled ``WeakKeyDictionary`` anywhere else in the package is
+    a second staging path."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG_DIR):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG_DIR)
+            if rel == "session.py":
+                continue
+            with open(path, encoding="utf-8") as fh:
+                for lineno, line in enumerate(fh, 1):
+                    if "WeakKeyDictionary" in line:
+                        offenders.append(f"{rel}:{lineno}")
+    assert offenders == []

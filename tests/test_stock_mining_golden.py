@@ -260,3 +260,57 @@ def test_corr_matrices_vs_pandas(fact_sdf, fact_pdf):
     assert len(got_roll) == len(want_series)
     for a, b in zip(got_roll["rolling_corr"], want_series):
         assert _close(a, b, rtol=1e-6)
+
+
+# ---------------------------------------------------------------------------
+# degenerate inputs (synthetic frames, no reference data needed)
+# ---------------------------------------------------------------------------
+
+
+def test_regression_next_day_drops_null_features(spark):
+    import datetime as dt
+
+    from stock_data_warehouse_analytics_spark.operators.stock_mining import (
+        regression_next_day,
+    )
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for ticker in ("AAA", "BBB"):
+        close = 100.0
+        for i in range(40):
+            close += float(rng.normal())
+            rows.append(
+                (
+                    ticker,
+                    dt.date(2024, 1, 1) + dt.timedelta(days=i),
+                    close + float(rng.normal()),
+                    close + 2.0 + float(rng.random()),
+                    close - 2.0 - float(rng.random()),
+                    close,
+                    float(rng.integers(1_000, 100_000)),
+                )
+            )
+    # a sentinel-parsed null Close on one row
+    rows[10] = rows[10][:5] + (None,) + rows[10][6:]
+    df = spark.createDataFrame(
+        rows,
+        "Ticker string, Date date, Open double, High double, Low double,"
+        " Close double, Volume double",
+    )
+    got = regression_next_day(df).toPandas()
+    assert sorted(got.Ticker) == ["AAA", "BBB"]
+    assert got[["R2_Score", "MSE", "Intercept"]].notna().all().all()
+
+
+def test_kmeans_exact_small_rejects_fewer_groups_than_k(spark):
+    from stock_data_warehouse_analytics_spark.operators.stock_mining import (
+        kmeans_exact_small,
+    )
+
+    feats = spark.createDataFrame(
+        [("AAA", 0.01, 1e5), ("BBB", -0.02, 3e5)],
+        "Ticker string, Return double, Volume double",
+    )
+    with pytest.raises(ValueError, match=r"n_samples=2 .*n_clusters=3"):
+        kmeans_exact_small(feats, k=3)
