@@ -25,7 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .localrel import collect_if_small, literal_df
+
 __all__ = ["connected_components"]
+
+# node types a literal relation carries exactly
+_LITERAL_NODE_TYPES = ("bigint", "int", "smallint", "tinyint", "string")
 
 
 def connected_components(
@@ -46,31 +51,13 @@ def connected_components(
         eager=True
     )
 
-    # Small-graph fast path (r10): the connected-component PARTITION of
-    # a graph is unique and the label is canonical (min node id per
-    # component), so ANY correct algorithm returns bit-identical rows —
-    # when the materialized edge list is small by exact post-checkpoint
-    # Catalyst stats, a driver union-find replaces the 2-actions-per-
-    # round propagation loop (≈10 tiny jobs on candidate-pair graphs —
-    # pure scheduling overhead; the same bounded-state stance as the
-    # trainer collects: dedup candidate-pair tables are pair-grain,
-    # orders of magnitude below corpus grain).  Past the threshold the
-    # pointer-jumping loop runs unchanged — that is the 100 TB path.
-    import os
-
-    try:
-        est = int(
-            fwd._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats are advisory; assume big
-        est = 1 << 62
-    small_bytes = int(
-        os.environ.get("SPARK_GRAFT_CC_SMALL_BYTES", str(8 << 20))
-    )
-    if est <= small_bytes:
-        out = _connected_components_driver(fwd)
-        if out is not None:
-            return out
+    # the component partition and its min-id labels are unique, so a
+    # driver union-find returns the loop's rows without its jobs
+    node_t = fwd.schema["a"].dataType.simpleString()
+    if node_t in _LITERAL_NODE_TYPES:
+        pairs = collect_if_small(fwd)
+        if pairs is not None:
+            return _connected_components_driver(fwd.sparkSession, pairs, node_t)
 
     sym = fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
@@ -110,22 +97,15 @@ def connected_components(
     return labels
 
 
-def _connected_components_driver(fwd: DataFrame):
-    """Driver union-find over a collected (a, b) edge list — the
+def _connected_components_driver(spark, pairs, node_t: str) -> DataFrame:
+    """Driver union-find over collected (a, b) edge rows — the
     small-graph body of :func:`connected_components`.  Returns the
     same (node, comp) frame (comp = min member id, components are
-    unique), as a literal relation; None when the node type cannot
-    ride a literal plan (caller falls back to the distributed loop).
+    unique) as a literal relation of node type ``node_t``.
     Null endpoints match the loop, whose equi-joins never match a
     null: an edge with a null joins nothing, its non-null endpoint
     still appears as a node, and the null itself is one (null, null)
     row."""
-    from .localrel import literal_df
-
-    node_t = fwd.schema["a"].dataType.simpleString()
-    if node_t not in ("bigint", "int", "smallint", "tinyint", "string"):
-        return None
-    pairs = [(r.a, r.b) for r in fwd.collect()]
     parent: dict = {}
     has_null = False
 
@@ -159,6 +139,4 @@ def _connected_components_driver(fwd: DataFrame):
     rows = sorted((n, comp_min[find(n)]) for n in parent)
     if has_null:
         rows.append((None, None))
-    return literal_df(
-        fwd.sparkSession, rows, f"node {node_t}, comp {node_t}"
-    )
+    return literal_df(spark, rows, f"node {node_t}, comp {node_t}")

@@ -29,16 +29,48 @@ For BOUNDED frames only: every value is embedded in the query plan, so
 callers keep rows at O(100s) — grid/sweep tables, quantile targets,
 centroid tables, per-group offset maps.  Data-sized frames keep the
 normal read path.
+
+:func:`collect_if_small` is the one rule that sends an operator's
+input to a driver-side body (whose result comes back as a literal
+relation): at most :data:`DRIVER_MAX_ROWS` rows, counted, not
+estimated.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, _parse_datatype_string
+
+# Row cap for the driver small paths (CC union-find, BPE merge loop).
+DRIVER_MAX_ROWS = 10_000
+
+_log = logging.getLogger(__name__)
+
+
+def collect_if_small(df: DataFrame):
+    """``df``'s rows when it has at most :data:`DRIVER_MAX_ROWS` of
+    them, else None — one ``limit(DRIVER_MAX_ROWS + 1).collect()``.
+    Catalyst size estimates are no guide here: a checkpointed join
+    keeps its inflated estimate and a ``createDataFrame`` frame reports
+    Long.MaxValue bytes, so the rule counts rows.
+
+    ``df`` should be materialized (both callers pass a
+    ``localCheckpoint``): ``coalesce(1)`` makes the take ONE job — a
+    plain limit over P partitions re-launches on 1, 4, 16, … of them —
+    and one task that stops after the cap reads a checkpoint cheaply."""
+    rows = df.coalesce(1).limit(DRIVER_MAX_ROWS + 1).collect()
+    small = len(rows) <= DRIVER_MAX_ROWS
+    _log.debug(
+        "collect_if_small: route=%s rows_seen=%d",
+        "driver" if small else "distributed",
+        len(rows),
+    )
+    return rows if small else None
 
 
 def _to_json_value(v, dt):

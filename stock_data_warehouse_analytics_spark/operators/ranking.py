@@ -34,7 +34,6 @@ single-partition plan.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -62,9 +61,7 @@ _BUCKET = "_rk_bucket"
 # path).  Scale-adaptive by DATA SIZE, not by local core count — on a
 # 100 TB input the stats exceed the threshold and the bucketed path
 # runs exactly as before.
-_QUANTILE_SMALL_BYTES = int(
-    os.environ.get("SPARK_GRAFT_QUANTILE_SMALL_BYTES", str(128 << 20))
-)
+_QUANTILE_SMALL_BYTES = 128 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -148,39 +145,14 @@ def bucketed_global_rank(
     exchange at any input size.  ``checkpoint_input`` defaults to AUTO
     (see :func:`_materialize_if_needed`): non-bare-scan inputs are
     localCheckpointed once instead of re-executing for each pass."""
-    df = _materialize_if_needed(df, checkpoint_input)
-    lead = order_cols[0]
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    # accuracy 1000 (was 10000): cut quality only steers load balance —
-    # offsets are derived from the ACTUAL per-bucket counts, so ranks
-    # are exact under any cuts; the cheaper sketch is the right one
-    cuts_row = df.select(
-        F.approx_percentile(F.col(lead).cast("double"), F.array(*[F.lit(q) for q in qs]), 1_000).alias("cuts")
-    ).first()
-    cuts = sorted(set(cuts_row["cuts"] or []))
-
-    bucketed = df.withColumn(_BUCKET, _bucket_of(F.col(lead).cast("double"), cuts))
-
-    counts = {
-        r[_BUCKET]: r["cnt"]
-        for r in bucketed.groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    n_rows = sum(counts.values())
-    offsets: dict[int, int] = {}
-    acc = 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-
-    offset_map = F.create_map(
-        *[F.lit(v) for kv in offsets.items() for v in kv]
+    ranked, n_rows = bucketed_global_rank_multi(
+        df,
+        {rank_col: order_cols},
+        n_buckets=n_buckets,
+        rank_col=rank_col,
+        checkpoint_input=checkpoint_input,
     )
-    w = Window.partitionBy(_BUCKET).orderBy(*order_cols)
-    ranked = bucketed.withColumn(
-        rank_col,
-        (offset_map[F.col(_BUCKET)] + F.row_number().over(w)).cast("long"),
-    ).drop(_BUCKET)
-    return ranked, n_rows
+    return ranked[rank_col], n_rows
 
 
 def bucketed_global_rank_multi(
@@ -198,13 +170,21 @@ def bucketed_global_rank_multi(
     per ordering in a single job) and ONE counts action computes every
     ordering's bucket counts (a joint groupBy over all bucket columns;
     marginals are exact sums on the driver, bounded by
-    ``n_buckets^len(order_specs)`` rows).  Ranks are EXACT under any
-    cuts (offsets come from actual counts — the
-    :func:`bucketed_global_rank` invariant), so sharing the sketch job
+    ``n_buckets^len(order_specs)`` rows, which must not exceed
+    ``1 << 16``).  Ranks are EXACT under any cuts (offsets come from
+    actual counts, never from the cuts), so sharing the sketch job
     cannot change results.  Returns ``({name: ranked_df}, n_rows)``."""
+    if n_buckets ** len(order_specs) > 1 << 16:
+        raise ValueError(
+            f"{n_buckets}**{len(order_specs)} joint buckets exceed the"
+            " 65536-row count collect"
+        )
     df = _materialize_if_needed(df, checkpoint_input)
     leads = {name: cols[0] for name, cols in order_specs.items()}
     qs = [i / n_buckets for i in range(1, n_buckets)]
+    # accuracy 1000: cut quality only steers load balance — offsets
+    # are derived from the ACTUAL per-bucket counts, so ranks are exact
+    # under any cuts; the cheaper sketch is the right one
     qarr = F.array(*[F.lit(q) for q in qs])
     sk_row = df.select(
         *[
@@ -215,7 +195,7 @@ def bucketed_global_rank_multi(
         ]
     ).first()
     cuts = {name: sorted(set(sk_row[name] or [])) for name in leads}
-    bcols = {name: f"_rkb_{name}" for name in leads}
+    bcols = {name: f"{_BUCKET}{i}" for i, name in enumerate(leads)}
     bucketed = df.select(
         "*",
         *[

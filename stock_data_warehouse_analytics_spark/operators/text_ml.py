@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .localrel import collect_if_small, literal_df
+
 __all__ = ["tfidf_features", "top_terms_by_tfidf", "bpe_train_merges"]
 
 
@@ -117,36 +119,11 @@ def bpe_train_merges(
 
     spark = docs.sparkSession
 
-    # Small-input fast path (r10, the grouped_exact_quantiles stance):
-    # the word-frequency table is Heaps-bounded (≪ corpus), and once
-    # the checkpoint above makes its Catalyst size estimate exact, a
-    # table under the threshold is collected ONCE and the merge rounds
-    # run on the driver — this is exactly how production BPE trainers
-    # work (subword-nmt/HuggingFace aggregate word counts distributed,
-    # then iterate in memory), and it removes ~2·rounds driver actions
-    # (per-round argmax collect + per-round checkpoint) whose job
-    # overhead dominates when the vocab is small.  The driver loop
-    # replicates the relational path operation-for-operation: same
-    # freq-weighted adjacent-pair counts, same (count desc, left asc,
-    # right asc) tie-break (Python str order == UTF-8 binary order ==
-    # Spark string order), same greedy leftmost non-overlapping fold —
-    # parity is pinned by the pre-existing pure-Python differential
-    # test plus test_r10_optimizations' cross-path pin.  Past the
-    # threshold (a genuinely huge vocabulary) the relational loop runs
-    # unchanged.
-    try:
-        est = int(
-            vocab._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats are advisory; assume big
-        est = 1 << 62
-    small_bytes = int(
-        __import__("os").environ.get(
-            "SPARK_GRAFT_BPE_SMALL_BYTES", str(64 << 20)
-        )
-    )
-    if est <= small_bytes:
-        return _bpe_train_merges_driver(spark, vocab, rounds=rounds)
+    # a small vocab is collected once and merged on the driver, the
+    # way subword-nmt/HuggingFace trainers iterate; same rows as the loop
+    words = collect_if_small(vocab)
+    if words is not None:
+        return _bpe_train_merges_driver(spark, words, rounds=rounds)
 
     merges: list[tuple[int, str, str, str, int]] = []
     for rnd in range(1, rounds + 1):
@@ -186,8 +163,6 @@ def bpe_train_merges(
             "w", "freq", merged_syms.alias("syms")
         ).localCheckpoint(eager=True)
 
-    from .localrel import literal_df
-
     merges_df = literal_df(
         spark,
         merges,
@@ -197,18 +172,18 @@ def bpe_train_merges(
 
 
 def _bpe_train_merges_driver(
-    spark, vocab: DataFrame, *, rounds: int
+    spark, rows, *, rounds: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Driver-side merge loop over a COLLECTED (w, freq, syms) table —
+    """Driver-side merge loop over collected (w, freq, syms) rows —
     the small-vocabulary body of :func:`bpe_train_merges`.  Every step
-    mirrors the relational loop exactly (see the call site comment);
-    both returned frames are literal relations, so downstream joins
-    and windows see the same bounded tables the checkpoint path
-    produced."""
-    from .localrel import literal_df
-
+    mirrors the relational loop exactly: freq-weighted adjacent-pair
+    counts, the (count desc, left asc, right asc) tie-break (Python
+    str order == UTF-8 binary order == Spark string order) and the
+    greedy leftmost non-overlapping fold.  Both returned frames are
+    literal relations, so downstream joins and windows see the same
+    bounded tables the checkpoint path produced."""
     words: list[tuple[str, int, list[str]]] = [
-        (r.w, int(r.freq), list(r.syms)) for r in vocab.collect()
+        (r.w, int(r.freq), list(r.syms)) for r in rows
     ]
     merges: list[tuple[int, str, str, str, int]] = []
     for rnd in range(1, rounds + 1):

@@ -162,8 +162,9 @@ def test_product_quantization_contract(spark):
 
 
 @pytest.mark.parametrize("eow", [None, "</w>"])
-def test_bpe_train_merges_matches_python_reference(spark, eow):
-    """Differential check of the relational BPE trainer against a
+def test_bpe_train_merges_matches_python_reference(spark, monkeypatch, eow):
+    """Differential check of the BPE trainer, on both its routes (the
+    driver merge loop and the relational loop), against a
     driver-side pure-Python reference (same tokenization, same greedy
     leftmost-non-overlapping merge, same (count desc, left, right)
     tie-break) on the sf0.001 corpus — pins the pair counting, the
@@ -172,6 +173,7 @@ def test_bpe_train_merges_matches_python_reference(spark, eow):
     end-of-word marker (last character fused with ``</w>``)."""
     from collections import Counter
 
+    from stock_data_warehouse_analytics_spark.operators import localrel
     from stock_data_warehouse_analytics_spark.operators.text_ml import (
         bpe_train_merges,
     )
@@ -216,16 +218,18 @@ def test_bpe_train_merges_matches_python_reference(spark, eow):
         return out
 
     expected = ref_rounds(8)
-    merges, final_vocab = bpe_train_merges(docs, rounds=8, eow=eow)
-    got = [
-        (r.round, r.left, r.right, r.merged, r.pair_count)
-        for r in merges.orderBy("round").collect()
-    ]
-    assert got == expected
+    for max_rows in (localrel.DRIVER_MAX_ROWS, 0):  # driver, relational
+        monkeypatch.setattr(localrel, "DRIVER_MAX_ROWS", max_rows)
+        merges, final_vocab = bpe_train_merges(docs, rounds=8, eow=eow)
+        got = [
+            (r.round, r.left, r.right, r.merged, r.pair_count)
+            for r in merges.orderBy("round").collect()
+        ]
+        assert got == expected
 
-    # final symbolization also matches the reference, word for word
-    got_syms = {r.w: list(r.syms) for r in final_vocab.collect()}
-    assert got_syms == vocab
+        # final symbolization also matches the reference, word for word
+        got_syms = {r.w: list(r.syms) for r in final_vocab.collect()}
+        assert got_syms == vocab
 
 
 def test_bpe_encode_cost_invariants(spark):

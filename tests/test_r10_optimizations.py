@@ -5,6 +5,9 @@ the exact behavior of the path it replaced:
 
 - BPE driver-side small-vocabulary training == the relational loop
   (same merges, same final vocab, row for row);
+- connected components' driver union-find == the propagation loop, and
+  the driver route is chosen by row count alone
+  (``localrel.DRIVER_MAX_ROWS``), whatever Catalyst estimates;
 - topk_lsh's cand_sigs/query_sigs overrides == the two-Arrow-pass fast
   path (the chunk_ann_lsh_topk rewiring);
 - literal_df's r10 hardening routes out-of-range ints and non-str
@@ -26,10 +29,21 @@ def _rows(df):
     return sorted(tuple(str(x) for x in r) for r in df.collect())
 
 
-def test_bpe_driver_path_matches_relational(spark):
-    from stock_data_warehouse_analytics_spark.operators.text_ml import (
-        bpe_train_merges,
-    )
+def _spy(monkeypatch, module, name):
+    """Record the calls to ``module.name`` while still running it."""
+    calls = []
+    real = getattr(module, name)
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+def test_bpe_driver_path_matches_relational(spark, monkeypatch):
+    from stock_data_warehouse_analytics_spark.operators import localrel, text_ml
 
     docs = spark.createDataFrame(
         [
@@ -39,17 +53,13 @@ def test_bpe_driver_path_matches_relational(spark):
         ],
         "doc_id long, text string",
     )
-    old = os.environ.get("SPARK_GRAFT_BPE_SMALL_BYTES")
-    try:
-        os.environ["SPARK_GRAFT_BPE_SMALL_BYTES"] = "0"  # force relational
-        m_rel, v_rel = bpe_train_merges(docs, rounds=6)
-        os.environ["SPARK_GRAFT_BPE_SMALL_BYTES"] = str(1 << 40)  # force driver
-        m_drv, v_drv = bpe_train_merges(docs, rounds=6)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_BPE_SMALL_BYTES", None)
-        else:
-            os.environ["SPARK_GRAFT_BPE_SMALL_BYTES"] = old
+    calls = _spy(monkeypatch, text_ml, "_bpe_train_merges_driver")
+    m_drv, v_drv = text_ml.bpe_train_merges(docs, rounds=6)  # default: driver
+    assert len(calls) == 1
+    with monkeypatch.context() as m:
+        m.setattr(localrel, "DRIVER_MAX_ROWS", 0)  # force relational
+        m_rel, v_rel = text_ml.bpe_train_merges(docs, rounds=6)
+    assert len(calls) == 1
     assert _rows(m_rel) == _rows(m_drv)
     assert _rows(v_rel) == _rows(v_drv)
 
@@ -118,15 +128,16 @@ def test_literal_df_range_check_falls_back_identically(spark):
 
 
 @pytest.mark.parametrize("as_string", [False, True])
-def test_connected_components_driver_path_matches_loop(spark, as_string):
-    from stock_data_warehouse_analytics_spark.operators.graph import (
-        connected_components,
-    )
+def test_connected_components_driver_path_matches_loop(
+    spark, monkeypatch, as_string
+):
+    from stock_data_warehouse_analytics_spark.operators import graph, localrel
 
     plain = [(1, 2), (2, 3), (5, 4), (7, 7), (10, 11), (11, 10), (4, 12)]
     # a null endpoint on either side, a node seen only beside a null,
     # and an all-null edge
     with_nulls = plain + [(3, None), (None, 13), (None, None)]
+    calls = _spy(monkeypatch, graph, "_connected_components_driver")
     for edges in (plain, with_nulls):
         if as_string:
             edges = [
@@ -137,20 +148,32 @@ def test_connected_components_driver_path_matches_loop(spark, as_string):
         else:
             schema = "src long, dst long"
         df = spark.createDataFrame(edges, schema)
-        old = os.environ.get("SPARK_GRAFT_CC_SMALL_BYTES")
-        try:
-            os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = "0"  # force the loop
-            loop = _rows(connected_components(df))
-            # force the driver path: a checkpointed frame whose size
-            # Catalyst does not know reports Long.MaxValue bytes
-            os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = str((1 << 63) - 1)
-            drv = _rows(connected_components(df))
-        finally:
-            if old is None:
-                os.environ.pop("SPARK_GRAFT_CC_SMALL_BYTES", None)
-            else:
-                os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = old
+        with monkeypatch.context() as m:
+            m.setattr(localrel, "DRIVER_MAX_ROWS", 0)  # force the loop
+            loop = _rows(graph.connected_components(df))
+        n_calls = len(calls)
+        drv = _rows(graph.connected_components(df))  # default: driver
+        assert len(calls) == n_calls + 1
         assert loop == drv
+
+
+def test_connected_components_routes_by_rows_not_estimate(spark, monkeypatch):
+    """A ``createDataFrame`` edge list reports Long.MaxValue bytes to
+    Catalyst; the route must follow its row count instead."""
+    from stock_data_warehouse_analytics_spark.operators import graph, localrel
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 4), (7, 8)], "src long, dst long"
+    )
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(str(est)) == (1 << 63) - 1
+    calls = _spy(monkeypatch, graph, "_connected_components_driver")
+    drv = _rows(graph.connected_components(df))
+    assert len(calls) == 1
+    monkeypatch.setattr(localrel, "DRIVER_MAX_ROWS", 3)
+    loop = _rows(graph.connected_components(df))
+    assert len(calls) == 1  # 4 rows > 3: the distributed loop
+    assert loop == drv
 
 
 def test_literal_map_rejects_non_string_keys():

@@ -7,11 +7,15 @@ registered queries:
 - ``grouped_exact_quantiles`` must reproduce ``F.percentile`` on
   random-ish grouped data;
 - ``connected_components`` must match a driver-side union-find on a
-  pseudo-random graph (chains force multiple pointer-jump rounds).
+  pseudo-random graph (chains force multiple pointer-jump rounds), on
+  both its routes;
+- ``bucketed_global_rank_multi`` must give every ordering the ranks of
+  ``row_number().over(Window.orderBy(...))``.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -83,7 +87,8 @@ def test_grouped_exact_quantiles_matches_percentile(spark):
     assert got == want
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
+    from stock_data_warehouse_analytics_spark.operators import localrel
     from stock_data_warehouse_analytics_spark.operators.graph import (
         connected_components,
     )
@@ -115,11 +120,13 @@ def test_connected_components_matches_union_find(spark):
     want = {x: find(x) for x in parent}
 
     edf = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.node: r.comp
-        for r in connected_components(edf, max_iter=10).collect()
-    }
-    assert got == want
+    for max_rows in (localrel.DRIVER_MAX_ROWS, 0):  # driver, then the loop
+        monkeypatch.setattr(localrel, "DRIVER_MAX_ROWS", max_rows)
+        got = {
+            r.node: r.comp
+            for r in connected_components(edf, max_iter=10).collect()
+        }
+        assert got == want
 
 
 def test_bucketed_global_cumsum_equals_naive_window(spark):
@@ -193,3 +200,25 @@ def test_bucketed_helpers_auto_checkpoint_heuristic(spark):
     assert [r.r for r in rows] == list(range(1, n + 1))
     qs = [(r.q, r.l_orderkey) for r in rows]
     assert qs == sorted(qs)
+
+
+def test_bucketed_global_rank_multi_matches_row_number(spark):
+    from stock_data_warehouse_analytics_spark.operators.ranking import (
+        bucketed_global_rank_multi,
+    )
+
+    df = _synth(spark, 500)
+    specs = {"by_value": ["value", "id"], "by_grp": ["grp", "value", "id"]}
+    ranked, n = bucketed_global_rank_multi(df, specs, n_buckets=8, rank_col="r")
+    assert n == 500
+    for name, cols in specs.items():
+        want = {
+            r.id: r.r
+            for r in df.select(
+                "id", F.row_number().over(Window.orderBy(*cols)).alias("r")
+            ).collect()
+        }
+        assert {r.id: r.r for r in ranked[name].collect()} == want
+
+    with pytest.raises(ValueError):
+        bucketed_global_rank_multi(df, specs, n_buckets=257)

@@ -1,4 +1,6 @@
-"""``session.session_memo``: the one session-scoped staging cache.
+"""``session.session_memo``: the one session-scoped staging cache,
+plus the structural guards that keep the package to one way to stage
+and one way to route small inputs to the driver.
 
 Driver-only: no test here runs a Spark job.
 """
@@ -7,6 +9,7 @@ from __future__ import annotations
 
 import gc
 import os
+import re
 import weakref
 
 import pytest
@@ -91,21 +94,45 @@ def test_entries_die_with_their_session(spark):
     assert value() is None
 
 
-def test_weak_key_dictionary_only_in_session_module():
-    """Every session-scoped cache goes through ``session_memo``: a
-    hand-rolled ``WeakKeyDictionary`` anywhere else in the package is
-    a second staging path."""
-    offenders = []
+def _package_lines():
+    """(path relative to the package, line number, line) for every
+    line of the package's Python source."""
     for root, _dirs, files in os.walk(PKG_DIR):
         for fn in files:
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(root, fn)
             rel = os.path.relpath(path, PKG_DIR)
-            if rel == "session.py":
-                continue
             with open(path, encoding="utf-8") as fh:
                 for lineno, line in enumerate(fh, 1):
-                    if "WeakKeyDictionary" in line:
-                        offenders.append(f"{rel}:{lineno}")
+                    yield rel, lineno, line
+
+
+def test_weak_key_dictionary_only_in_session_module():
+    """Every session-scoped cache goes through ``session_memo``: a
+    hand-rolled ``WeakKeyDictionary`` anywhere else in the package is
+    a second staging path."""
+    offenders = [
+        f"{rel}:{lineno}"
+        for rel, lineno, line in _package_lines()
+        if "WeakKeyDictionary" in line and rel != "session.py"
+    ]
+    assert offenders == []
+
+
+def test_one_small_input_rule():
+    """The driver small paths route on ``localrel.collect_if_small``'s
+    row count: no env knob sizes a small path, and no module other than
+    the quantile plan choice in ``operators/ranking.py`` reads a
+    Catalyst size estimate."""
+    knob = re.compile(
+        r"SPARK_GRAFT_\w*SMALL_BYTES"
+        r"|(environ|getenv).*SMALL_BYTES|SMALL_BYTES.*(environ|getenv)"
+    )
+    ranking = os.path.join("operators", "ranking.py")
+    offenders = [
+        f"{rel}:{lineno}"
+        for rel, lineno, line in _package_lines()
+        if knob.search(line) or ("sizeInBytes" in line and rel != ranking)
+    ]
     assert offenders == []
