@@ -149,10 +149,16 @@ def with_predicted_lang(df, text_col: str, out_col: str):
     optimizer's CollapseProject keeps the non-cheap regex aliases
     materialized because they are referenced more than once.  Same
     values, same tie-break — the argmax fold is identical expression-
-    for-expression, only over bound columns."""
+    for-expression, only over bound columns.  The bound columns take a
+    ``_plang_`` prefix lengthened until no name collides with the input
+    or ``out_col``."""
     scores = lang_scores(F.col(text_col))
     langs = sorted(scores)
-    tmp = {lang: f"_plang_{lang}" for lang in langs}
+    taken = {c.lower() for c in [*df.columns, out_col]}
+    prefix = "_plang_"
+    while any(f"{prefix}{lang}".lower() in taken for lang in langs):
+        prefix = "_" + prefix
+    tmp = {lang: f"{prefix}{lang}" for lang in langs}
     base = df.select("*", *[scores[lang].alias(tmp[lang]) for lang in langs])
     best = F.lit(langs[0])
     best_score = F.col(tmp[langs[0]])

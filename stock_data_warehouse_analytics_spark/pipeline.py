@@ -35,9 +35,10 @@ def run_etl(
     (cached — the one bounded intermediate every stage reuses)."""
     os.makedirs(output_dir, exist_ok=True)
     fact = load_stock_facts(spark, input_dir).cache()
+    present = {r.Ticker for r in fact.select("Ticker").distinct().collect()}
     for t in TICKERS:
-        per = fact.filter(fact.Ticker == t).orderBy("Date")
-        if per.limit(1).count():
+        if t in present:
+            per = fact.filter(fact.Ticker == t).orderBy("Date")
             write_csv_single(per, os.path.join(output_dir, f"{t}.csv"))
     write_csv_single(fact.orderBy("Ticker", "Date"), os.path.join(output_dir, "All.csv"))
     return fact

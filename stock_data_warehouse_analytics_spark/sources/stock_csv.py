@@ -1,10 +1,11 @@
 """Stock CSV ingestion S1–S4 (SURVEY.md §2.1) — the reference's ETL
 (``preprocess_stocks.py:121-230``) as one lazy, codegen'd Spark plan.
 
-Design for scale: a SINGLE multi-file scan with ticker extraction from
-``input_file_name()`` replaces the reference's per-ticker Python loop —
-one job regardless of file count, parallel across executors.  The
-per-ticker API (:func:`clean_file`) still exists for CLI parity.
+Design for scale: each ticker's files are one lazy scan branch of a
+union plan (:func:`load_stock_facts`), with the ticker taken from the
+file name (or from ``input_file_name()`` in the all-CSV fallback) —
+no per-ticker Python loop over rows, no shuffle.  :func:`clean_raw`
+is the per-file core; it sorts within partitions only, never globally.
 """
 
 from __future__ import annotations
@@ -64,7 +65,12 @@ def read_raw(
 def clean_raw(raw: DataFrame, ticker: F.Column | str | None = None) -> DataFrame:
     """ETL core (preprocess_stocks.py:121-186): standardize headers →
     attach Ticker → parse all columns (pure expressions, no UDFs) →
-    derive Return/Average/Volatility/LogReturn → canonical order.
+    derive Return/Average/Volatility/LogReturn.  No global order:
+    consumers order (``run_etl``'s writes, the windows).  Rows are
+    sorted by Date within each partition: no shuffle, and aggregates
+    over a file sum in date order although raw files are newest first,
+    so a rounded mean such as ``quarterly_price`` is the one a
+    date-ordered sum gives, not one a last-bit difference flipped.
 
     ``ticker``: a literal string (reference's per-file mode, :200), a
     Column (scalable ``input_file_name`` mode), or None to derive from
@@ -103,7 +109,7 @@ def clean_raw(raw: DataFrame, ticker: F.Column | str | None = None) -> DataFrame
         }
     )
     extra = [c for c in df.columns if c not in FACT_COLUMNS]
-    return df.select(*FACT_COLUMNS, *extra).orderBy("Date")
+    return df.select(*FACT_COLUMNS, *extra).sortWithinPartitions("Date")
 
 
 def load_stock_facts(
@@ -152,14 +158,22 @@ def load_cleaned(spark: SparkSession, path: str) -> DataFrame:
 def write_csv_single(df: DataFrame, out_path: str) -> None:
     """S4 — single-file CSV sink with header, no index column
     (``df.to_csv(path, index=False)``, preprocess_stocks.py:183-184).
-    coalesce(1) is deliberate: these sinks are bounded result tables;
-    large fact writes should use partitioned parquet instead."""
-    tmp = out_path + "._spark_tmp"
-    df.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
-    part = next(
-        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".csv")
-    )
-    os.replace(os.path.join(tmp, part), out_path)
-    import shutil
 
-    shutil.rmtree(tmp)
+    The sinks are bounded result tables: the rows are collected on the
+    driver as lines of ``to_csv`` — the generator and default options of
+    Spark's CSV writer — and written to a temp file next to ``out_path``
+    (a driver-local path) that then replaces it.  The header is ``to_csv``
+    over the column names, so the file has the same bytes as
+    ``df.coalesce(1).write.option("header", True).csv``.  Large fact
+    writes should use partitioned parquet instead."""
+    cols = [f"_{i}" for i in range(len(df.columns))]
+    lines = df.toDF(*cols).select(F.to_csv(F.struct(*cols))).collect()
+    names = df.sparkSession.sql(
+        "SELECT * FROM VALUES (" + ", ".join(f":{c}" for c in cols) + ")",
+        args=dict(zip(cols, df.columns)),
+    )  # a local relation: to_csv over it runs no job
+    header = names.select(F.to_csv(F.struct(*names.columns))).collect()[0][0]
+    tmp = out_path + ".tmp"
+    with open(tmp, "w", encoding="utf-8", newline="") as f:
+        f.writelines(line + "\n" for line in [header, *(r[0] for r in lines)])
+    os.replace(tmp, out_path)

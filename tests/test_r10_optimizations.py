@@ -12,7 +12,9 @@ the exact behavior of the path it replaced:
   path (the chunk_ann_lsh_topk rewiring);
 - literal_df's r10 hardening routes out-of-range ints and non-str
   strings to the legacy per-cell-literal path with identical frames;
-- literal_map rejects non-string keys loudly.
+- literal_map rejects non-string keys loudly;
+- with_predicted_lang's bound scores == predicted_lang, whatever the
+  input's column names.
 """
 
 from __future__ import annotations
@@ -174,6 +176,28 @@ def test_connected_components_routes_by_rows_not_estimate(spark, monkeypatch):
     loop = _rows(graph.connected_components(df))
     assert len(calls) == 1  # 4 rows > 3: the distributed loop
     assert loop == drv
+
+
+def test_with_predicted_lang_keeps_colliding_input_columns(spark):
+    """An input column named like a bound score column (``_plang_en``)
+    keeps its values, and the prediction equals ``predicted_lang``."""
+    from stock_data_warehouse_analytics_spark.functions.text import (
+        predicted_lang,
+        with_predicted_lang,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, "the cat and the dog are in the house", "keep-1"),
+            (2, "le chat et le chien sont dans la maison", "keep-2"),
+            (3, "der Hund und die Katze sind im Haus", None),
+        ],
+        "id int, text string, _plang_en string",
+    )
+    out = with_predicted_lang(df, "text", "lang")
+    assert out.columns == ["id", "text", "_plang_en", "lang"]
+    want = df.select("id", "_plang_en", predicted_lang(F.col("text")).alias("lang"))
+    assert _rows(out.drop("text")) == _rows(want)
 
 
 def test_literal_map_rejects_non_string_keys():

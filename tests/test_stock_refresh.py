@@ -1,0 +1,139 @@
+"""The stock refresh on synthetic raw CSVs, and its CSV sink.
+
+- ``write_csv_single`` writes exactly the bytes of Spark's own CSV writer
+  (``coalesce(1).write.option("header", True).csv``, kept here as the
+  reference writer) for adversarial names and values, and for 0 rows;
+- ``run_etl`` → ``run_olap`` → ``run_mining`` over FIXTURES.md §1-style
+  raw files: Date-ordered per-ticker files, and a cached fact that is a
+  union of file scans (no Exchange, no global Sort, at most one partition
+  per input file, each partition in Date order).
+
+Needs no reference data.
+"""
+
+from __future__ import annotations
+
+import csv
+import datetime as dt
+import math
+import os
+import random
+import re
+
+from stock_data_warehouse_analytics_spark.sources.stock_csv import write_csv_single
+
+
+def _spark_writer_bytes(df, out_dir) -> bytes:
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(str(out_dir))
+    (part,) = [
+        f for f in os.listdir(out_dir) if f.startswith("part-") and f.endswith(".csv")
+    ]
+    return (out_dir / part).read_bytes()
+
+
+def _leftovers(root) -> list[str]:
+    return [
+        f
+        for _, _, files in os.walk(root)
+        for f in files
+        if f.endswith((".crc", ".tmp")) or "_spark_tmp" in f or f == "_SUCCESS"
+    ]
+
+
+def test_sink_bytes_match_spark_writer(spark, tmp_path):
+    names = [" lead", 'q"x', "a,b", "", "n\nl", "Ngày", "ts", "n"]
+    schema = (
+        "c0 string, c1 double, c2 date, c3 long, c4 string, c5 double, c6 timestamp, c7 int"
+    )
+    rows = [
+        ("", 1e-4, dt.date(2024, 1, 2), 2**62, 'say "hi"', -0.0,
+         dt.datetime(2025, 9, 26, 14, 30, 5, 123000), 0),
+        (None, 1.5e10, None, -1, "x,y", math.nan, None, None),
+        ("two\nlines", math.inf, dt.date(1999, 12, 31), None, " pad ", -math.inf,
+         dt.datetime(2024, 2, 29), -7),
+        ("é", None, dt.date(2025, 9, 26), 0, "back\\slash", 36500.0,
+         dt.datetime(2000, 1, 1, 0, 0, 0, 1), 2**31 - 1),
+        (None, None, None, None, None, None, None, None),
+    ]
+    df = spark.createDataFrame(rows, schema).toDF(*names)
+    for case, frame in (("rows", df), ("empty", df.limit(0))):
+        out = tmp_path / case
+        out.mkdir()
+        want = _spark_writer_bytes(frame, tmp_path / f"ref_{case}")
+        write_csv_single(frame, str(out / "t.csv"))
+        assert (out / "t.csv").read_bytes() == want, case
+        assert os.listdir(out) == ["t.csv"]  # no temp file, _SUCCESS or .crc
+    assert b'"q\\"x"' in want and want.count(b"\n") == 2  # header only
+
+
+HEADER = ["Ngày", "Lần cuối", "Mở", "Cao", "Thấp", "KL", "% Thay đổi"]
+
+
+def _write_raw(path, ticker: str, n: int, seed: int) -> list[dt.date]:
+    """One raw file in the scrape format: BOM, fully quoted Vietnamese
+    headers, newest row first, thousands separators, K/M volumes and a
+    null sentinel.  Returns the dates written."""
+    rng = random.Random(seed)
+    days = [dt.date(2024, 1, 2) + dt.timedelta(days=13 * i) for i in range(n)]
+    walk = rng.uniform(10_000, 80_000)
+    lines = []
+    for i, d in enumerate(days):
+        walk *= math.exp(rng.gauss(0, 0.02))
+        close = walk * (2.5 if i == n // 2 else 1.0)  # one |z| > 2 outlier
+        opn = close * (1 + rng.gauss(0, 0.01))
+        hi, lo = max(opn, close) * 1.01, min(opn, close) * 0.99
+        vol = f"{rng.uniform(1, 999):.2f}{rng.choice('KM')}"
+        cells = [d.strftime("%d/%m/%Y"), f"{close:,.1f}", f"{opn:,.1f}",
+                 f"{hi:,.1f}", f"{lo:,.1f}", vol, f"{rng.gauss(0, 2):.2f}%"]
+        if i == 3:
+            cells[2] = "—"
+        lines.append(cells)
+    with open(path, "w", encoding="utf-8-sig", newline="") as f:
+        w = csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n")
+        w.writerow(HEADER)
+        w.writerows(reversed(lines))
+    return days
+
+
+def test_refresh_on_synthetic_raw(spark, tmp_path):
+    from stock_data_warehouse_analytics_spark.pipeline import (
+        run_etl,
+        run_mining,
+        run_olap,
+    )
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    tickers = ["AST", "HVN", "NCT"]
+    days = {t: _write_raw(raw / f"{t}.csv", t, 60, seed) for seed, t in enumerate(tickers)}
+    out = tmp_path / "out"
+
+    fact = run_etl(spark, str(raw), str(out / "cleaned"))
+    plan = fact._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" in plan
+    assert "Exchange" not in plan and not re.search(r"Sort \[[^]]*\], true", plan), plan
+    assert fact.rdd.getNumPartitions() <= len(tickers)
+    # no global order, but each partition in Date order: sums run by date
+    parts = fact.rdd.mapPartitions(lambda it: [[r.Date for r in it]]).collect()
+    assert sum(map(len, parts)) == 60 * len(tickers)
+    assert all(p == sorted(p) for p in parts)
+
+    assert sorted(os.listdir(out / "cleaned")) == sorted(["All.csv", *(f"{t}.csv" for t in tickers)])
+    for t in tickers:
+        with open(out / "cleaned" / f"{t}.csv", encoding="utf-8") as f:
+            got = list(csv.DictReader(f))
+        assert {r["Ticker"] for r in got} == {t}
+        assert [r["Date"] for r in got] == [d.isoformat() for d in days[t]]
+    all_bytes = _spark_writer_bytes(fact.orderBy("Ticker", "Date"), tmp_path / "ref_all")
+    assert (out / "cleaned" / "All.csv").read_bytes() == all_bytes
+
+    run_olap(spark, fact, str(out / "olap_results"))
+    run_mining(spark, fact, str(out / "datamining_results"))
+    with open(out / "olap_results" / "01_quarterly_price.csv", encoding="utf-8") as f:
+        assert next(csv.reader(f)) == ["Year", "Quarter", *tickers]
+    for name in sorted(os.listdir(out / "datamining_results")):
+        with open(out / "datamining_results" / name, encoding="utf-8") as f:
+            assert len(list(csv.reader(f))) > 1, name
+    assert len(os.listdir(out / "datamining_results")) == 4
+    assert _leftovers(out) == []
+    fact.unpersist()
