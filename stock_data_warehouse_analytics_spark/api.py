@@ -1,20 +1,23 @@
 """High-level facade — the engine's answer to the reference's streamlit
 dashboard surface (S7, streamlit.py): every analysis the dashboard
-re-runs per widget event, as lazily-memoized DataFrame-returning
-methods on one object.
+re-runs per widget event, as DataFrame-returning methods on one object.
 
-``@st.cache_data`` (streamlit.py:32) becomes plain result caching: each
-result table is computed once per instance and the underlying fact
-DataFrame is Spark-cached (bounded stock data) so interactive
-re-execution is cheap.  A UI (streamlit or otherwise) binds widgets to
-these methods; the engine ends here.
+``@st.cache_data`` (streamlit.py:32) becomes one Spark-cached fact per
+(session, input directory) in ``session_memo``, shared by every instance
+and by the refresh, whose sinks (``pipeline``) call these same methods.
+Result tables are lazy plans over the fact and the OLAP and mining frames
+prepared once per instance.  A UI (streamlit or otherwise) binds widgets
+to these methods; the engine ends here.
 """
 
 from __future__ import annotations
 
+import os
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import session_memo, tune_for_engine
 
 __all__ = ["StockWarehouse"]
 
@@ -30,8 +33,6 @@ class StockWarehouse:
     def __init__(
         self, spark: SparkSession, path: str, *, cleaned: bool = False
     ) -> None:
-        from .session import tune_for_engine
-
         # an externally created session may run with default confs
         # (200 shuffle partitions, no AQE coalescing) — on the bounded
         # stock data that means thousands of empty tasks per query.
@@ -39,16 +40,27 @@ class StockWarehouse:
         self._path = path
         self._cleaned = cleaned
 
+    @classmethod
+    def over(cls, fact: DataFrame) -> StockWarehouse:
+        """The facade over a fact the caller owns (caches and releases):
+        the refresh sinks run these methods over ``run_etl``'s fact."""
+        wh = cls.__new__(cls)
+        wh.spark = fact.sparkSession
+        wh.fact = fact
+        return wh
+
     @cached_property
     def fact(self) -> DataFrame:
         from .sources.stock_csv import load_cleaned, load_stock_facts
 
-        df = (
-            load_cleaned(self.spark, self._path)
-            if self._cleaned
-            else load_stock_facts(self.spark, self._path)
+        load = load_cleaned if self._cleaned else load_stock_facts
+        df = session_memo(
+            self.spark,
+            ("stock.fact", os.path.abspath(self._path), self._cleaned),
+            lambda: load(self.spark, self._path),
         )
-        return df.cache()
+        # a holder may have released the shared fact (close, unpersist)
+        return df if df.is_cached else df.cache()
 
     @cached_property
     def _olap(self) -> DataFrame:

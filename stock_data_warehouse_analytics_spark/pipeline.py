@@ -4,12 +4,15 @@ reference's three scripts:
 - ``run_etl``    ≙ ``python preprocess_stocks.py`` (cleaned/{T}.csv + All.csv)
 - ``run_olap``   ≙ ``python olap_analysis.py`` result tables (olap_results/01–04)
 - ``run_mining`` ≙ ``python datamining_analysis.py`` (datamining_results/01–04)
+- ``run_charts`` ≙ the chart set of ``olap_analysis.py:80-184``, rendered
+  by the dependency-free PNG encoder in ``sources/charts.py``
 
-Chart PNGs (S8) render too — ``run_charts`` ≙ the chart set of
-``olap_analysis.py:80-184`` via the dependency-free PNG encoder in
-``sources/charts.py`` (matplotlib is absent here).  The result *tables*
-remain the primary contract and every one matches the reference's
-committed goldens (tests/test_pipeline_cli.py).
+The refresh is a set of sinks over one :class:`~.api.StockWarehouse`:
+``run_etl`` takes the session's memoized fact from it, and the OLAP,
+mining and chart stages write what its dashboard methods return, so a
+dashboard opened after a refresh in the same session reads the same
+cached fact.  The result *tables* remain the primary contract and every
+one matches the reference's committed goldens (tests/test_pipeline_cli.py).
 
 CLI:  python -m stock_data_warehouse_analytics_spark all \\
           --input /root/reference/stock_data --output /tmp/out
@@ -21,20 +24,37 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .api import StockWarehouse
 from .schemas import TICKERS
-from .sources.stock_csv import load_stock_facts, write_csv_single
+from .sources.stock_csv import write_csv_single
 
 __all__ = ["run_etl", "run_olap", "run_mining", "run_charts", "main"]
+
+OLAP_SINKS = [
+    ("01_quarterly_price.csv", StockWarehouse.quarterly_price),
+    ("02_growth_24_25.csv", StockWarehouse.yearly_growth),
+    ("03_monthly_volume.csv", StockWarehouse.monthly_volume),
+    ("04_stats_2025.csv", StockWarehouse.stats_panel),
+]
+MINING_SINKS = [
+    ("01_regression_same_day.csv", StockWarehouse.regression_same_day),
+    ("02_regression_next_day.csv", StockWarehouse.regression_next_day),
+    ("03_kmeans_clusters.csv", StockWarehouse.kmeans),
+    ("04_anomalies.csv", StockWarehouse.anomalies),
+]
 
 
 def run_etl(
     spark: SparkSession, input_dir: str, output_dir: str
 ) -> DataFrame:
     """ETL: raw CSVs → cleaned per-ticker CSVs + merged All.csv
-    (preprocess_stocks.py:189-230).  Returns the merged fact DataFrame
-    (cached — the one bounded intermediate every stage reuses)."""
+    (preprocess_stocks.py:189-230).  Returns the merged fact DataFrame:
+    the session's cached ``StockWarehouse(spark, input_dir).fact``, the
+    one bounded intermediate every stage and the dashboard reuse.  Under
+    ``session_memo``'s staleness contract, refreshing a rewritten input
+    directory needs a fresh session."""
     os.makedirs(output_dir, exist_ok=True)
-    fact = load_stock_facts(spark, input_dir).cache()
+    fact = StockWarehouse(spark, input_dir).fact
     present = {r.Ticker for r in fact.select("Ticker").distinct().collect()}
     for t in TICKERS:
         if t in present:
@@ -44,73 +64,49 @@ def run_etl(
     return fact
 
 
+def _sink(fact: DataFrame, results_dir: str, sinks) -> None:
+    os.makedirs(results_dir, exist_ok=True)
+    wh = StockWarehouse.over(fact)
+    for name, method in sinks:
+        write_csv_single(method(wh), os.path.join(results_dir, name))
+
+
 def run_olap(spark: SparkSession, fact: DataFrame, results_dir: str) -> None:
     """OLAP result tables 01–04 (olap_analysis.py:43-63)."""
-    from .operators.stock_olap import (
-        monthly_volume,
-        prepare_olap_frame,
-        quarterly_price,
-        stats_panel,
-        yearly_growth,
-    )
-
-    os.makedirs(results_dir, exist_ok=True)
-    df = prepare_olap_frame(fact)
-    write_csv_single(
-        quarterly_price(df), os.path.join(results_dir, "01_quarterly_price.csv")
-    )
-    write_csv_single(
-        yearly_growth(df), os.path.join(results_dir, "02_growth_24_25.csv")
-    )
-    write_csv_single(
-        monthly_volume(df), os.path.join(results_dir, "03_monthly_volume.csv")
-    )
-    write_csv_single(stats_panel(df), os.path.join(results_dir, "04_stats_2025.csv"))
+    _sink(fact, results_dir, OLAP_SINKS)
 
 
 def run_mining(spark: SparkSession, fact: DataFrame, results_dir: str) -> None:
-    """Mining result tables 01–04 (datamining_analysis.py)."""
-    from .operators.stock_mining import (
-        kmeans_exact_small,
-        kmeans_features,
-        prepare_mining_frame,
-        regression_next_day,
-        regression_same_day,
-        zscore_anomalies,
-    )
-
-    os.makedirs(results_dir, exist_ok=True)
-    df = prepare_mining_frame(fact)
-    write_csv_single(
-        regression_same_day(df),
-        os.path.join(results_dir, "01_regression_same_day.csv"),
-    )
-    write_csv_single(
-        regression_next_day(df),
-        os.path.join(results_dir, "02_regression_next_day.csv"),
-    )
-    write_csv_single(
-        kmeans_exact_small(kmeans_features(df), k=3),
-        os.path.join(results_dir, "03_kmeans_clusters.csv"),
-    )
-    write_csv_single(
-        zscore_anomalies(df), os.path.join(results_dir, "04_anomalies.csv")
-    )
+    """Mining result tables 01–04 (datamining_analysis.py).  k-means
+    uses k=3: with fewer than 3 tickers left for clustering this raises
+    ``ValueError("n_samples=… should be >= n_clusters=3")``, sklearn's
+    message, after writing tables 01–02."""
+    _sink(fact, results_dir, MINING_SINKS)
 
 
 def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[str]:
     """Chart PNG sinks (S8 — olap_analysis.py:80-184's chart set,
     rendered by the dependency-free encoder in sources/charts.py):
     per-ticker price-trend line, quarterly-avg-price bar, monthly-avg-
-    volume bar, plus the combined monthly-close multi-line.  All chart
-    inputs are REPORT-grain aggregates collected to the driver (the
-    reference renders from the same pivoted tables); raw facts never
-    leave the executors.  Returns the written paths."""
-    from .operators.stock_olap import monthly_close_pivot, prepare_olap_frame
-    from .sources.charts import bar_chart, line_chart
+    volume bar, plus the combined monthly-close multi-line, quarterly
+    price heatmap, daily-return box plot and volume-vs-return scatter.
+
+    The heatmap is the facade's ``quarterly_price``, and the box-plot
+    percentiles and monthly-close pivot are Spark aggregates.  The
+    per-ticker charts and the scatter draw raw points: the year-filtered
+    rows (with the lagged daily ``Return``) are collected once, ordered
+    by (Ticker, Date).  Null prices, volumes and returns are skipped, as
+    pandas' plots and means skip NaN.  Returns the written paths."""
+    import datetime
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from .operators.stock_olap import monthly_close_pivot
+    from .sources.charts import bar_chart, box_plot, heatmap, line_chart, scatter_chart
 
     os.makedirs(charts_dir, exist_ok=True)
-    df = prepare_olap_frame(fact)
+    wh = StockWarehouse.over(fact)
     written: list[str] = []
 
     def save(canvas, name: str) -> None:
@@ -120,50 +116,49 @@ def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[st
         written.append(path)
 
     def month_fmt(ordinal: float) -> str:
-        import datetime
-
         d = datetime.date.fromordinal(int(ordinal))
         return f"{d.year}-{d.month:02d}"
 
-    from pyspark.sql import functions as F
+    def bars(t: str, pairs, title: str, name: str) -> None:
+        groups: dict[str, list] = {}
+        for key, x in pairs:
+            if x is not None:
+                groups.setdefault(key, []).append(x)
+        means = [sum(xs) / len(xs) for xs in groups.values()]
+        save(bar_chart(list(groups), means, title=f"{t} {title}"), f"{t}_{name}.png")
 
-    tickers = sorted(
-        r[0] for r in df.select("Ticker").distinct().collect()
-    )
+    wd = Window.partitionBy("Ticker").orderBy("Date")
+    with_ret = wh._olap.withColumn(
+        "Return",
+        (F.col("Close") / F.lag("Close").over(wd) - 1.0) * 100.0,
+    )  # C5 pct_change rule (functions/derivations.py)
+    rows: dict[str, list] = {}
+    cols = ["Ticker", "Date", "Close", "Year", "Quarter", "YearMonth", "Volume", "Return"]
+    for r in with_ret.select(*cols).orderBy("Ticker", "Date").collect():
+        rows.setdefault(r.Ticker, []).append(r)
+    tickers = sorted(rows)
+
+    scatter = []
     for t in tickers:
-        rows = (
-            df.filter(F.col("Ticker") == t)
-            .select("Date", "Close", "Year", "Quarter", "YearMonth", "Volume")
-            .orderBy("Date")
-            .collect()
-        )
-        pts = [(r.Date.toordinal(), r.Close) for r in rows]
+        pts = [(r.Date.toordinal(), r.Close) for r in rows[t] if r.Close is not None]
         save(
             line_chart(
                 [(t, pts)], title=f"{t} PRICE TREND", x_fmt=month_fmt
             ),
             f"{t}_01_price_trend.png",
         )
-        q: dict[str, list[float]] = {}
-        v: dict[str, list[float]] = {}
-        for r in rows:
-            q.setdefault(f"{r.Year}Q{r.Quarter}", []).append(r.Close)
-            v.setdefault(str(r.YearMonth), []).append(r.Volume)
-        save(
-            bar_chart(
-                list(q), [sum(x) / len(x) for x in q.values()],
-                title=f"{t} QUARTERLY AVG PRICE",
-            ),
-            f"{t}_02_quarterly_price.png",
-        )
-        save(
-            bar_chart(
-                [m[2:] for m in v], [sum(x) / len(x) for x in v.values()],
-                title=f"{t} MONTHLY AVG VOLUME",
-            ),
-            f"{t}_03_monthly_volume.png",
-        )
-    wide = monthly_close_pivot(df, tickers).collect()
+        bars(t, ((f"{r.Year}Q{r.Quarter}", r.Close) for r in rows[t]),
+             "QUARTERLY AVG PRICE", "02_quarterly_price")
+        bars(t, ((str(r.YearMonth)[2:], r.Volume) for r in rows[t]),
+             "MONTHLY AVG VOLUME", "03_monthly_volume")
+        pts = [
+            (float(r.Volume), r.Return)
+            for r in rows[t]
+            if r.Volume is not None and r.Return is not None
+        ]
+        if pts:
+            scatter.append((t, pts))
+    wide = monthly_close_pivot(wh._olap, tickers).collect()
     series = []
     for t in tickers:
         pts = [
@@ -176,14 +171,8 @@ def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[st
     )
 
     # reference chart parity beyond line/bar (olap_analysis.py:179-184
-    # heatmap; datavisualization.py:378-389 boxplot, :652,770 scatter,
-    # :699,714 corr/cov heatmaps) — every input is a REPORT-grain
-    # aggregate or an engine-side five-number summary; raw facts never
-    # reach the driver.
-    from .operators.stock_olap import quarterly_price
-    from .sources.charts import box_plot, heatmap, scatter_chart
-
-    qp = quarterly_price(df, tickers).collect()
+    # heatmap; datavisualization.py:378-389 boxplot, :652,770 scatter)
+    qp = wh.quarterly_price().collect()
     save(
         heatmap(
             [f"{r.Year}Q{r.Quarter}" for r in qp],
@@ -194,13 +183,6 @@ def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[st
         ),
         "03_combined_heatmap_price.png",
     )
-    from pyspark.sql import Window
-
-    wd = Window.partitionBy("Ticker").orderBy("Date")
-    with_ret = df.withColumn(
-        "Return",
-        (F.col("Close") / F.lag("Close").over(wd) - 1.0) * 100.0,
-    )  # C5 pct_change rule (functions/derivations.py)
     ret_stats = (
         with_ret.filter(F.col("Return").isNotNull())
         .groupBy("Ticker")
@@ -222,20 +204,8 @@ def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[st
         ),
         "04_boxplot_risk.png",
     )
-    sc = (
-        with_ret.filter(F.col("Return").isNotNull())
-        .select("Ticker", "Date", "Volume", "Return")
-        .orderBy("Ticker", "Date")
-        .collect()
-    )
-    by_t: dict[str, list[tuple[float, float]]] = {}
-    for r in sc:
-        by_t.setdefault(r.Ticker, []).append((float(r.Volume), r.Return))
     save(
-        scatter_chart(
-            sorted(by_t.items()),
-            title="VOLUME VS DAILY RETURN",
-        ),
+        scatter_chart(scatter, title="VOLUME VS DAILY RETURN"),
         "05_scatter_volume_return.png",
     )
     return written

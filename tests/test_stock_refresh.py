@@ -3,10 +3,14 @@
 - ``write_csv_single`` writes exactly the bytes of Spark's own CSV writer
   (``coalesce(1).write.option("header", True).csv``, kept here as the
   reference writer) for adversarial names and values, and for 0 rows;
-- ``run_etl`` → ``run_olap`` → ``run_mining`` over FIXTURES.md §1-style
-  raw files: Date-ordered per-ticker files, and a cached fact that is a
-  union of file scans (no Exchange, no global Sort, at most one partition
-  per input file, each partition in Date order).
+- ``run_etl`` → ``run_olap`` → ``run_mining`` → ``run_charts`` over
+  FIXTURES.md §1-style raw files: Date-ordered per-ticker files, and a
+  cached fact that is a union of file scans (no Exchange, no global Sort,
+  at most one partition per input file, each partition in Date order);
+  also with null sentinels in one ticker's Close and Volume cells;
+- a dashboard opened after the refresh in the same session reads the
+  refresh's fact (one raw load) and serves the same tables;
+- ``run_mining`` over two tickers raises k-means' declared error.
 
 Needs no reference data.
 """
@@ -19,6 +23,8 @@ import math
 import os
 import random
 import re
+
+import pytest
 
 from stock_data_warehouse_analytics_spark.sources.stock_csv import write_csv_single
 
@@ -67,12 +73,16 @@ def test_sink_bytes_match_spark_writer(spark, tmp_path):
 
 
 HEADER = ["Ngày", "Lần cuối", "Mở", "Cao", "Thấp", "KL", "% Thay đổi"]
+NULL_CELLS = {5: (1, "—"), 10: (1, ""), 31: (5, "—"), 40: (5, "")}  # row: Close/KL
 
 
-def _write_raw(path, ticker: str, n: int, seed: int) -> list[dt.date]:
+def _write_raw(
+    path, ticker: str, n: int, seed: int, null_prices: bool = False
+) -> list[dt.date]:
     """One raw file in the scrape format: BOM, fully quoted Vietnamese
     headers, newest row first, thousands separators, K/M volumes and a
-    null sentinel.  Returns the dates written."""
+    null sentinel in Open; with ``null_prices``, sentinels in two Close
+    and two Volume cells as well.  Returns the dates written."""
     rng = random.Random(seed)
     days = [dt.date(2024, 1, 2) + dt.timedelta(days=13 * i) for i in range(n)]
     walk = rng.uniform(10_000, 80_000)
@@ -87,6 +97,9 @@ def _write_raw(path, ticker: str, n: int, seed: int) -> list[dt.date]:
                  f"{hi:,.1f}", f"{lo:,.1f}", vol, f"{rng.gauss(0, 2):.2f}%"]
         if i == 3:
             cells[2] = "—"
+        if null_prices and i in NULL_CELLS:
+            col, sentinel = NULL_CELLS[i]
+            cells[col] = sentinel
         lines.append(cells)
     with open(path, "w", encoding="utf-8-sig", newline="") as f:
         w = csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n")
@@ -95,20 +108,35 @@ def _write_raw(path, ticker: str, n: int, seed: int) -> list[dt.date]:
     return days
 
 
-def test_refresh_on_synthetic_raw(spark, tmp_path):
+TICKERS = ["AST", "HVN", "NCT"]
+
+
+def _refresh(spark, raw, out):
     from stock_data_warehouse_analytics_spark.pipeline import (
+        run_charts,
         run_etl,
         run_mining,
         run_olap,
     )
 
+    fact = run_etl(spark, str(raw), str(out / "cleaned"))
+    run_olap(spark, fact, str(out / "olap_results"))
+    run_mining(spark, fact, str(out / "datamining_results"))
+    run_charts(spark, fact, str(out / "olap_charts"))
+    return fact
+
+
+def _check_refresh(spark, tmp_path, null_prices: bool):
     raw = tmp_path / "raw"
     raw.mkdir()
-    tickers = ["AST", "HVN", "NCT"]
-    days = {t: _write_raw(raw / f"{t}.csv", t, 60, seed) for seed, t in enumerate(tickers)}
+    tickers = TICKERS
+    days = {
+        t: _write_raw(raw / f"{t}.csv", t, 60, seed, null_prices and t == "HVN")
+        for seed, t in enumerate(tickers)
+    }
     out = tmp_path / "out"
 
-    fact = run_etl(spark, str(raw), str(out / "cleaned"))
+    fact = _refresh(spark, raw, out)
     plan = fact._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryRelation" in plan
     assert "Exchange" not in plan and not re.search(r"Sort \[[^]]*\], true", plan), plan
@@ -127,13 +155,90 @@ def test_refresh_on_synthetic_raw(spark, tmp_path):
     all_bytes = _spark_writer_bytes(fact.orderBy("Ticker", "Date"), tmp_path / "ref_all")
     assert (out / "cleaned" / "All.csv").read_bytes() == all_bytes
 
-    run_olap(spark, fact, str(out / "olap_results"))
-    run_mining(spark, fact, str(out / "datamining_results"))
     with open(out / "olap_results" / "01_quarterly_price.csv", encoding="utf-8") as f:
         assert next(csv.reader(f)) == ["Year", "Quarter", *tickers]
     for name in sorted(os.listdir(out / "datamining_results")):
         with open(out / "datamining_results" / name, encoding="utf-8") as f:
             assert len(list(csv.reader(f))) > 1, name
     assert len(os.listdir(out / "datamining_results")) == 4
+    with open(out / "datamining_results" / "02_regression_next_day.csv", encoding="utf-8") as f:
+        assert sorted(r["Ticker"] for r in csv.DictReader(f)) == tickers
+    charts = os.listdir(out / "olap_charts")
+    assert len(charts) == 3 * len(tickers) + 4
+    assert all((out / "olap_charts" / c).read_bytes()[:8] == b"\x89PNG\r\n\x1a\n" for c in charts)
     assert _leftovers(out) == []
+    fact.unpersist()
+    return fact
+
+
+def test_refresh_on_synthetic_raw(spark, tmp_path):
+    _check_refresh(spark, tmp_path, null_prices=False)
+
+
+def test_refresh_with_null_prices_and_volumes(spark, tmp_path):
+    """Sentinels in one ticker's Close and Volume cells reach the fact as
+    nulls; every table and chart is still written (the charts skip null
+    points, the next-day regression drops null-feature rows)."""
+    fact = _check_refresh(spark, tmp_path, null_prices=True)
+    hvn = fact.filter("Ticker = 'HVN'")
+    assert hvn.filter("Close IS NULL").count() == 2
+    assert hvn.filter("Volume IS NULL").count() == 2
+
+
+TABLES = [
+    ("olap_results/01_quarterly_price.csv", "quarterly_price"),
+    ("olap_results/02_growth_24_25.csv", "yearly_growth"),
+    ("olap_results/03_monthly_volume.csv", "monthly_volume"),
+    ("olap_results/04_stats_2025.csv", "stats_panel"),
+    ("datamining_results/01_regression_same_day.csv", "regression_same_day"),
+    ("datamining_results/02_regression_next_day.csv", "regression_next_day"),
+    ("datamining_results/03_kmeans_clusters.csv", "kmeans"),
+    ("datamining_results/04_anomalies.csv", "anomalies"),
+]
+
+
+def test_dashboard_reads_the_refresh_fact(spark, tmp_path, monkeypatch):
+    """A dashboard opened after the refresh, in the same session and after
+    the refresh released its fact, serves the refresh's fact (cached again,
+    one raw load in all) and the same OLAP and mining tables."""
+    from stock_data_warehouse_analytics_spark.api import StockWarehouse
+    from stock_data_warehouse_analytics_spark.sources import stock_csv
+
+    loads = []
+    load = stock_csv.load_stock_facts
+    monkeypatch.setattr(
+        stock_csv, "load_stock_facts", lambda *a, **k: loads.append(a) or load(*a, **k)
+    )
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for seed, t in enumerate(TICKERS):
+        _write_raw(raw / f"{t}.csv", t, 60, seed)
+    out = tmp_path / "out"
+    fact = _refresh(spark, raw, out)
+    fact.unpersist()
+
+    wh = StockWarehouse(spark, str(raw))
+    assert wh.fact is fact and fact.is_cached
+    for name, method in TABLES:
+        write_csv_single(getattr(wh, method)(), str(tmp_path / "t.csv"))
+        assert (tmp_path / "t.csv").read_bytes() == (out / name).read_bytes(), name
+    assert len(loads) == 1
+    wh.close()
+
+
+def test_mining_needs_three_tickers(spark, tmp_path):
+    """k-means over two tickers (the third raw file is header-only) is a
+    declared error: sklearn's own message."""
+    from stock_data_warehouse_analytics_spark.pipeline import run_etl, run_mining
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for seed, t in enumerate(TICKERS[:2]):
+        _write_raw(raw / f"{t}.csv", t, 60, seed)
+    with open(raw / "NCT.csv", "w", encoding="utf-8-sig", newline="") as f:
+        csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n").writerow(HEADER)
+    fact = run_etl(spark, str(raw), str(tmp_path / "cleaned"))
+    assert sorted(os.listdir(tmp_path / "cleaned")) == ["AST.csv", "All.csv", "HVN.csv"]
+    with pytest.raises(ValueError, match="n_samples=2 should be >= n_clusters=3"):
+        run_mining(spark, fact, str(tmp_path / "mining"))
     fact.unpersist()

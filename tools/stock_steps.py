@@ -9,8 +9,9 @@ default), then every ``StockWarehouse`` method once with its result
 collected, all in one session.  Prints one line per step: wall seconds,
 CPU seconds of this process tree (driver Python, JVM, Python workers),
 CPU seconds of the JVM alone, Spark jobs, and whole-stage codegen
-compiles.  A warm-up query runs first, so step 1 does not carry the
-session's first-use cost.
+compiles; then a ``refresh.total`` and a ``facade.total`` line with the
+sums of each part.  A warm-up query runs first, so step 1 does not carry
+the session's first-use cost.
 """
 
 from __future__ import annotations
@@ -78,6 +79,10 @@ def main() -> int:
     spark.range(1 << 16).selectExpr("sum(id % 7)").collect()
 
     print(f"{'step':<34}{'wall_s':>8}{'cpu_s':>8}{'jvm_s':>8}{'jobs':>6}{'compiles':>9}")
+    totals: dict[str, list[float]] = {}
+
+    def row(name: str, wall: float, cpu: float, jvm_s: float, jobs: int, n: int) -> None:
+        print(f"{name:<34}{wall:>8.2f}{cpu:>8.2f}{jvm_s:>8.2f}{jobs:>6}{n:>9}", flush=True)
 
     def step(name: str, fn):
         sc.setJobGroup(name, name)
@@ -88,8 +93,10 @@ def main() -> int:
         cpu = cpu_s(os.getpid()) - c0
         jvm_s = cpu_s(jvm_pid, tree=False) - j0
         jobs = len(sc.statusTracker().getJobIdsForGroup(name))
-        print(f"{name:<34}{wall:>8.2f}{cpu:>8.2f}{jvm_s:>8.2f}{jobs:>6}"
-              f"{compiles.getCount() - n0:>9}", flush=True)
+        parts = (wall, cpu, jvm_s, jobs, compiles.getCount() - n0)
+        row(name, *parts)
+        total = totals.setdefault(name.split(".")[0] + ".total", [0] * len(parts))
+        total[:] = map(sum, zip(total, parts))
         return result
 
     fact = step("refresh.etl", lambda: pipeline.run_etl(
@@ -104,6 +111,8 @@ def main() -> int:
     for method in FACADE:
         step(f"facade.{method}", lambda: getattr(wh, method)().collect())
     wh.close()
+    for name, parts in totals.items():
+        row(name, *parts)
     spark.stop()
     print(f"outputs under {out}", file=sys.stderr)
     return 0
