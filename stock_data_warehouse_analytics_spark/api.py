@@ -6,8 +6,13 @@ re-runs per widget event, as DataFrame-returning methods on one object.
 (session, input directory) in ``session_memo``, shared by every instance
 and by the refresh, whose sinks (``pipeline``) call these same methods.
 Result tables are lazy plans over the fact and the OLAP and mining frames
-prepared once per instance.  A UI (streamlit or otherwise) binds widgets
-to these methods; the engine ends here.
+prepared once per instance.  A raw fact whose files total at most
+``localrel.ONE_PARTITION_MAX_BYTES`` (the dashboard's ~1.3k rows) is one
+Date-sorted partition, so no call plans a shuffle above it and each
+widget event pays about one Spark job, not one per Exchange; a larger
+fact keeps one partition per file and the distributed plans.  A UI
+(streamlit or otherwise) binds widgets to these methods; the engine ends
+here.
 """
 
 from __future__ import annotations

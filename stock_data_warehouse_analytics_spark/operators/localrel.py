@@ -30,10 +30,16 @@ callers keep rows at O(100s) — grid/sweep tables, quantile targets,
 centroid tables, per-group offset maps.  Data-sized frames keep the
 normal read path.
 
-:func:`collect_if_small` is the one rule that sends an operator's
-input to a driver-side body (whose result comes back as a literal
-relation): at most :data:`DRIVER_MAX_ROWS` rows, counted, not
-estimated.
+Two small-input rules live here, each on an exact fact rather than a
+Catalyst estimate (the quantile plan choice in ``operators/ranking.py``
+still reads one):
+
+- :func:`collect_if_small` sends an operator's input to a driver-side
+  body (whose result comes back as a literal relation): at most
+  :data:`DRIVER_MAX_ROWS` rows, counted;
+- :data:`ONE_PARTITION_MAX_BYTES` puts the raw stock fact in one
+  partition (``sources.stock_csv.load_stock_facts``): input files
+  totalling at most that many bytes on disk, summed on the driver.
 """
 
 from __future__ import annotations
@@ -48,6 +54,13 @@ from pyspark.sql.types import ArrayType, _parse_datatype_string
 
 # Row cap for the driver small paths (CC union-find, BPE merge loop).
 DRIVER_MAX_ROWS = 10_000
+
+# Byte cap for the one-partition stock fact: Spark's default
+# spark.sql.files.openCostInBytes.  A file scan splits at
+# min(maxPartitionBytes, max(openCostInBytes, bytes / cores)), so up to
+# this size Spark itself reads each file in one task; above it one task
+# would give up the scan's parallelism.
+ONE_PARTITION_MAX_BYTES = 4 << 20
 
 _log = logging.getLogger(__name__)
 

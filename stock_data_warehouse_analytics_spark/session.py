@@ -15,6 +15,7 @@ centralize the configs that matter at 100 TB:
 from __future__ import annotations
 
 import os
+import re
 import weakref
 
 from pyspark.sql import SparkSession
@@ -138,6 +139,46 @@ def _ship_package(spark: SparkSession) -> None:
         pass
 
 
+def _spark_home(environ) -> str | None:
+    """``$SPARK_HOME``, else the directory pyspark itself launches
+    ``spark-submit`` from (a pip install's package directory); None when
+    pyspark finds none."""
+    if environ.get("SPARK_HOME"):
+        return environ["SPARK_HOME"]
+    from pyspark import find_spark_home
+
+    try:
+        return find_spark_home._find_spark_home()
+    except SystemExit:  # pyspark reports a missing home by exiting
+        return None
+
+
+def _driver_java_options(environ) -> str:
+    """``spark.driver.extraJavaOptions`` for :func:`get_spark`: the value
+    ``spark-defaults.conf`` sets (in ``$SPARK_CONF_DIR``, else the conf
+    dir of the Spark home that ``spark-submit`` runs from), then
+    ``SPARK_GRAFT_DRIVER_JAVA_OPTS``, then
+    ``-XX:+ExplicitGCInvokesConcurrent``.  A builder conf replaces the
+    defaults file's value rather than adding to it, so the merge happens
+    here.  A missing conf dir or file contributes nothing."""
+    home = None if environ.get("SPARK_CONF_DIR") else _spark_home(environ)
+    conf_dir = environ.get("SPARK_CONF_DIR") or (home and os.path.join(home, "conf"))
+    lines = []
+    if conf_dir:
+        try:
+            with open(os.path.join(conf_dir, "spark-defaults.conf"), encoding="utf-8") as f:
+                lines = f.readlines()
+        except OSError:
+            pass
+    defaults = ""
+    for line in lines:  # java.util.Properties syntax; the last assignment wins
+        m = re.match(r"\s*spark\.driver\.extraJavaOptions(?:\s*[=:]|\s)(.*)", line)
+        if m:
+            defaults = m.group(1).strip()
+    opts = (defaults, environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "").strip())
+    return " ".join([*filter(None, opts), "-XX:+ExplicitGCInvokesConcurrent"])
+
+
 def get_spark(
     app_name: str = "stock-data-warehouse-analytics-spark",
     *,
@@ -184,17 +225,11 @@ def get_spark(
         # keep executing.  Not a local-mode hack — any long-lived
         # driver/executor JVM that relies on periodic explicit GC for
         # ContextCleaner wants this flag.
-        # Appended to any deployment-provided options (via
-        # SPARK_GRAFT_DRIVER_JAVA_OPTS) instead of clobbering them;
+        # Merged after the options spark-defaults.conf and
+        # SPARK_GRAFT_DRIVER_JAVA_OPTS give, instead of clobbering them;
         # under spark-submit client mode the driver JVM is already
-        # started and this is a no-op either way (advisor r9, low).
-        .config(
-            "spark.driver.extraJavaOptions",
-            (
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-                + " -XX:+ExplicitGCInvokesConcurrent"
-            ).strip(),
-        )
+        # started and this is a no-op either way.
+        .config("spark.driver.extraJavaOptions", _driver_java_options(os.environ))
         # Python workers connect back to the JVM over a local socket
         # with a default 15s auth/handshake window; raise it so a
         # saturated box can't kill a worker mid-handshake.  (NOT the

@@ -1,11 +1,16 @@
 """Stock CSV ingestion S1–S4 (SURVEY.md §2.1) — the reference's ETL
 (``preprocess_stocks.py:121-230``) as one lazy, codegen'd Spark plan.
 
-Design for scale: each ticker's files are one lazy scan branch of a
-union plan (:func:`load_stock_facts`), with the ticker taken from the
-file name (or from ``input_file_name()`` in the all-CSV fallback) —
-no per-ticker Python loop over rows, no shuffle.  :func:`clean_raw`
-is the per-file core; it sorts within partitions only, never globally.
+The ticker comes from the file name (or from ``input_file_name()`` in
+the all-CSV fallback): no per-ticker Python loop over rows.
+:func:`load_stock_facts` takes one of two routes, chosen from the input
+files' total size on disk (``os.path.getsize`` on the driver, no job):
+
+- at most :data:`localrel.ONE_PARTITION_MAX_BYTES`: the union in ONE
+  partition sorted by Date, so every aggregate, window and ``orderBy``
+  above it plans no shuffle;
+- above it: a union of scans, one partition per (small) file, each
+  sorted by Date by :func:`clean_raw`, never globally.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from ..functions.derivations import (
     volatility,
 )
 from ..functions.parsers import parse_date, parse_number, parse_percent, parse_volume
+from ..operators import localrel
 from ..schemas import COL_MAP, FACT_COLUMNS, TICKERS
 
 __all__ = [
@@ -121,24 +127,33 @@ def load_stock_facts(
     glob ``*{T}*.csv`` with all-CSV fallback, cleaned and union'd into
     the merged fact table (U1, ``pd.concat sort=False`` ≙ unionByName).
 
-    Each ticker's files form one lazy branch of a union plan — no
-    driver-side data movement; at scale this is a single multi-source
-    scan feeding one write.
+    Each ticker's files form one lazy branch of a union plan, one
+    partition per (small) file.  When the globbed files total at most
+    :data:`localrel.ONE_PARTITION_MAX_BYTES` on disk, the union is
+    coalesced to one partition and sorted by Date within it: one
+    partition satisfies every distribution, so the consumers' plans need
+    no Exchange, and each ticker still sums in Date order.  Larger inputs
+    keep the union's partitions.
     """
     import glob as _glob
 
     tickers = tickers or TICKERS
-    branches = []
+    branches, paths = [], []
     for t in tickers:
         files = sorted(_glob.glob(os.path.join(input_dir, f"*{t}*.csv")))
         if not files:
             continue
+        paths += files
         branches.append(clean_raw(read_raw(spark, files), ticker=t))
     if not branches:
+        paths = _glob.glob(os.path.join(input_dir, "*.csv"))
         branches = [clean_raw(read_raw(spark, os.path.join(input_dir, "*.csv")))]
-    return reduce(
+    union = reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), branches
     )
+    if sum(map(os.path.getsize, paths)) <= localrel.ONE_PARTITION_MAX_BYTES:
+        return union.coalesce(1).sortWithinPartitions("Date")
+    return union
 
 
 def load_cleaned(spark: SparkSession, path: str) -> DataFrame:

@@ -1,6 +1,7 @@
 """``session.session_memo``: the one session-scoped staging cache,
 plus the structural guards that keep the package to one way to stage
-and one way to route small inputs to the driver.
+and one way to route small inputs; and ``get_spark``'s merge of the
+driver's Java options.
 
 Driver-only: no test here runs a Spark job.
 """
@@ -14,7 +15,11 @@ import weakref
 
 import pytest
 
-from stock_data_warehouse_analytics_spark.session import _MEMO, session_memo
+from stock_data_warehouse_analytics_spark.session import (
+    _MEMO,
+    _driver_java_options,
+    session_memo,
+)
 
 PKG_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -121,13 +126,15 @@ def test_weak_key_dictionary_only_in_session_module():
 
 
 def test_one_small_input_rule():
-    """The driver small paths route on ``localrel.collect_if_small``'s
-    row count: no env knob sizes a small path, and no module other than
-    the quantile plan choice in ``operators/ranking.py`` reads a
-    Catalyst size estimate."""
+    """The small-input rules are constants in ``operators/localrel.py``
+    on exact facts (``collect_if_small``'s row count, the stock fact's
+    bytes on disk): no env knob sizes a small path or a byte cap such as
+    ``ONE_PARTITION_MAX_BYTES``, and no module other than the quantile
+    plan choice in ``operators/ranking.py`` reads a Catalyst size
+    estimate (``sources/stock_csv.py`` routes on file sizes)."""
     knob = re.compile(
-        r"SPARK_GRAFT_\w*SMALL_BYTES"
-        r"|(environ|getenv).*SMALL_BYTES|SMALL_BYTES.*(environ|getenv)"
+        r"SPARK_GRAFT_\w*(SMALL|MAX)_BYTES"
+        r"|(environ|getenv).*(SMALL|MAX)_BYTES|(SMALL|MAX)_BYTES.*(environ|getenv)"
     )
     ranking = os.path.join("operators", "ranking.py")
     offenders = [
@@ -136,3 +143,64 @@ def test_one_small_input_rule():
         if knob.search(line) or ("sizeInBytes" in line and rel != ranking)
     ]
     assert offenders == []
+
+
+JAVA_GC = "-XX:+ExplicitGCInvokesConcurrent"
+
+
+def test_driver_java_options_keep_spark_defaults(tmp_path, monkeypatch):
+    """``get_spark``'s ``spark.driver.extraJavaOptions`` keeps the value
+    of ``spark-defaults.conf`` (``$SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``, else the conf dir of the home pyspark finds),
+    then ``SPARK_GRAFT_DRIVER_JAVA_OPTS``, then the GC flag; no JVM is
+    started."""
+    from pyspark import find_spark_home
+
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "# spark.driver.extraJavaOptions -Dcommented=1\n"
+        "spark.driver.extraJavaOptionsX -Dother=1\n"
+        "spark.executor.extraJavaOptions -Dexecutor=1\n"
+        "spark.driver.extraJavaOptions=-Dfirst=1\n"
+        "  spark.driver.extraJavaOptions   -Dlast=1 -Xss4m  \n"
+    )
+    home = tmp_path / "home"
+    (home / "conf").mkdir(parents=True)
+    (home / "conf" / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions: -Dhome=1\n"
+    )
+    # a conf file in the working directory is never read
+    monkeypatch.chdir(tmp_path / "conf")
+    opts = "-Dgraft=1"
+    cases = [
+        ({"SPARK_CONF_DIR": str(conf), "SPARK_HOME": str(home)},
+         f"-Dlast=1 -Xss4m {JAVA_GC}"),
+        ({"SPARK_CONF_DIR": str(conf), "SPARK_GRAFT_DRIVER_JAVA_OPTS": f" {opts} "},
+         f"-Dlast=1 -Xss4m {opts} {JAVA_GC}"),
+        ({"SPARK_CONF_DIR": "", "SPARK_HOME": str(home)}, f"-Dhome=1 {JAVA_GC}"),
+        ({"SPARK_HOME": str(tmp_path / "missing")}, JAVA_GC),
+        ({"SPARK_GRAFT_DRIVER_JAVA_OPTS": opts}, f"{opts} {JAVA_GC}"),
+        ({}, JAVA_GC),
+    ]
+    # with SPARK_HOME absent, pyspark's own lookup names the home
+    found = {"home": str(tmp_path / "missing")}
+
+    def fake_find_spark_home():
+        if found["home"] is None:
+            raise SystemExit(-1)
+        return found["home"]
+
+    monkeypatch.setattr(find_spark_home, "_find_spark_home", fake_find_spark_home)
+    for environ, want in cases:
+        assert _driver_java_options(environ) == want, environ
+    found["home"] = str(home)
+    assert _driver_java_options({}) == f"-Dhome=1 {JAVA_GC}"
+    assert _driver_java_options({"SPARK_GRAFT_DRIVER_JAVA_OPTS": opts}) == (
+        f"-Dhome=1 {opts} {JAVA_GC}"
+    )
+    assert _driver_java_options({"SPARK_CONF_DIR": str(conf)}) == (
+        f"-Dlast=1 -Xss4m {JAVA_GC}"
+    )
+    found["home"] = None
+    assert _driver_java_options({}) == JAVA_GC

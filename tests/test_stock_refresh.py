@@ -5,12 +5,17 @@
   reference writer) for adversarial names and values, and for 0 rows;
 - ``run_etl`` → ``run_olap`` → ``run_mining`` → ``run_charts`` over
   FIXTURES.md §1-style raw files: Date-ordered per-ticker files, and a
-  cached fact that is a union of file scans (no Exchange, no global Sort,
-  at most one partition per input file, each partition in Date order);
-  also with null sentinels in one ticker's Close and Volume cells;
+  cached fact with no Exchange and no global Sort under it, at most one
+  partition per input file, each partition in Date order; also with null
+  sentinels in one ticker's Close and Volume cells;
+- the fact's two routes, one Date-sorted partition (input under the byte
+  cap) and the union of file scans (over it), per-ticker files and the
+  all-CSV fallback alike: the same rows from all 12 facade methods, no
+  shuffle above the one-partition fact, and no job to choose the route;
 - a dashboard opened after the refresh in the same session reads the
   refresh's fact (one raw load) and serves the same tables;
-- ``run_mining`` over two tickers raises k-means' declared error.
+- ``run_olap`` runs over one ticker; ``run_mining`` over one or two
+  tickers raises k-means' declared error.
 
 Needs no reference data.
 """
@@ -227,18 +232,92 @@ def test_dashboard_reads_the_refresh_fact(spark, tmp_path, monkeypatch):
 
 
 def test_mining_needs_three_tickers(spark, tmp_path):
-    """k-means over two tickers (the third raw file is header-only) is a
-    declared error: sklearn's own message."""
-    from stock_data_warehouse_analytics_spark.pipeline import run_etl, run_mining
+    """k-means over one or two tickers is a declared error: sklearn's own
+    message.  With two, the third raw file is header-only.  ETL and OLAP
+    still run over either."""
+    from stock_data_warehouse_analytics_spark.pipeline import (
+        run_etl,
+        run_mining,
+        run_olap,
+    )
+
+    for n in (2, 1):
+        raw = tmp_path / f"raw{n}"
+        raw.mkdir()
+        for seed, t in enumerate(TICKERS[:n]):
+            _write_raw(raw / f"{t}.csv", t, 60, seed)
+        if n == 2:
+            with open(raw / "NCT.csv", "w", encoding="utf-8-sig", newline="") as f:
+                csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n").writerow(HEADER)
+        out = tmp_path / f"out{n}"
+        fact = run_etl(spark, str(raw), str(out / "cleaned"))
+        assert sorted(os.listdir(out / "cleaned")) == sorted(
+            ["All.csv", *(f"{t}.csv" for t in TICKERS[:n])]
+        )
+        run_olap(spark, fact, str(out / "olap"))
+        assert len(os.listdir(out / "olap")) == 4
+        with open(out / "olap" / "01_quarterly_price.csv", encoding="utf-8") as f:
+            assert next(csv.reader(f)) == ["Year", "Quarter", *TICKERS[:n]]
+        with pytest.raises(ValueError, match=f"n_samples={n} should be >= n_clusters=3"):
+            run_mining(spark, fact, str(out / "mining"))
+        fact.unpersist()
+
+
+FACADE = [
+    "quarterly_price", "yearly_growth", "monthly_volume", "stats_panel",
+    "regression_same_day", "regression_next_day", "kmeans", "anomalies",
+    "summary_statistics", "rolling_volatility", "cumulative_returns",
+    "per_ticker_quarterly_stats",
+]
+
+
+@pytest.mark.parametrize(
+    "names", [TICKERS, ["alpha", "beta", "gamma"]], ids=["tickers", "fallback"]
+)
+def test_fact_routes_serve_the_same_rows(spark, tmp_path, monkeypatch, names):
+    """Raw input under ``localrel.ONE_PARTITION_MAX_BYTES`` gives a
+    one-partition fact with no shuffle above it in any facade plan; a cap
+    of 0 forces the other route, one partition per file.  Both routes
+    serve the same rows from every facade method, the load starts one job
+    per CSV scan (its header read) on both, so choosing the route starts
+    none, and file names that match no ticker (the all-CSV fallback)
+    still give the Ticker."""
+    from stock_data_warehouse_analytics_spark.api import StockWarehouse
+    from stock_data_warehouse_analytics_spark.operators import localrel
+    from stock_data_warehouse_analytics_spark.sources import stock_csv
 
     raw = tmp_path / "raw"
     raw.mkdir()
-    for seed, t in enumerate(TICKERS[:2]):
-        _write_raw(raw / f"{t}.csv", t, 60, seed)
-    with open(raw / "NCT.csv", "w", encoding="utf-8-sig", newline="") as f:
-        csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n").writerow(HEADER)
-    fact = run_etl(spark, str(raw), str(tmp_path / "cleaned"))
-    assert sorted(os.listdir(tmp_path / "cleaned")) == ["AST.csv", "All.csv", "HVN.csv"]
-    with pytest.raises(ValueError, match="n_samples=2 should be >= n_clusters=3"):
-        run_mining(spark, fact, str(tmp_path / "mining"))
-    fact.unpersist()
+    for seed, name in enumerate(names):
+        _write_raw(raw / f"{name}.csv", name, 60, seed)
+    scans = []
+    read_raw = stock_csv.read_raw
+    monkeypatch.setattr(
+        stock_csv, "read_raw", lambda *a, **k: scans.append(a) or read_raw(*a, **k)
+    )
+    sc = spark.sparkContext
+    facts, jobs = {}, {}
+    for route, cap in (("one", localrel.ONE_PARTITION_MAX_BYTES), ("over_cap", 0)):
+        monkeypatch.setattr(localrel, "ONE_PARTITION_MAX_BYTES", cap)
+        group = f"load-{route}-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        try:
+            facts[route] = stock_csv.load_stock_facts(spark, str(raw)).cache()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[route] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["one"] == jobs["over_cap"] == len(scans) / 2
+    assert facts["one"].rdd.getNumPartitions() == 1
+    assert facts["over_cap"].rdd.getNumPartitions() == len(names)
+    tickers = sorted(r.Ticker for r in facts["one"].select("Ticker").distinct().collect())
+    assert tickers == sorted(n.upper() for n in names)
+
+    one, over_cap = (StockWarehouse.over(facts[r]) for r in ("one", "over_cap"))
+    for method in FACADE:
+        df = getattr(one, method)()
+        rows = [repr(r) for r in df.collect()]  # repr: NaN equals NaN
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"\bExchange\b|ShuffleQueryStage", plan), (method, plan)
+        assert rows == [repr(r) for r in getattr(over_cap, method)().collect()], method
+    for fact in facts.values():
+        fact.unpersist()
