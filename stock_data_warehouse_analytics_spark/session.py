@@ -10,17 +10,41 @@ centralize the configs that matter at 100 TB:
 - Arrow enabled for the few Pandas-UDF paths (mining/multimodal),
 - UTC session timezone so timestamp semantics are deterministic and
   match the DuckDB oracle.
+
+:func:`get_spark` is the one place the package launches a JVM, so it
+alone pays that JVM's class loading once per install rather than once
+per process: an AppCDS (application class-data sharing) archive lives
+in the per-user cache directory (``$XDG_CACHE_HOME``, else
+``~/.cache``, under the package's name), keyed by a hash of the JDK,
+the pyspark version and the launcher's classpath.  The first process
+for a key dumps it as its JVM exits and publishes it by an atomic
+rename; every later process maps it.  Deleting the directory resets
+it.  See :func:`_cds_choice` for when it is skipped.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import logging
 import os
 import re
+import shutil
+import signal
+import subprocess
 import weakref
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "session_memo", "tune_for_engine"]
+
+_log = logging.getLogger(__name__)
+
+# Spark's default (100) evicts the code of a dashboard session before
+# its repeat calls come back to it; a static conf, so set at launch.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _cpus() -> int:
@@ -100,7 +124,6 @@ def _ship_package(spark: SparkSession) -> None:
     if spark in _SHIPPED:
         return
     try:
-        import hashlib
         import tempfile
         import zipfile
 
@@ -153,14 +176,15 @@ def _spark_home(environ) -> str | None:
         return None
 
 
-def _driver_java_options(environ) -> str:
+def _driver_java_options(environ, cds_options=()) -> str:
     """``spark.driver.extraJavaOptions`` for :func:`get_spark`: the value
     ``spark-defaults.conf`` sets (in ``$SPARK_CONF_DIR``, else the conf
     dir of the Spark home that ``spark-submit`` runs from), then
     ``SPARK_GRAFT_DRIVER_JAVA_OPTS``, then
-    ``-XX:+ExplicitGCInvokesConcurrent``.  A builder conf replaces the
-    defaults file's value rather than adding to it, so the merge happens
-    here.  A missing conf dir or file contributes nothing."""
+    ``-XX:+ExplicitGCInvokesConcurrent``, then the class-archive flags of
+    :func:`_cds_choice`.  A builder conf replaces the defaults file's
+    value rather than adding to it, so the merge happens here.  A
+    missing conf dir or file contributes nothing."""
     home = None if environ.get("SPARK_CONF_DIR") else _spark_home(environ)
     conf_dir = environ.get("SPARK_CONF_DIR") or (home and os.path.join(home, "conf"))
     lines = []
@@ -176,7 +200,205 @@ def _driver_java_options(environ) -> str:
         if m:
             defaults = m.group(1).strip()
     opts = (defaults, environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "").strip())
-    return " ".join([*filter(None, opts), "-XX:+ExplicitGCInvokesConcurrent"])
+    return " ".join([*filter(None, opts), "-XX:+ExplicitGCInvokesConcurrent", *cds_options])
+
+
+# Directories the launcher puts on the classpath after the conf dir.  A
+# JDK 17 dump refuses a non-empty directory on the classpath, and the
+# archive key cannot see what they will hold.
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+# How long the dumping process waits at exit for its JVM to write the
+# archive (12-17 s on a 4-core box) before it gives up on publishing.
+_DUMP_WAIT_S = 300
+
+
+class _Cds(NamedTuple):
+    route: str  # map | dump | skip
+    reason: str
+    key: str = "-"
+    archive: str = ""
+    java_options: tuple = ()
+
+
+def _cache_dir(environ) -> str:
+    base = environ.get("XDG_CACHE_HOME") or os.path.join(
+        environ.get("HOME") or os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, __package__)
+
+
+def _java_home(environ) -> str | None:
+    """The JDK ``spark-class`` runs: ``$JAVA_HOME``, else the one of the
+    ``java`` on ``$PATH``."""
+    if environ.get("JAVA_HOME"):
+        return environ["JAVA_HOME"]
+    java = shutil.which("java", path=environ.get("PATH"))
+    return java and os.path.dirname(os.path.dirname(os.path.realpath(java)))
+
+
+def _stamp(path: str, name: str) -> str:
+    st = os.stat(path)
+    return f"{name}:{st.st_size}:{st.st_mtime_ns}"
+
+
+def _listing(path: str) -> list[str]:
+    """``name:size:mtime_ns`` of each entry of directory ``path``, sorted;
+    empty when it does not exist."""
+    try:
+        names = sorted(os.listdir(path))
+    except OSError:
+        return []
+    return [_stamp(os.path.join(path, name), name) for name in names]
+
+
+def _cds_key(java_home: str, spark_home: str, conf_dir: str) -> str:
+    """Hash of the JDK build, the pyspark version and the launcher's
+    classpath (the listing of ``$SPARK_HOME/jars`` and the conf dir).
+    Stats files only; starts no process."""
+    import pyspark
+
+    jdk = [os.path.realpath(os.path.join(java_home, "bin", "java"))]
+    for rel in ("release", "lib/server/libjvm.so"):
+        path = os.path.join(java_home, rel)
+        jdk.append(_stamp(path, rel) if os.path.isfile(path) else f"{rel}:-")
+    parts = [*jdk, pyspark.__version__, *_listing(os.path.join(spark_home, "jars")),
+             "conf", *_listing(conf_dir)]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def _cds_choice(environ, jvm_running: bool = False) -> _Cds:
+    """Which class archive the JVM that :func:`get_spark` launches takes:
+
+    - ``map``: the archive of this key is published (its byte size
+      matches the size recorded at publication; the JVM dies of SIGBUS
+      on a truncated one) -> ``-XX:SharedArchiveFile``;
+    - ``dump``: no process has tried this key yet -> this one creates
+      the key's marker (``O_EXCL``, so of two racing processes one
+      wins) and adds ``-XX:ArchiveClassesAtExit``;
+      :func:`_publish_archive` renames the dump into place at exit;
+    - ``skip``: no flag.  Either the JVM is already running; the marker
+      exists without a usable archive (a dump is running, failed or was
+      killed: nobody dumps twice or waits); the classpath is not the
+      launcher's plain one (``SPARK_CONF_DIR`` set, a non-template
+      file in the conf dir, a variable of ``_CLASSPATH_ENV`` set); or
+      the cache dir cannot be written or named on a JVM command line.
+
+    For ``map`` and ``dump`` it points ``environ["SPARK_CONF_DIR"]`` at
+    an empty directory in the cache dir, for :func:`get_spark` to undo
+    after the launch (the launcher puts the conf dir on the classpath,
+    and a dump refuses a non-empty directory there; Spark never reads
+    ``*.template`` files, so nothing is lost).  Both send the JVM's
+    ``cds`` log tags to a file in the cache dir instead of stdout, where
+    a caller's own output goes.  Logs one debug record
+    ``cds=… reason=… key=…``."""
+
+    cache = _cache_dir(environ)
+    empty_conf = os.path.join(cache, "conf")
+
+    def choose(route, reason, key="-", archive=""):
+        _log.debug("get_spark: cds=%s reason=%s key=%s", route, reason, key)
+        if route == "skip":
+            return _Cds(route, reason, key)
+        environ["SPARK_CONF_DIR"] = empty_conf
+        flag = "SharedArchiveFile" if route == "map" else "ArchiveClassesAtExit"
+        target = archive if route == "map" else archive + ".part"
+        log = f"{archive[:-4]}.{route}.log"
+        return _Cds(route, reason, key, archive, (
+            f"-XX:{flag}={target}",
+            "-Xlog:cds*=off",
+            f"-Xlog:cds*=info:file={log}::filecount=0",
+        ))
+
+    if jvm_running:
+        return choose("skip", "jvm_running")
+    if not re.fullmatch(r"[\w./@+-]+", cache):  # JVM options split on blanks, -Xlog on ':'
+        return choose("skip", "cache_path")
+    if environ.get("SPARK_CONF_DIR"):
+        return choose("skip", "spark_conf_dir")
+    for name in _CLASSPATH_ENV:
+        if environ.get(name):
+            return choose("skip", name.lower())
+    spark_home, java_home = _spark_home(environ), _java_home(environ)
+    if not spark_home:
+        return choose("skip", "no_spark_home")
+    if not java_home or not os.path.isfile(os.path.join(java_home, "bin", "java")):
+        return choose("skip", "no_java")
+    conf_dir = os.path.join(spark_home, "conf")
+    if any(not e.rsplit(":", 2)[0].endswith(".template") for e in _listing(conf_dir)):
+        return choose("skip", "conf_dir_files")
+    key = _cds_key(java_home, spark_home, conf_dir)
+    archive = os.path.join(cache, f"cds-{key}.jsa")
+    marker = archive[:-4] + ".dump"
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+    except FileExistsError:
+        pass
+    except OSError:
+        return choose("skip", "cache_unwritable", key)
+    else:
+        os.close(fd)
+        return choose("dump", "no_archive", key, archive)
+    try:
+        with open(marker, encoding="ascii") as f:
+            published = f.read().strip()
+        size = os.path.getsize(archive)
+    except OSError:
+        return choose("skip", "dump_attempted", key)
+    if published != str(size):
+        return choose("skip", "archive_size", key)
+    return choose("map", "archive", key, archive)
+
+
+def _publish_archive(proc, archive: str) -> None:
+    """Exit hook of the process that dumps: end its gateway JVM (which
+    exits at EOF on its stdin, if nothing stopped it before), wait while
+    it writes ``<archive>.part``, and publish that only if the JVM exited
+    cleanly (0, or 143 after a SIGTERM it handled): record its size in
+    the key's marker, rename it into place, and remove the archives of
+    stale keys.  A failed or killed dump leaves the marker, so no later
+    process dumps this key again."""
+    part = archive + ".part"
+    try:
+        if proc.stdin and not proc.stdin.closed:
+            proc.stdin.close()
+        code = proc.wait(timeout=_DUMP_WAIT_S)
+    except (OSError, subprocess.TimeoutExpired) as e:
+        _log.debug("get_spark: cds=unpublished reason=%s", type(e).__name__)
+        return
+    if code not in (0, 128 + signal.SIGTERM) or not os.path.isfile(part):
+        _log.debug("get_spark: cds=unpublished reason=exit_%s", code)
+        with contextlib.suppress(OSError):
+            os.remove(part)
+        return
+    cache, name = os.path.split(archive)
+    stem = name[:-len(".jsa")]
+    try:
+        with open(os.path.join(cache, stem + ".dump"), "w", encoding="ascii") as f:
+            f.write(str(os.path.getsize(part)))
+        os.replace(part, archive)
+        stale = [e for e in os.listdir(cache)
+                 if e.startswith("cds-") and not e.startswith(stem + ".")]
+    except OSError as e:
+        _log.debug("get_spark: cds=unpublished reason=%s", type(e).__name__)
+        return
+    for entry in stale:
+        with contextlib.suppress(OSError):
+            os.remove(os.path.join(cache, entry))
+    _log.debug("get_spark: cds=published key=%s", stem[len("cds-"):])
+
+
+def _driver_memory(environ, meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: half the host's ``MemTotal``, at
+    most 24g; 24g when ``meminfo`` cannot be read."""
+    if environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open(meminfo, encoding="ascii") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 << 10, kib // 2048)}m"
 
 
 def get_spark(
@@ -185,7 +407,12 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    from pyspark import SparkContext
+
     cpus = _cpus()
+    jvm_running = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    cds = _cds_choice(os.environ, jvm_running)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -197,13 +424,17 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # single-JVM local mode: driver heap IS the executor heap.  8g
         # starts GC-thrashing ~40 queries into a long session (observed:
         # a 2s broadcast-NL query degrading to 25s); 24g keeps full-
-        # registry runs flat on the 128 GiB test box.  Overridable for
-        # smaller machines; irrelevant on a real cluster where executor
-        # memory is provisioned separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # registry runs flat on the 128 GiB test box, and half of
+        # MemTotal leaves room for the Python workers on a smaller one.
+        # SPARK_GRAFT_DRIVER_MEM overrides it because only the caller
+        # knows what else shares the host (perfbench sizes its own);
+        # irrelevant on a real cluster where executor memory is
+        # provisioned separately.
+        .config("spark.driver.memory", _driver_memory(os.environ))
         # ContextCleaner only reclaims broadcasts/shuffles/checkpoint
         # RDDs when a driver GC runs, and Spark's fallback periodic GC
         # fires every 30 MINUTES — with a 24g heap a long multi-query
@@ -229,7 +460,8 @@ def get_spark(
         # SPARK_GRAFT_DRIVER_JAVA_OPTS give, instead of clobbering them;
         # under spark-submit client mode the driver JVM is already
         # started and this is a no-op either way.
-        .config("spark.driver.extraJavaOptions", _driver_java_options(os.environ))
+        .config("spark.driver.extraJavaOptions",
+                _driver_java_options(os.environ, cds.java_options))
         # Python workers connect back to the JVM over a local socket
         # with a default 15s auth/handshake window; raise it so a
         # saturated box can't kill a worker mid-handshake.  (NOT the
@@ -240,4 +472,15 @@ def get_spark(
         # defense-in-depth margin for load spikes.)
         .config("spark.python.authenticate.socketTimeout", "60s")
     )
-    return tune_for_engine(builder.getOrCreate())
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        # the launcher has read the archive's conf dir; the caller's
+        # value is what child processes of this one must see
+        if conf_dir is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = conf_dir
+    if cds.route == "dump":
+        atexit.register(_publish_archive, SparkContext._gateway.proc, cds.archive)
+    return tune_for_engine(spark)
