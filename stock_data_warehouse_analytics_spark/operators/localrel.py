@@ -30,16 +30,18 @@ callers keep rows at O(100s) — grid/sweep tables, quantile targets,
 centroid tables, per-group offset maps.  Data-sized frames keep the
 normal read path.
 
-Two small-input rules live here, each on an exact fact rather than a
-Catalyst estimate (the quantile plan choice in ``operators/ranking.py``
-still reads one):
+Three small-input rules live here, each on an exact fact rather than a
+Catalyst estimate:
 
 - :func:`collect_if_small` sends an operator's input to a driver-side
   body (whose result comes back as a literal relation): at most
   :data:`DRIVER_MAX_ROWS` rows, counted;
 - :data:`ONE_PARTITION_MAX_BYTES` puts the raw stock fact in one
   partition (``sources.stock_csv.load_stock_facts``): input files
-  totalling at most that many bytes on disk, summed on the driver.
+  totalling at most that many bytes on disk, summed on the driver;
+- :data:`QUANTILE_GROUP_MAX_ROWS` sends ``ranking.grouped_exact_quantiles``
+  down its zero-cut route (one whole-group sort per group, no sketch
+  pass): a largest group of at most that many rows, counted.
 """
 
 from __future__ import annotations
@@ -61,6 +63,13 @@ DRIVER_MAX_ROWS = 10_000
 # this size Spark itself reads each file in one task; above it one task
 # would give up the scan's parallelism.
 ONE_PARTITION_MAX_BYTES = 4 << 20
+
+# Largest-group row cap for the zero-cut quantile route.  One task sorts
+# each group whole; up to about here that beats the sketch pass plus the
+# per-(group, bucket) count pass (PERF.md sweep, 4 cores: zero-cut wins
+# at 1e5 rows per group, the bucketed route from 2e5 on a checkpointed
+# frame and from 3e5 on a parquet scan).
+QUANTILE_GROUP_MAX_ROWS = 1 << 18
 
 _log = logging.getLogger(__name__)
 

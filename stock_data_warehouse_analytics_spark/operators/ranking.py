@@ -21,11 +21,13 @@ The cut points only steer load balance, never correctness: any cuts
 yield exact ranks (skewed cuts just unbalance bucket sizes).  Both
 driver collects are bounded by ``n_buckets``, independent of row count.
 
-Every helper here is EAGER: the cut sketch and the count/sum pass run
-as driver actions at call time, so the input plan executes twice before
-the returned DataFrame's own job — callers with expensive upstreams
-should localCheckpoint/cache the input first (or pass
-``checkpoint_input=True`` where offered).
+Every helper here is EAGER: the count/sum pass and the cut sketch (which
+``grouped_exact_quantiles`` skips on its zero-cut route) run as driver
+actions at call time, so the input plan executes up to twice before the
+returned DataFrame's own job.  The rank and cumsum helpers
+localCheckpoint any input that is not a bare scan chain
+(:func:`_materialize_if_needed`); ``grouped_exact_quantiles`` does so
+on ``checkpoint_input=True``.
 
 Reference parity: reproduces ``row_number()/ntile() OVER (ORDER BY …)``
 (reference pandas: rank()/qcut-style global orderings) without the
@@ -34,10 +36,13 @@ single-partition plan.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import localrel
 
 __all__ = [
     "bucketed_global_rank",
@@ -49,26 +54,18 @@ __all__ = [
 
 _BUCKET = "_rk_bucket"
 
-
-# Inputs whose optimizer-estimated size is below this skip the range-
-# bucket machinery in grouped_exact_quantiles: each GROUP is sorted
-# whole by one window task (still partitioned BY GROUP — never a
-# single-partition plan), which is one comfortable task at this size
-# on any cluster, and saves the cut-sketch action plus the per-bucket
-# literal machinery.  The estimate comes from Catalyst plan statistics
-# (accurate for scans and localCheckpointed frames; join plans inflate
-# multiplicatively and therefore conservatively take the bucketed
-# path).  Scale-adaptive by DATA SIZE, not by local core count — on a
-# 100 TB input the stats exceed the threshold and the bucketed path
-# runs exactly as before.
-_QUANTILE_SMALL_BYTES = 128 << 20
+_log = logging.getLogger(__name__)
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats are advisory; assume big
-        return 1 << 62
+def _cuts(df: DataFrame, lead: Column, n_buckets: int) -> list[float]:
+    """The sketch pass: ``n_buckets − 1`` approximate quantiles of
+    ``lead``, deduplicated and sorted — one driver action.  Accuracy
+    1000: cut quality only steers load balance (offsets come from actual
+    counts or sums), so the cheapest sketch that balances is the right
+    one."""
+    qs = F.array(*[F.lit(i / n_buckets) for i in range(1, n_buckets)])
+    row = df.select(F.approx_percentile(lead, qs, 1_000).alias("cuts")).first()
+    return sorted(set(row["cuts"] or []))
 
 
 def _bucket_of(lead: Column, cuts: Sequence[float]) -> Column:
@@ -102,30 +99,20 @@ _TRIVIAL_PLAN_NODES = (
 )
 
 
-def _materialize_if_needed(
-    df: DataFrame, checkpoint_input: bool | None
-) -> DataFrame:
-    """Shared input guard for the EAGER multi-action helpers in this
-    module (each runs 2 driver actions at call time + the caller's own
-    execution = 3 scans of the input).  ``checkpoint_input``:
-
-    - ``None`` (default) — AUTO: ``localCheckpoint`` unless the
-      optimized plan is a bare scan chain (scan/filter/project only).
-      A join/aggregate/window/generate upstream would otherwise pay its
-      full cost three times, and a non-deterministic upstream could
-      make the cut table and the final pass inconsistent.
-    - ``True`` / ``False`` — explicit override (False: caller has
-      already materialized or accepts the rescans)."""
-    if checkpoint_input is None:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        trivial = True
-        for ln in plan.splitlines():
-            node = ln.lstrip("+-: ").strip()
-            if node and not node.startswith(_TRIVIAL_PLAN_NODES):
-                trivial = False
-                break
-        checkpoint_input = not trivial
-    return df.localCheckpoint(eager=True) if checkpoint_input else df
+def _materialize_if_needed(df: DataFrame) -> DataFrame:
+    """Shared input guard for the EAGER rank and cumsum helpers (each
+    runs 2 driver actions at call time + the caller's own execution = 3
+    scans of the input): ``localCheckpoint`` unless the optimized plan
+    is a bare scan chain (scan/filter/project only).  A join/aggregate/
+    window/generate upstream would otherwise pay its full cost three
+    times, and a non-deterministic upstream could make the cut table and
+    the final pass inconsistent."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for ln in plan.splitlines():
+        node = ln.lstrip("+-: ").strip()
+        if node and not node.startswith(_TRIVIAL_PLAN_NODES):
+            return df.localCheckpoint(eager=True)
+    return df
 
 
 def bucketed_global_rank(
@@ -134,7 +121,6 @@ def bucketed_global_rank(
     *,
     n_buckets: int = 32,
     rank_col: str = "global_rank",
-    checkpoint_input: bool | None = None,
 ) -> tuple[DataFrame, int]:
     """Add an exact 1-based global ``rank_col`` ordered by
     ``order_cols`` (ties broken by the later columns — pass a unique
@@ -142,15 +128,11 @@ def bucketed_global_rank(
 
     Two bounded driver round-trips (cuts, bucket counts); the data path
     is one ``n_buckets``-way partitioned sort — no single-partition
-    exchange at any input size.  ``checkpoint_input`` defaults to AUTO
-    (see :func:`_materialize_if_needed`): non-bare-scan inputs are
-    localCheckpointed once instead of re-executing for each pass."""
+    exchange at any input size.  Non-bare-scan inputs are
+    localCheckpointed once instead of re-executing for each pass
+    (:func:`_materialize_if_needed`)."""
     ranked, n_rows = bucketed_global_rank_multi(
-        df,
-        {rank_col: order_cols},
-        n_buckets=n_buckets,
-        rank_col=rank_col,
-        checkpoint_input=checkpoint_input,
+        df, {rank_col: order_cols}, n_buckets=n_buckets, rank_col=rank_col
     )
     return ranked[rank_col], n_rows
 
@@ -161,7 +143,6 @@ def bucketed_global_rank_multi(
     *,
     n_buckets: int = 32,
     rank_col: str = "global_rank",
-    checkpoint_input: bool | None = None,
 ) -> tuple[dict[str, DataFrame], int]:
     """:func:`bucketed_global_rank` for SEVERAL alternative orderings
     of the SAME input — the layout-audit shape, where one table is
@@ -179,7 +160,7 @@ def bucketed_global_rank_multi(
             f"{n_buckets}**{len(order_specs)} joint buckets exceed the"
             " 65536-row count collect"
         )
-    df = _materialize_if_needed(df, checkpoint_input)
+    df = _materialize_if_needed(df)
     leads = {name: cols[0] for name, cols in order_specs.items()}
     qs = [i / n_buckets for i in range(1, n_buckets)]
     # accuracy 1000: cut quality only steers load balance — offsets
@@ -284,60 +265,54 @@ def grouped_exact_quantiles(
     ``percentile(value, q)`` / DuckDB ``quantile_cont`` semantics
     (continuous position ``(n−1)·q``, interpolate ``(1−g)·lo + g·hi``).
 
-    Plan: global value cuts (sketch pass) → per-(group, bucket) rank
-    windows (no partition ever holds more than one bucket of one group)
-    → the two rows straddling each target rank are joined out and
-    interpolated.  Driver state: O(groups × n_buckets) counts — built
-    for bounded group cardinality (if groups are numerous, each group is
-    small and plain ``percentile`` is already safe).
+    Plan: per-(group, bucket) rank windows (no partition ever holds
+    more than one bucket of one group) → the two rows straddling each
+    target rank are joined out and interpolated.  Driver state:
+    O(groups × n_buckets) counts — built for bounded group cardinality
+    (if groups are numerous, each group is small and plain
+    ``percentile`` is already safe).
 
-    EAGER (module docstring): the sketch and count passes run at call
-    time — ``checkpoint_input=True`` materializes an expensive upstream
-    once for all three passes."""
+    Route, on the exact per-group row counts (one grouped count job):
+    when the largest group has at most
+    :data:`localrel.QUANTILE_GROUP_MAX_ROWS` rows, zero cuts — each
+    group is one bucket, sorted whole by one window task, and no other
+    pass runs; above it, global value cuts (the sketch pass) and a
+    per-(group, bucket) count pass.  Both routes give the same rows.
+
+    EAGER (module docstring): the count passes run at call time —
+    ``checkpoint_input=True`` materializes an expensive upstream once
+    for every pass."""
     if checkpoint_input:
         df = df.localCheckpoint(eager=True)
     lead = F.col(value_col).cast("double")
-    small = _plan_size_bytes(df) <= _QUANTILE_SMALL_BYTES
-    if small:
-        # Log the routing so a stats-misestimate that sends a large
-        # input down the whole-group-sort path is diagnosable
-        # (advisor r9, low) — stats are exact for scans and
-        # localCheckpointed frames, the two shapes every registered
-        # caller feeds this operator.
-        import logging
-
-        logging.getLogger(__name__).debug(
-            "grouped_exact_quantiles: small-input fast path (stats <= %d bytes)",
-            _QUANTILE_SMALL_BYTES,
-        )
-    if small:
-        # small-input fast path: zero cuts → every row lands in bucket
-        # 0, the rank window below degrades to one whole-group sort per
-        # group (still partitioned by group), and the sketch action is
-        # skipped entirely.  Bit-identical ranks/interpolation: bucket
-        # 0 + within-bucket order == global within-group order.
-        cuts: list[float] = []
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        # accuracy 1000: cut quality only affects load balance, never
-        # correctness — the cheapest sketch that balances is the right one
-        cuts_row = df.select(
-            F.approx_percentile(lead, F.array(*[F.lit(q) for q in qs]), 1_000).alias(
-                "cuts"
-            )
-        ).first()
-        cuts = sorted(set(cuts_row["cuts"] or []))
-
-    bucketed = df.withColumn(_BUCKET, _bucket_of(lead, cuts))
-
-    counts_rows = (
-        bucketed.groupBy(group_col, _BUCKET)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+    group_rows = {
+        r[group_col]: r["cnt"]
+        for r in df.groupBy(group_col).agg(F.count(F.lit(1)).alias("cnt")).collect()
+    }
+    max_rows = max(group_rows.values(), default=0)
+    zero_cut = max_rows <= localrel.QUANTILE_GROUP_MAX_ROWS
+    _log.debug(
+        "grouped_exact_quantiles: route=%s groups=%d max_group_rows=%d",
+        "zero_cut" if zero_cut else "bucketed",
+        len(group_rows),
+        max_rows,
     )
     per_group: dict[object, dict[int, int]] = {}
-    for r in counts_rows:
-        per_group.setdefault(r[group_col], {})[r[_BUCKET]] = r["cnt"]
+    if zero_cut:
+        # every row in bucket 0: the rank window below sorts each group
+        # whole (still partitioned by group), with the same ranks
+        bucketed = df.withColumn(_BUCKET, F.lit(0))
+        for g, n in group_rows.items():
+            per_group[g] = {0: n}
+    else:
+        cuts = _cuts(df, lead, n_buckets)
+        bucketed = df.withColumn(_BUCKET, _bucket_of(lead, cuts))
+        for r in (
+            bucketed.groupBy(group_col, _BUCKET)
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        ):
+            per_group.setdefault(r[group_col], {})[r[_BUCKET]] = r["cnt"]
 
     spark = df.sparkSession
     offset_rows = []
@@ -358,13 +333,11 @@ def grouped_exact_quantiles(
     # literal local relations (operators/localrel.py) — these tiny
     # broadcast sides would otherwise pay a Python-RDD worker round
     # trip on every build
-    from .localrel import literal_df
-
     g_type = df.schema[group_col].dataType.simpleString()
-    offsets = literal_df(
+    offsets = localrel.literal_df(
         spark, offset_rows, f"{group_col} {g_type}, {_BUCKET} int, _rk_offset long"
     )
-    targets = literal_df(
+    targets = localrel.literal_df(
         spark,
         target_rows,
         f"{group_col} {g_type}, _q_label string, _lo long, _hi long, _frac double",
@@ -456,7 +429,6 @@ def bucketed_global_cumsum(
     *,
     n_buckets: int = 32,
     cumsum_col: str = "global_cumsum",
-    checkpoint_input: bool | None = None,
 ) -> DataFrame:
     """Exact running total of ``value_col`` over the GLOBAL order given
     by ``order_cols`` — without the single-partition window.  Same
@@ -471,28 +443,17 @@ def bucketed_global_cumsum(
     EAGER, like every helper in this module: two driver actions run at
     CALL time (the percentile-cut sketch and the per-bucket sums), so
     the input plan is scanned twice before the returned DataFrame ever
-    executes — three times total.  ``checkpoint_input`` defaults to
-    AUTO (see :func:`_materialize_if_needed`): any input that is not a
-    bare scan chain is localCheckpointed once and all three passes run
-    from the materialized copy; pass ``False`` to opt out when the
-    caller has already materialized."""
+    executes — three times total.  Any input that is not a bare scan
+    chain is localCheckpointed once and all three passes run from the
+    materialized copy (:func:`_materialize_if_needed`)."""
     from decimal import Decimal
 
-    df = _materialize_if_needed(df, checkpoint_input)
+    df = _materialize_if_needed(df)
 
-    lead = order_cols[0]
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    # accuracy 1000 (was 10000): same reasoning as bucketed_global_rank
-    # — offsets carry exact decimal partial sums, cuts only balance
-    cuts_row = df.select(
-        F.approx_percentile(
-            F.col(lead).cast("double"), F.array(*[F.lit(q) for q in qs]), 1_000
-        ).alias("cuts")
-    ).first()
-    cuts = sorted(set(cuts_row["cuts"] or []))
-
+    lead = F.col(order_cols[0]).cast("double")
     dec = F.col(value_col).cast("decimal(28,6)")
-    bucketed = df.withColumn(_BUCKET, _bucket_of(F.col(lead).cast("double"), cuts))
+    cuts = _cuts(df, lead, n_buckets)
+    bucketed = df.withColumn(_BUCKET, _bucket_of(lead, cuts))
 
     sums = {
         r[_BUCKET]: (r["s"] if r["s"] is not None else Decimal(0))

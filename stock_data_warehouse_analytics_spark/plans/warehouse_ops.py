@@ -312,8 +312,8 @@ def mining_mad_robust_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = quantile_panel(spark, sf_dir, "events", "event_type", "value").select(
         "event_type", F.round("q50", 6).alias("med")
     )
-    # dev feeds FOUR passes (mad sketch, mad counts, mad rank, final
-    # agg) — materialize it once (localCheckpoint: the standard
+    # dev feeds three passes (mad counts, mad rank, final agg) —
+    # materialize it once (localCheckpoint: the standard
     # multi-pass robust-statistics trade; on a cluster this is
     # persist-to-local-disk of a 3-column projection)
     dev = (

@@ -426,14 +426,14 @@ def behavior_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value").alias("monetary"),
         )
     )
-    # the quantile helper fires multiple jobs (sketch, counts, rank);
+    # the quantile helper fires multiple jobs (counts, rank);
     # persist the per-user rollup so each job reuses it instead of
     # re-running the events scan + aggregation (the rollup is the
     # aggregated table — orders of magnitude smaller than the facts)
     rfm = rfm.persist()
     # ONE quantile pass for all three metrics: stack (metric, val) long,
     # let the helper's native multi-group path compute 12 cuts in a
-    # single sketch+rank round trip (three separate calls measured 7.1s
+    # single count+rank round trip (three separate calls measured 7.1s
     # at sf0.1; stacked: ~3s), then pivot the 3-row cut table wide.
     stacked = rfm.select(
         F.explode(

@@ -405,7 +405,6 @@ def get_spark(
     app_name: str = "stock-data-warehouse-analytics-spark",
     *,
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     from pyspark import SparkContext
 
@@ -416,7 +415,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -17,6 +17,6 @@ def spark():
     from stock_data_warehouse_analytics_spark.session import get_spark
 
     cpus = min(8, os.cpu_count() or 8)
-    spark = get_spark("tests", master=f"local[{cpus}]", shuffle_partitions=8)
+    spark = get_spark("tests", master=f"local[{cpus}]")
     yield spark
     spark.stop()

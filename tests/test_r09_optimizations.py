@@ -3,8 +3,8 @@
 Each optimization in this round changed HOW something is computed,
 never WHAT — these tests pin the equivalences directly:
 
-- grouped_exact_quantiles: small-input fast path (zero cuts, whole-
-  group window) ≡ the bucketed path, bit for bit;
+- grouped_exact_quantiles: the zero-cut route (whole-group window)
+  ≡ the bucketed route, bit for bit;
 - _bucket_of: the compact higher-order bucket expression ≡ the
   chained when-sum it replaced;
 - literal_df: the from_json encoding ≡ the per-cell-literal encoding
@@ -20,6 +20,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from stock_data_warehouse_analytics_spark.operators import localrel
 from stock_data_warehouse_analytics_spark.operators import ranking as R
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -29,7 +30,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from stock_data_warehouse_analytics_spark.session import get_spark
 
-    s = get_spark("test-r09-opt", shuffle_partitions=4)
+    s = get_spark("test-r09-opt")
     yield s
 
 
@@ -47,8 +48,8 @@ def test_small_path_matches_bucketed_path(spark, monkeypatch):
     df = _mixed_frame(spark)
     qs = [("q05", 0.05), ("q50", 0.5), ("q95", 0.95)]
     small = R.grouped_exact_quantiles(df, "grp", "v", qs).collect()
-    # force the bucketed path by zeroing the small-input threshold
-    monkeypatch.setattr(R, "_QUANTILE_SMALL_BYTES", 0)
+    # force the bucketed path by zeroing the largest-group row cap
+    monkeypatch.setattr(localrel, "QUANTILE_GROUP_MAX_ROWS", 0)
     big = R.grouped_exact_quantiles(df, "grp", "v", qs).collect()
     key = lambda r: r["grp"]  # noqa: E731
     assert sorted(map(tuple, small), key=lambda t: t[0]) == sorted(

@@ -5,7 +5,8 @@ registered queries:
   bit-for-bit on adversarial shapes (ties, skew, n % tiles != 0,
   n < tiles);
 - ``grouped_exact_quantiles`` must reproduce ``F.percentile`` on
-  random-ish grouped data;
+  random-ish grouped data on both its routes, and choose the route by
+  its largest group's counted rows, whatever Catalyst estimates;
 - ``connected_components`` must match a driver-side union-find on a
   pseudo-random graph (chains force multiple pointer-jump rounds), on
   both its routes;
@@ -15,11 +16,13 @@ registered queries:
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMALL
+from .conftest import SF_MEDIUM, SF_SMALL
 
 
 def _synth(spark, n: int, groups: int = 4):
@@ -56,11 +59,15 @@ def test_exact_ntile_matches_window_ntile(spark):
         assert got == want, (n, tiles)
 
 
-def test_grouped_exact_quantiles_matches_percentile(spark):
+@pytest.mark.parametrize("route", ["zero_cut", "bucketed"])
+def test_grouped_exact_quantiles_matches_percentile(spark, monkeypatch, route):
+    from stock_data_warehouse_analytics_spark.operators import localrel
     from stock_data_warehouse_analytics_spark.operators.ranking import (
         grouped_exact_quantiles,
     )
 
+    if route == "bucketed":
+        monkeypatch.setattr(localrel, "QUANTILE_GROUP_MAX_ROWS", 0)
     df = _synth(spark, 3000)
     qs = [("p10", 0.1), ("p50", 0.5), ("p99", 0.99)]
     got = {
@@ -85,6 +92,65 @@ def test_grouped_exact_quantiles_matches_percentile(spark):
         .collect()
     }
     assert got == want
+
+
+def _route_records(caplog) -> list[str]:
+    return [
+        m.split(": ", 1)[1].split()[0]
+        for m in caplog.messages
+        if m.startswith("grouped_exact_quantiles: route=")
+    ]
+
+
+def test_grouped_exact_quantiles_routes_on_group_rows(spark, monkeypatch, caplog):
+    """The quantile route follows the largest group's counted rows, not
+    Catalyst's estimate: a checkpointed join estimated far above 128 MiB
+    but holding 10k rows takes the zero-cut route (no sketch pass), and
+    one group above the cap sends the call down the bucketed route.
+    Both give the same rows."""
+    from stock_data_warehouse_analytics_spark.operators import localrel
+    from stock_data_warehouse_analytics_spark.operators import ranking as R
+
+    sketches = []
+    cuts = R._cuts
+    monkeypatch.setattr(R, "_cuts", lambda *a: sketches.append(a) or cuts(*a))
+    left = spark.range(10_000).select(
+        "id", F.when(F.col("id") < 6_000, "big").otherwise(
+            (F.col("id") % 2).cast("string")).alias("grp")
+    )
+    right = spark.range(10_000).select(
+        "id", ((F.col("id") * 2654435761) % 1009).cast("double").alias("v")
+    )
+    df = left.join(F.broadcast(right), "id").localCheckpoint(eager=True)
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert est > 128 << 20
+    qs = [("p25", 0.25), ("p50", 0.5), ("p90", 0.9)]
+
+    with caplog.at_level(logging.DEBUG, logger=R.__name__):
+        zero_cut = sorted(R.grouped_exact_quantiles(df, "grp", "v", qs).collect())
+        assert sketches == []
+        monkeypatch.setattr(localrel, "QUANTILE_GROUP_MAX_ROWS", 5_999)
+        bucketed = sorted(R.grouped_exact_quantiles(df, "grp", "v", qs).collect())
+        assert len(sketches) == 1
+    assert _route_records(caplog) == ["route=zero_cut", "route=bucketed"]
+    assert caplog.messages[-1].endswith("groups=3 max_group_rows=6000")
+    assert zero_cut == bucketed
+
+
+def test_mad_anomalies_take_the_zero_cut_route(spark, caplog):
+    """``mining_mad_robust_anomalies`` at sf0.01 in a fresh session: the
+    staged events panel and the MAD over the checkpointed broadcast join
+    (estimated at ~16 GB, ~10k rows) both take the zero-cut route."""
+    from stock_data_warehouse_analytics_spark.plans import get_queries
+
+    fresh = spark.newSession()
+    query = get_queries()["mining_mad_robust_anomalies"]
+    with caplog.at_level(
+        logging.DEBUG, logger="stock_data_warehouse_analytics_spark.operators.ranking"
+    ):
+        rows = query(fresh, SF_MEDIUM).collect()
+    assert rows
+    assert _route_records(caplog) == ["route=zero_cut", "route=zero_cut"]
 
 
 def test_connected_components_matches_union_find(spark, monkeypatch):
@@ -181,16 +247,16 @@ def test_bucketed_helpers_auto_checkpoint_heuristic(spark):
     )
 
     # bare scan chain: auto leaves the plan untouched (no LogicalRDD)
-    out = _materialize_if_needed(li.filter(F.col("l_quantity") > 10), None)
+    out = _materialize_if_needed(li.filter(F.col("l_quantity") > 10))
     assert "LogicalRDD" not in out._jdf.queryExecution().optimizedPlan().toString()
 
     # aggregated input: auto materializes (plan collapses to LogicalRDD)
     agg = li.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
-    out2 = _materialize_if_needed(agg, None)
+    out2 = _materialize_if_needed(agg)
     assert "LogicalRDD" in out2._jdf.queryExecution().optimizedPlan().toString()
 
     # an already-checkpointed input is NOT re-checkpointed (same plan id)
-    out3 = _materialize_if_needed(out2, None)
+    out3 = _materialize_if_needed(out2)
     assert out3 is out2
 
     # end-to-end: ranking an aggregate still returns correct ranks

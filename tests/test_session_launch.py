@@ -1,9 +1,11 @@
 """How ``get_spark`` launches its JVM: the AppCDS class archive choice
-(map, dump or skip) and its publication, and the host-fit heap default.
+(map, dump or skip) and its publication, the host-fit heap default, and
+the confs a ``newSession()`` of the returned session inherits.
 
-Every test but the last is JVM-free: it builds a fake JDK, Spark home
-and cache dir under ``tmp_path``.  The last runs three short Spark
-processes against one temporary cache dir.
+Every test but the last two is JVM-free: it builds a fake JDK, Spark
+home and cache dir under ``tmp_path``.  The last two use Spark: one in
+the test session, one runs three short Spark processes against one
+temporary cache dir.
 """
 
 from __future__ import annotations
@@ -17,8 +19,10 @@ import pytest
 
 from stock_data_warehouse_analytics_spark.session import (
     _cds_choice,
+    _cpus,
     _driver_memory,
     _publish_archive,
+    get_spark,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -189,6 +193,20 @@ def test_driver_memory_is_half_of_memtotal_up_to_24g(tmp_path):
     assert _driver_memory({}, str(meminfo)) == "24576m"
     assert _driver_memory({"SPARK_GRAFT_DRIVER_MEM": "2g"}, str(meminfo)) == "2g"
     assert _driver_memory({}, str(tmp_path / "missing")) == "24g"
+
+
+def test_new_sessions_inherit_the_returned_confs(spark):
+    """The session ``get_spark`` returns and a ``newSession()`` of it
+    agree on the shuffle width (the CPU budget) and keep the other
+    confs ``get_spark`` sets."""
+    got = get_spark("confs")
+    fresh = got.newSession()
+    for key, want in (
+        ("spark.sql.shuffle.partitions", str(_cpus())),
+        ("spark.sql.session.timeZone", "UTC"),
+        ("spark.sql.ansi.enabled", "false"),
+    ):
+        assert got.conf.get(key) == fresh.conf.get(key) == want, key
 
 
 _PROCESS = """

@@ -128,19 +128,17 @@ def test_weak_key_dictionary_only_in_session_module():
 def test_one_small_input_rule():
     """The small-input rules are constants in ``operators/localrel.py``
     on exact facts (``collect_if_small``'s row count, the stock fact's
-    bytes on disk): no env knob sizes a small path or a byte cap such as
-    ``ONE_PARTITION_MAX_BYTES``, and no module other than the quantile
-    plan choice in ``operators/ranking.py`` reads a Catalyst size
-    estimate (``sources/stock_csv.py`` routes on file sizes)."""
+    bytes on disk, the quantile route's largest group): no env knob
+    sizes a small path or a byte cap such as ``ONE_PARTITION_MAX_BYTES``,
+    and no module reads a Catalyst size estimate."""
     knob = re.compile(
         r"SPARK_GRAFT_\w*(SMALL|MAX)_BYTES"
         r"|(environ|getenv).*(SMALL|MAX)_BYTES|(SMALL|MAX)_BYTES.*(environ|getenv)"
     )
-    ranking = os.path.join("operators", "ranking.py")
     offenders = [
         f"{rel}:{lineno}"
         for rel, lineno, line in _package_lines()
-        if knob.search(line) or ("sizeInBytes" in line and rel != ranking)
+        if knob.search(line) or "sizeInBytes" in line
     ]
     assert offenders == []
 

@@ -7,7 +7,8 @@
   FIXTURES.md §1-style raw files: Date-ordered per-ticker files, and a
   cached fact with no Exchange and no global Sort under it, at most one
   partition per input file, each partition in Date order; also with null
-  sentinels in one ticker's Close and Volume cells;
+  sentinels in one ticker's Close and Volume cells, and over the
+  reference's six tickers;
 - the fact's two routes, one Date-sorted partition (input under the byte
   cap) and the union of file scans (over it), per-ticker files and the
   all-CSV fallback alike: the same rows from all 12 facade methods, no
@@ -131,10 +132,9 @@ def _refresh(spark, raw, out):
     return fact
 
 
-def _check_refresh(spark, tmp_path, null_prices: bool):
+def _check_refresh(spark, tmp_path, null_prices: bool, tickers=TICKERS):
     raw = tmp_path / "raw"
     raw.mkdir()
-    tickers = TICKERS
     days = {
         t: _write_raw(raw / f"{t}.csv", t, 60, seed, null_prices and t == "HVN")
         for seed, t in enumerate(tickers)
@@ -161,13 +161,17 @@ def _check_refresh(spark, tmp_path, null_prices: bool):
     assert (out / "cleaned" / "All.csv").read_bytes() == all_bytes
 
     with open(out / "olap_results" / "01_quarterly_price.csv", encoding="utf-8") as f:
-        assert next(csv.reader(f)) == ["Year", "Quarter", *tickers]
+        assert next(csv.reader(f)) == ["Year", "Quarter", *sorted(tickers)]
     for name in sorted(os.listdir(out / "datamining_results")):
         with open(out / "datamining_results" / name, encoding="utf-8") as f:
             assert len(list(csv.reader(f))) > 1, name
     assert len(os.listdir(out / "datamining_results")) == 4
     with open(out / "datamining_results" / "02_regression_next_day.csv", encoding="utf-8") as f:
-        assert sorted(r["Ticker"] for r in csv.DictReader(f)) == tickers
+        assert sorted(r["Ticker"] for r in csv.DictReader(f)) == sorted(tickers)
+    with open(out / "datamining_results" / "03_kmeans_clusters.csv", encoding="utf-8") as f:
+        clusters = {r["Ticker"]: r["Cluster"] for r in csv.DictReader(f)}
+    assert sorted(clusters) == sorted(tickers)
+    assert set(clusters.values()) == {"0", "1", "2"}
     charts = os.listdir(out / "olap_charts")
     assert len(charts) == 3 * len(tickers) + 4
     assert all((out / "olap_charts" / c).read_bytes()[:8] == b"\x89PNG\r\n\x1a\n" for c in charts)
@@ -178,6 +182,15 @@ def _check_refresh(spark, tmp_path, null_prices: bool):
 
 def test_refresh_on_synthetic_raw(spark, tmp_path):
     _check_refresh(spark, tmp_path, null_prices=False)
+
+
+def test_refresh_on_six_tickers(spark, tmp_path):
+    """The reference's shape: six tickers, unsorted, through every
+    refresh output, k-means included."""
+    _check_refresh(
+        spark, tmp_path, null_prices=False,
+        tickers=["HVN", "VJC", "AST", "NCT", "SCS", "VTR"],
+    )
 
 
 def test_refresh_with_null_prices_and_volumes(spark, tmp_path):
