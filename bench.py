@@ -32,7 +32,7 @@ def main() -> None:
     from stock_data_warehouse_analytics_spark.plans import get_queries
     from stock_data_warehouse_analytics_spark.session import get_spark
 
-    spark = get_spark("bench")
+    spark = get_spark("bench", inputs=[sf_dir])
     spark.sparkContext.setLogLevel("ERROR")
     qs = get_queries()
     names = [n for n in HEADLINE if n in qs]

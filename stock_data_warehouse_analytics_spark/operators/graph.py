@@ -9,7 +9,11 @@ information travels two hops per round — convergence in
 O(log diameter) rounds rather than O(diameter), the same idea that
 makes large-star/small-star (Kiveris et al., "Connected Components in
 MapReduce and Beyond") polylog.  The loop exits the first round that
-changes nothing.
+changes nothing.  If round ``max_iter`` still changes a label, one
+more job checks whether any edge joins two labels: if none does, the
+labels are final (each is then its component's minimum id); if one
+does, it raises :class:`ConvergenceError` rather than return
+unconverged labels.
 
 Scale notes:
 - each round is ONE join + ONE grouped min over (edges + 2·nodes)
@@ -27,10 +31,14 @@ from pyspark.sql import functions as F
 
 from .localrel import collect_if_small, literal_df
 
-__all__ = ["connected_components"]
+__all__ = ["ConvergenceError", "connected_components"]
 
 # node types a literal relation carries exactly
 _LITERAL_NODE_TYPES = ("bigint", "int", "smallint", "tinyint", "string")
+
+
+class ConvergenceError(RuntimeError):
+    """An iterative operator used up its rounds before its fixed point."""
 
 
 def connected_components(
@@ -42,7 +50,9 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``, where
     ``component`` is the minimum node id reachable via undirected
-    paths.  Deterministic by construction (min over a set)."""
+    paths.  Deterministic by construction (min over a set).  Raises
+    :class:`ConvergenceError` when, after ``max_iter`` rounds of the
+    distributed loop, an edge still joins two labels."""
     # materialize the edge list FIRST, then derive the symmetric
     # closure from the checkpointed copy — a union of two selects over
     # the raw plan would execute the (often expensive) upstream
@@ -93,8 +103,17 @@ def connected_components(
         changed = merged.filter(F.col("comp") != F.col("old_comp")).count()
         labels = merged.select("node", "comp")
         if changed == 0:
-            break
-    return labels
+            return labels
+    # labels only fall and always name a node of their own component,
+    # so labels that agree across every edge are the component minima
+    ends = [labels.select(F.col("node").alias(c), F.col("comp").alias(f"comp_{c}"))
+            for c in ("a", "b")]
+    split = fwd.join(ends[0], "a").join(ends[1], "b").filter(F.col("comp_a") != F.col("comp_b"))
+    if split.limit(1).count() == 0:
+        return labels
+    raise ConvergenceError(
+        f"connected_components: labels not converged after max_iter={max_iter} rounds"
+    )
 
 
 def _connected_components_driver(spark, pairs, node_t: str) -> DataFrame:

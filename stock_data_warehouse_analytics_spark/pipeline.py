@@ -222,7 +222,7 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--output", required=True, help="output root dir")
     args = p.parse_args(argv)
 
-    spark = get_spark("stock-pipeline")
+    spark = get_spark("stock-pipeline", inputs=[args.input])
     spark.sparkContext.setLogLevel("WARN")
     cleaned = os.path.join(args.output, "cleaned")
     fact = run_etl(spark, args.input, cleaned)

@@ -13,10 +13,14 @@ division — bit-identical in Spark (``DIV``) and DuckDB (``//``) for
 non-negative operands.  The oracle unrolls the same ``N_ITERS``
 iterations as chained CTEs.
 
-Scale note: the per-edge product ``rank * w * 85`` stays < 2⁶³ while
-``w`` (lineitems per nation-pair) < ~10¹³; for bigger graphs rescale
-``w`` to per-mille of the source's out-weight first (same shape, one
-more integer divide).
+Scale note: a rank is at most ``SCALE``, so the per-edge product
+``rank * w * 85`` stays < 2⁶³ while ``w`` (lineitems per nation-pair)
+< ~1.08·10¹¹.  The iteration itself runs in Python ints on the driver
+and cannot wrap, but past that bound the DuckDB oracle's bigint
+arithmetic raises, so :func:`_power_iterate` raises ``OverflowError``
+too rather than return ranks the oracle cannot check; bigger graphs
+would rescale ``w`` to per-mille of the source's out-weight first
+(same shape, one more integer divide).
 
 Companion to ``operators/graph.py`` (connected components via
 pointer-jumping label propagation, reference: the mining module's
@@ -37,6 +41,32 @@ from .registry import register
 N_ITERS = 8
 SCALE = 1_000_000
 _BASE_NUM = SCALE * 15 // 100  # damped teleport mass numerator: 150000 // n
+
+
+def _power_iterate(edges: list[tuple[int, int, int]]) -> dict[int, int]:
+    """Rank in micro-units of every node of the weighted ``(src, dst,
+    w)`` edge list after ``N_ITERS`` damped power-iteration rounds, in
+    the integer arithmetic of the DuckDB oracle.  Raises
+    ``OverflowError`` when an edge's ``rank * w * 85`` reaches 2⁶³,
+    where the oracle's bigint arithmetic errors."""
+    out_w: dict[int, int] = {}
+    for src, _dst, w in edges:
+        out_w[src] = out_w.get(src, 0) + w
+    nodes = sorted({src for src, _d, _w in edges} | {d for _s, d, _w in edges})
+    rank = {v: SCALE // len(nodes) for v in nodes}
+    base = _BASE_NUM // len(nodes) if nodes else 0
+    for _ in range(N_ITERS):
+        contrib: dict[int, int] = {}
+        for src, dst, w in edges:
+            product = rank[src] * w * 85
+            if product >= 1 << 63:
+                raise OverflowError(
+                    f"pagerank: rank {rank[src]} * w {w} * 85 on edge {src}->{dst} "
+                    "overflows bigint"
+                )
+            contrib[dst] = contrib.get(dst, 0) + product // (100 * out_w[src])
+        rank = {v: base + contrib.get(v, 0) for v in nodes}
+    return rank
 
 
 def _pagerank_oracle() -> str:
@@ -123,26 +153,8 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .collect()  # bounded: ≤ |nations|² rows by construction
     )
-    edges = [(int(r.src), int(r.dst), int(r.w)) for r in edge_rows]
-    out_w: dict[int, int] = {}
-    for src, _dst, w in edges:
-        out_w[src] = out_w.get(src, 0) + w
-    node_set = {src for src, _d, _w in edges} | {d for _s, d, _w in edges}
-    nodes = sorted(node_set)
-    n_nodes = len(nodes)
-    rank = {v: SCALE // n_nodes for v in nodes}
-    for _ in range(N_ITERS):
-        contrib: dict[int, int] = {}
-        for src, dst, w in edges:
-            part = (rank[src] * w * 85) // (100 * out_w[src])
-            contrib[dst] = contrib.get(dst, 0) + part
-        base = _BASE_NUM // n_nodes
-        rank = {v: base + contrib.get(v, 0) for v in nodes}
-    ranks = literal_df(
-        spark,
-        [(v, rank[v]) for v in nodes],
-        "node bigint, rank bigint",
-    )
+    rank = _power_iterate([(int(r.src), int(r.dst), int(r.w)) for r in edge_rows])
+    ranks = literal_df(spark, sorted(rank.items()), "node bigint, rank bigint")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         ranks.join(F.broadcast(n), F.col("node") == F.col("n_nationkey"))

@@ -20,6 +20,31 @@ the pyspark version and the launcher's classpath.  The first process
 for a key dumps it as its JVM exits and publishes it by an atomic
 rename; every later process maps it.  Deleting the directory resets
 it.  See :func:`_cds_choice` for when it is skipped.
+
+A ``local[...]`` session on small inputs runs one C1 and one C2 JIT
+compiler thread (``-XX:CICompilerCount=2``, :data:`JIT_COMPILER_THREADS`),
+the smallest tiered setup.  HotSpot sizes its compiler threads for idle
+cores (3 on 4 CPUs), but ``local[N]`` gives all N cores to task
+threads.  Its tiered policy drops queued compiles of methods gone cold,
+so with one C2 thread the code that is hot only briefly (Janino, task
+serialization, closure cleaning, Catalyst rules) is never C2-compiled,
+while code that stays hot still is.  Measured on one 4-core box only
+(PERF.md): short sessions on small inputs (perfbench's stock path on
+~0.1 MB of raw CSVs, and 8 registry queries at sf0.01) used about a
+quarter less CPU at the same wall time, but one long session of all
+333 registry queries took longer with it, 1–16% at sf0.1 (17 MB) and
+8–22% at sf0.01 (1.9 MB), three paired runs each.  The length of a
+session is not known at launch; the size of its input is, so
+:func:`get_spark` keeps the count only when the ``inputs`` a caller
+names total at most ``ONE_PARTITION_MAX_BYTES`` on disk (the package's
+small-input byte cap), which keeps HotSpot's count at sf0.1 but not for
+a long session on small inputs (ROADMAP open item 9).  A cluster
+master, whose driver runs no tasks, keeps HotSpot's count too.  The
+flag goes first in ``spark.driver.extraJavaOptions`` and
+HotSpot takes a flag's last occurrence, so a count in
+``spark-defaults.conf`` or ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` wins.  C1
+alone (``-XX:TieredStopAtLevel=1``) costs less CPU still on small runs,
+but it slows the heavy queries at sf0.1, so it is not used.
 """
 
 from __future__ import annotations
@@ -38,6 +63,8 @@ from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
+from .operators.localrel import ONE_PARTITION_MAX_BYTES
+
 __all__ = ["get_spark", "session_memo", "tune_for_engine"]
 
 _log = logging.getLogger(__name__)
@@ -45,6 +72,10 @@ _log = logging.getLogger(__name__)
 # Spark's default (100) evicts the code of a dashboard session before
 # its repeat calls come back to it; a static conf, so set at launch.
 CODEGEN_CACHE_ENTRIES = 4096
+# JIT compiler threads of a ``local[N]`` session on small inputs: one
+# C1, one C2 (see the module docstring).  Not C1 only
+# (TieredStopAtLevel=1): that slows the heavy queries at sf0.1.
+JIT_COMPILER_THREADS = 2
 
 
 def _cpus() -> int:
@@ -176,15 +207,19 @@ def _spark_home(environ) -> str | None:
         return None
 
 
-def _driver_java_options(environ, cds_options=()) -> str:
-    """``spark.driver.extraJavaOptions`` for :func:`get_spark`: the value
+def _driver_java_options(environ, cds_options=(),
+                         compiler_threads: int | None = JIT_COMPILER_THREADS) -> str:
+    """``spark.driver.extraJavaOptions`` for :func:`get_spark`:
+    ``-XX:CICompilerCount=<compiler_threads>`` (none when it is None), the value
     ``spark-defaults.conf`` sets (in ``$SPARK_CONF_DIR``, else the conf
     dir of the Spark home that ``spark-submit`` runs from), then
     ``SPARK_GRAFT_DRIVER_JAVA_OPTS``, then
     ``-XX:+ExplicitGCInvokesConcurrent``, then the class-archive flags of
     :func:`_cds_choice`.  A builder conf replaces the defaults file's
     value rather than adding to it, so the merge happens here.  A
-    missing conf dir or file contributes nothing."""
+    missing conf dir or file contributes nothing.  HotSpot takes the
+    last occurrence of a flag, so a compiler count given in the
+    defaults file or the env var overrides the one put first."""
     home = None if environ.get("SPARK_CONF_DIR") else _spark_home(environ)
     conf_dir = environ.get("SPARK_CONF_DIR") or (home and os.path.join(home, "conf"))
     lines = []
@@ -200,7 +235,9 @@ def _driver_java_options(environ, cds_options=()) -> str:
         if m:
             defaults = m.group(1).strip()
     opts = (defaults, environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "").strip())
-    return " ".join([*filter(None, opts), "-XX:+ExplicitGCInvokesConcurrent", *cds_options])
+    jit = [f"-XX:CICompilerCount={compiler_threads}"] if compiler_threads else []
+    return " ".join([*jit, *filter(None, opts), "-XX:+ExplicitGCInvokesConcurrent",
+                     *cds_options])
 
 
 # Directories the launcher puts on the classpath after the conf dir.  A
@@ -388,6 +425,22 @@ def _publish_archive(proc, archive: str) -> None:
     _log.debug("get_spark: cds=published key=%s", stem[len("cds-"):])
 
 
+def _compiler_threads(master: str, inputs) -> int | None:
+    """:data:`JIT_COMPILER_THREADS` for a ``local[...]`` master whose
+    ``inputs`` (files, or directories walked; a missing path counts
+    nothing) total at most ``ONE_PARTITION_MAX_BYTES`` on disk, else
+    None: HotSpot's own count."""
+    total = 0
+    for path in inputs:
+        if os.path.isfile(path):
+            total += os.path.getsize(path)
+        for root, _dirs, files in os.walk(path):
+            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    if re.fullmatch(r"local(\[.*\])?", master) and total <= ONE_PARTITION_MAX_BYTES:
+        return JIT_COMPILER_THREADS
+    return None
+
+
 def _driver_memory(environ, meminfo: str = "/proc/meminfo") -> str:
     """``spark.driver.memory`` default: half the host's ``MemTotal``, at
     most 24g; 24g when ``meminfo`` cannot be read."""
@@ -405,16 +458,24 @@ def get_spark(
     app_name: str = "stock-data-warehouse-analytics-spark",
     *,
     master: str | None = None,
+    inputs: tuple[str, ...] | list[str] = (),
 ) -> SparkSession:
+    """The package's session, launching its JVM if none runs yet.
+    ``inputs`` names the files or directories the session will read.
+    Under a ``local[...]`` master whose inputs total at most
+    :data:`~.operators.localrel.ONE_PARTITION_MAX_BYTES` on disk (or
+    that names none) the JVM runs :data:`JIT_COMPILER_THREADS` compiler
+    threads; otherwise HotSpot sizes them (see the module docstring)."""
     from pyspark import SparkContext
 
     cpus = _cpus()
+    master = master or f"local[{cpus}]"
     jvm_running = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
     conf_dir = os.environ.get("SPARK_CONF_DIR")
     cds = _cds_choice(os.environ, jvm_running)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -460,7 +521,8 @@ def get_spark(
         # under spark-submit client mode the driver JVM is already
         # started and this is a no-op either way.
         .config("spark.driver.extraJavaOptions",
-                _driver_java_options(os.environ, cds.java_options))
+                _driver_java_options(os.environ, cds.java_options,
+                                     _compiler_threads(master, inputs)))
         # Python workers connect back to the JVM over a local socket
         # with a default 15s auth/handshake window; raise it so a
         # saturated box can't kill a worker mid-handshake.  (NOT the

@@ -1,7 +1,7 @@
 """Equivalence checks for the iterative operators beyond the DuckDB
 oracle: PageRank vs an independent driver-side power iteration, the
 fixed-point PC1 vs numpy's exact eigendecomposition, and as-of
-tolerance limit behavior."""
+tolerance limit behavior; PageRank's bigint overflow guard."""
 
 from __future__ import annotations
 
@@ -64,6 +64,19 @@ def test_pagerank_matches_driver_side_power_iteration(spark):
         for r in QUERIES["graph_pagerank_nations"].fn(spark, SF_SMALL).collect()
     }
     assert got == expected
+
+
+def test_pagerank_raises_where_bigint_overflows():
+    """A lone node keeps rank 10**6 micro-units, so its self-loop weight
+    bounds ``rank * w * 85`` below 2**63 up to w ~ 1.085e11: just under
+    the bound the ranks come out, just over it the iteration raises,
+    as the DuckDB oracle's bigint arithmetic does."""
+    from stock_data_warehouse_analytics_spark.plans.graph_iter import _power_iterate
+
+    assert _power_iterate([(0, 0, 108_000_000_000)]) == {0: 1_000_000}
+    with pytest.raises(OverflowError, match="overflows bigint"):
+        _power_iterate([(0, 0, 110_000_000_000)])
+    assert _power_iterate([]) == {}
 
 
 def test_pc1_matches_numpy_power_iterate(spark):

@@ -9,7 +9,8 @@ registered queries:
   its largest group's counted rows, whatever Catalyst estimates;
 - ``connected_components`` must match a driver-side union-find on a
   pseudo-random graph (chains force multiple pointer-jump rounds), on
-  both its routes;
+  both its routes, and its loop must raise rather than return labels
+  that have not converged;
 - ``bucketed_global_rank_multi`` must give every ordering the ranks of
   ``row_number().over(Window.orderBy(...))``.
 """
@@ -193,6 +194,27 @@ def test_connected_components_matches_union_find(spark, monkeypatch):
             for r in connected_components(edf, max_iter=10).collect()
         }
         assert got == want
+
+
+def test_connected_components_loop_raises_when_not_converged(spark, monkeypatch):
+    """On the distributed loop a 64-node path changes labels in each of
+    its first 7 rounds.  With 6 rounds the loop raises instead of
+    returning half-propagated labels; with exactly 7 (the last round
+    still changed a label) and with the default budget it gives the
+    union-find answer: one component, labelled 0."""
+    from stock_data_warehouse_analytics_spark.operators import localrel
+    from stock_data_warehouse_analytics_spark.operators.graph import (
+        ConvergenceError,
+        connected_components,
+    )
+
+    monkeypatch.setattr(localrel, "DRIVER_MAX_ROWS", 0)
+    edf = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
+    with pytest.raises(ConvergenceError, match="max_iter=6"):
+        connected_components(edf, max_iter=6)
+    for kwargs in ({"max_iter": 7}, {}):
+        got = {r.node: r.comp for r in connected_components(edf, **kwargs).collect()}
+        assert got == {i: 0 for i in range(64)}, kwargs
 
 
 def test_bucketed_global_cumsum_equals_naive_window(spark):

@@ -1,7 +1,8 @@
 """``session.session_memo``: the one session-scoped staging cache,
 plus the structural guards that keep the package to one way to stage
-and one way to route small inputs; and ``get_spark``'s merge of the
-driver's Java options.
+and one way to route small inputs; ``get_spark``'s merge of the
+driver's Java options, and the compiler-thread count of the JVM it
+launched.
 
 Driver-only: no test here runs a Spark job.
 """
@@ -143,6 +144,7 @@ def test_one_small_input_rule():
     assert offenders == []
 
 
+JIT = "-XX:CICompilerCount=2"
 JAVA_GC = "-XX:+ExplicitGCInvokesConcurrent"
 
 
@@ -150,8 +152,9 @@ def test_driver_java_options_keep_spark_defaults(tmp_path, monkeypatch):
     """``get_spark``'s ``spark.driver.extraJavaOptions`` keeps the value
     of ``spark-defaults.conf`` (``$SPARK_CONF_DIR``, else
     ``$SPARK_HOME/conf``, else the conf dir of the home pyspark finds),
-    then ``SPARK_GRAFT_DRIVER_JAVA_OPTS``, then the GC flag; no JVM is
-    started."""
+    then ``SPARK_GRAFT_DRIVER_JAVA_OPTS``, then the GC flag, all after
+    the compiler-thread flag (absent when the count is None), so a
+    caller's own count comes last and wins; no JVM is started."""
     from pyspark import find_spark_home
 
     conf = tmp_path / "conf"
@@ -173,13 +176,16 @@ def test_driver_java_options_keep_spark_defaults(tmp_path, monkeypatch):
     opts = "-Dgraft=1"
     cases = [
         ({"SPARK_CONF_DIR": str(conf), "SPARK_HOME": str(home)},
-         f"-Dlast=1 -Xss4m {JAVA_GC}"),
+         f"{JIT} -Dlast=1 -Xss4m {JAVA_GC}"),
         ({"SPARK_CONF_DIR": str(conf), "SPARK_GRAFT_DRIVER_JAVA_OPTS": f" {opts} "},
-         f"-Dlast=1 -Xss4m {opts} {JAVA_GC}"),
-        ({"SPARK_CONF_DIR": "", "SPARK_HOME": str(home)}, f"-Dhome=1 {JAVA_GC}"),
-        ({"SPARK_HOME": str(tmp_path / "missing")}, JAVA_GC),
-        ({"SPARK_GRAFT_DRIVER_JAVA_OPTS": opts}, f"{opts} {JAVA_GC}"),
-        ({}, JAVA_GC),
+         f"{JIT} -Dlast=1 -Xss4m {opts} {JAVA_GC}"),
+        ({"SPARK_CONF_DIR": "", "SPARK_HOME": str(home)}, f"{JIT} -Dhome=1 {JAVA_GC}"),
+        ({"SPARK_HOME": str(tmp_path / "missing")}, f"{JIT} {JAVA_GC}"),
+        ({"SPARK_GRAFT_DRIVER_JAVA_OPTS": opts}, f"{JIT} {opts} {JAVA_GC}"),
+        # HotSpot takes a flag's last occurrence: the caller's count wins
+        ({"SPARK_GRAFT_DRIVER_JAVA_OPTS": "-XX:CICompilerCount=4"},
+         f"{JIT} -XX:CICompilerCount=4 {JAVA_GC}"),
+        ({}, f"{JIT} {JAVA_GC}"),
     ]
     # with SPARK_HOME absent, pyspark's own lookup names the home
     found = {"home": str(tmp_path / "missing")}
@@ -193,12 +199,56 @@ def test_driver_java_options_keep_spark_defaults(tmp_path, monkeypatch):
     for environ, want in cases:
         assert _driver_java_options(environ) == want, environ
     found["home"] = str(home)
-    assert _driver_java_options({}) == f"-Dhome=1 {JAVA_GC}"
+    assert _driver_java_options({}) == f"{JIT} -Dhome=1 {JAVA_GC}"
     assert _driver_java_options({"SPARK_GRAFT_DRIVER_JAVA_OPTS": opts}) == (
-        f"-Dhome=1 {opts} {JAVA_GC}"
+        f"{JIT} -Dhome=1 {opts} {JAVA_GC}"
     )
     assert _driver_java_options({"SPARK_CONF_DIR": str(conf)}) == (
-        f"-Dlast=1 -Xss4m {JAVA_GC}"
+        f"{JIT} -Dlast=1 -Xss4m {JAVA_GC}"
     )
     found["home"] = None
-    assert _driver_java_options({}) == JAVA_GC
+    assert _driver_java_options({}) == f"{JIT} {JAVA_GC}"
+    # no count (a larger input or a cluster master): HotSpot's own
+    assert _driver_java_options({"SPARK_GRAFT_DRIVER_JAVA_OPTS": opts}, (), None) == (
+        f"{opts} {JAVA_GC}"
+    )
+
+
+def test_compiler_threads_follow_master_and_input_bytes(tmp_path):
+    """``get_spark`` keeps one C2 thread for a ``local[...]`` master
+    whose named inputs total at most ``ONE_PARTITION_MAX_BYTES`` on
+    disk (or that names none), and leaves the count to HotSpot for a
+    larger input or a cluster master."""
+    from stock_data_warehouse_analytics_spark.operators.localrel import (
+        ONE_PARTITION_MAX_BYTES,
+    )
+    from stock_data_warehouse_analytics_spark.session import (
+        JIT_COMPILER_THREADS,
+        _compiler_threads,
+    )
+
+    data = tmp_path / "sf"
+    (data / "lineitem").mkdir(parents=True)
+    part = data / "lineitem" / "part-0.parquet"
+    part.write_bytes(b"x" * ONE_PARTITION_MAX_BYTES)
+    one_file = tmp_path / "HVN.csv"
+    one_file.write_bytes(b"x" * 10)
+    for master in ("local", "local[4]", "local[*]"):
+        assert _compiler_threads(master, ()) == JIT_COMPILER_THREADS
+        assert _compiler_threads(master, [str(data)]) == JIT_COMPILER_THREADS
+        assert _compiler_threads(master, [str(data), str(one_file)]) is None
+        assert _compiler_threads(master, [str(tmp_path / "missing")]) == JIT_COMPILER_THREADS
+    (data / "nation.parquet").write_bytes(b"x")
+    assert _compiler_threads("local[4]", [str(data)]) is None
+    for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
+        assert _compiler_threads(master, ()) is None
+
+
+def test_live_jvm_runs_two_compiler_threads(spark):
+    """The ``local[N]`` session ``get_spark`` launched for the tests,
+    which names no inputs, runs one C1 and one C2 compiler thread."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"

@@ -34,7 +34,7 @@ def main() -> int:
     from stock_data_warehouse_analytics_spark.plans import get_queries
     from stock_data_warehouse_analytics_spark.session import get_spark
 
-    spark = get_spark("qtime")
+    spark = get_spark("qtime", inputs=[args.sf_dir])
     spark.sparkContext.setLogLevel("ERROR")
     qs = get_queries()
     if not args.no_warmup:

@@ -8,9 +8,12 @@ raw per-ticker CSVs in RAW_DIR (outputs under OUT_DIR, a temp dir by
 default), then every ``StockWarehouse`` method once with its result
 collected, all in one session.  Prints one line per step: wall seconds,
 CPU seconds of this process tree (driver Python, JVM, Python workers),
-CPU seconds of the JVM alone, Spark jobs, and whole-stage codegen
-compiles; then a ``refresh.total`` and a ``facade.total`` line with the
-sums of each part.  A warm-up query runs first, so step 1 does not carry
+CPU seconds of the JVM alone, seconds its JIT compiler threads spent
+compiling (the JVM's ``CompilationMXBean``, which still counts compiler
+threads that have exited; it books a compile's elapsed time when the
+compile ends, so a short step can show more than its JVM CPU), Spark
+jobs, and whole-stage codegen compiles; then a ``refresh.total`` and a
+``facade.total`` line with the sums of each part.  A warm-up query runs first, so step 1 does not carry
 the session's first-use cost.
 """
 
@@ -71,29 +74,35 @@ def main() -> int:
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS", "--conf spark.ui.showConsoleProgress=false pyspark-shell"
     )
-    spark = get_spark("stock-steps")
+    spark = get_spark("stock-steps", inputs=[args.input])
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
     compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = sc._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     spark.range(1 << 16).selectExpr("sum(id % 7)").collect()
 
-    print(f"{'step':<34}{'wall_s':>8}{'cpu_s':>8}{'jvm_s':>8}{'jobs':>6}{'compiles':>9}")
+    print(f"{'step':<34}{'wall_s':>8}{'cpu_s':>8}{'jvm_s':>8}{'jit_s':>8}{'jobs':>6}"
+          f"{'compiles':>9}")
     totals: dict[str, list[float]] = {}
 
-    def row(name: str, wall: float, cpu: float, jvm_s: float, jobs: int, n: int) -> None:
-        print(f"{name:<34}{wall:>8.2f}{cpu:>8.2f}{jvm_s:>8.2f}{jobs:>6}{n:>9}", flush=True)
+    def row(name: str, wall: float, cpu: float, jvm_s: float, jit_s: float, jobs: int,
+            n: int) -> None:
+        print(f"{name:<34}{wall:>8.2f}{cpu:>8.2f}{jvm_s:>8.2f}{jit_s:>8.2f}{jobs:>6}{n:>9}",
+              flush=True)
 
     def step(name: str, fn):
         sc.setJobGroup(name, name)
         c0, j0, n0 = cpu_s(os.getpid()), cpu_s(jvm_pid, tree=False), compiles.getCount()
+        jit0 = jit.getTotalCompilationTime()
         t0 = time.perf_counter()
         result = fn()
         wall = time.perf_counter() - t0
         cpu = cpu_s(os.getpid()) - c0
         jvm_s = cpu_s(jvm_pid, tree=False) - j0
+        jit_s = (jit.getTotalCompilationTime() - jit0) / 1000
         jobs = len(sc.statusTracker().getJobIdsForGroup(name))
-        parts = (wall, cpu, jvm_s, jobs, compiles.getCount() - n0)
+        parts = (wall, cpu, jvm_s, jit_s, jobs, compiles.getCount() - n0)
         row(name, *parts)
         total = totals.setdefault(name.split(".")[0] + ".total", [0] * len(parts))
         total[:] = map(sum, zip(total, parts))
