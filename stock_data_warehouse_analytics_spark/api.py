@@ -6,13 +6,16 @@ re-runs per widget event, as DataFrame-returning methods on one object.
 (session, input directory) in ``session_memo``, shared by every instance
 and by the refresh, whose sinks (``pipeline``) call these same methods.
 Result tables are lazy plans over the fact and the OLAP and mining frames
-prepared once per instance.  A raw fact whose files total at most
-``localrel.ONE_PARTITION_MAX_BYTES`` (the dashboard's ~1.3k rows) is one
-Date-sorted partition, so no call plans a shuffle above it and each
-widget event pays about one Spark job, not one per Exchange; a larger
-fact keeps one partition per file and the distributed plans.  A UI
-(streamlit or otherwise) binds widgets to these methods; the engine ends
-here.
+prepared once per instance.  The OLAP pivots take the instance's
+``tickers``, one collect on first use; the operators they call only
+build plans.  ``session_memo`` is the only cache shared across
+instances, and no process-global mode changes a result.  A raw fact
+whose files total at most ``localrel.ONE_PARTITION_MAX_BYTES`` (the
+dashboard's ~1.3k rows) is one Date-sorted partition, so no call plans
+a shuffle above it and each widget event pays about one Spark job, not
+one per Exchange; a larger fact keeps one partition per file and the
+distributed plans.  A UI (streamlit or otherwise) binds widgets to these
+methods; the engine ends here.
 """
 
 from __future__ import annotations
@@ -74,6 +77,13 @@ class StockWarehouse:
         return prepare_olap_frame(self.fact)
 
     @cached_property
+    def tickers(self) -> list[str]:
+        """The sorted distinct tickers with OLAP rows: the pivot columns
+        of ``quarterly_price`` and ``monthly_volume``, one collect per
+        instance."""
+        return sorted(r.Ticker for r in self._olap.select("Ticker").distinct().collect())
+
+    @cached_property
     def _mining(self) -> DataFrame:
         from .operators.stock_mining import prepare_mining_frame
 
@@ -84,7 +94,7 @@ class StockWarehouse:
     def quarterly_price(self) -> DataFrame:
         from .operators.stock_olap import quarterly_price
 
-        return quarterly_price(self._olap)
+        return quarterly_price(self._olap, self.tickers)
 
     def yearly_growth(self) -> DataFrame:
         from .operators.stock_olap import yearly_growth
@@ -94,7 +104,7 @@ class StockWarehouse:
     def monthly_volume(self) -> DataFrame:
         from .operators.stock_olap import monthly_volume
 
-        return monthly_volume(self._olap)
+        return monthly_volume(self._olap, self.tickers)
 
     def stats_panel(self, year: int = 2025) -> DataFrame:
         from .operators.stock_olap import stats_panel

@@ -202,6 +202,8 @@ def kmeans_exact_small(features: DataFrame, k: int = 3) -> DataFrame:
             best, best_sse = a, sse
     pdf["Cluster"] = best
     spark = features.sparkSession
+    # pandas through Arrow gives a LocalRelation, whose collect starts no
+    # job; a localrel.literal_df result (Range + explode) starts one.
     return spark.createDataFrame(pdf)
 
 

@@ -91,18 +91,20 @@ def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[st
     volume bar, plus the combined monthly-close multi-line, quarterly
     price heatmap, daily-return box plot and volume-vs-return scatter.
 
-    The heatmap is the facade's ``quarterly_price``, and the box-plot
-    percentiles and monthly-close pivot are Spark aggregates.  The
-    per-ticker charts and the scatter draw raw points: the year-filtered
-    rows (with the lagged daily ``Return``) are collected once, ordered
-    by (Ticker, Date).  Null prices, volumes and returns are skipped, as
-    pandas' plots and means skip NaN.  Returns the written paths."""
+    The per-ticker charts and the scatter draw raw points: the
+    year-filtered rows (with the lagged daily ``Return``) are collected
+    once, ordered by (Ticker, Date), and give the ticker list.  The
+    heatmap (table A1, ``quarterly_price``), the monthly-close pivot and
+    the box-plot percentiles are Spark aggregates; both pivots take that
+    list, so the charts run no ticker enumeration of their own.  Null
+    prices, volumes and returns are skipped, as pandas' plots and means
+    skip NaN.  Returns the written paths."""
     import datetime
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .operators.stock_olap import monthly_close_pivot
+    from .operators.stock_olap import monthly_close_pivot, quarterly_price
     from .sources.charts import bar_chart, box_plot, heatmap, line_chart, scatter_chart
 
     os.makedirs(charts_dir, exist_ok=True)
@@ -172,7 +174,7 @@ def run_charts(spark: SparkSession, fact: DataFrame, charts_dir: str) -> list[st
 
     # reference chart parity beyond line/bar (olap_analysis.py:179-184
     # heatmap; datavisualization.py:378-389 boxplot, :652,770 scatter)
-    qp = wh.quarterly_price().collect()
+    qp = quarterly_price(wh._olap, tickers).collect()
     save(
         heatmap(
             [f"{r.Year}Q{r.Quarter}" for r in qp],

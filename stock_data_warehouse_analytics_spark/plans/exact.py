@@ -14,15 +14,12 @@ value-hash comparison.  The fix used throughout ``plans/``:
 So ``avg = CAST(decimal_sum AS DOUBLE) / count`` and
 ``var_samp = (m2 - s*s/n) / (n-1)`` are bit-identical across engines.
 
-This is a *verification* technique: production aggregates over 100 TB
-should (and in ``bench.py``-labelled fast variants, do) use plain double
-sums, which are ~2× cheaper than decimal.  The plans expose the exact
-variant because correctness-vs-oracle is the driver's gate.
+This is a *verification* technique: plain double sums are ~2× cheaper
+than decimal, but correctness against the oracle is the gate, so every
+plan aggregates exactly.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -39,32 +36,9 @@ from pyspark.sql import functions as F
 _PREC, _SCALE = 38, 6
 _SUM_TYPE = f"decimal({_PREC - 10},{_SCALE})"  # Spark sum() adds 10 to precision
 
-# Fast mode: plain double sums instead of decimal moments.  Throughput
-# path for production runs where last-ulp cross-engine parity is not
-# required (results differ from the exact mode only by float summation
-# order, i.e. ~1e-12 relative).  Default OFF — the driver's correctness
-# gate and every oracle comparison require the exact mode.  Enable via
-# SPARK_GRAFT_FAST_AGG=1 or set_fast_aggregates(True).
-_FAST = os.environ.get("SPARK_GRAFT_FAST_AGG", "").lower() in ("1", "true", "yes")
-
-
-def set_fast_aggregates(on: bool) -> None:
-    """Toggle fast (plain-double) aggregate mode for subsequently BUILT
-    plans (already-built DataFrames keep their mode)."""
-    global _FAST
-    _FAST = bool(on)
-
-
-def fast_aggregates_enabled() -> bool:
-    return _FAST
-
-
 def dsum(col: Column | str) -> Column:
-    """Order-independent exact sum of a double expression → double
-    (plain double sum in fast mode)."""
+    """Order-independent exact sum of a double expression → double."""
     c = F.col(col) if isinstance(col, str) else col
-    if _FAST:
-        return F.sum(c)
     return F.sum(c.cast(_SUM_TYPE)).cast("double")
 
 
@@ -113,13 +87,6 @@ def dstddev_pop(col: Column | str) -> Column:
     return F.sqrt((m2 - s * s / n) / n)
 
 
-def sql_dstddev_pop(expr: str) -> str:
-    s = sql_dsum(expr)
-    m2 = sql_dsum(f"({expr}) * ({expr})")
-    n = f"COUNT({expr})"
-    return f"SQRT((({m2}) - ({s}) * ({s}) / ({n})) / ({n}))"
-
-
 def _complete_pair(x: Column, y: Column) -> tuple[Column, Column]:
     """Mask both inputs to rows where BOTH are non-null — covar/corr are
     pairwise-complete statistics, so every moment (including the
@@ -138,24 +105,6 @@ def _sql_complete_pair(ex: str, ey: str) -> tuple[str, str]:
     )
 
 
-def dcovar_samp(x: Column | str, y: Column | str) -> Column:
-    cx = F.col(x) if isinstance(x, str) else x
-    cy = F.col(y) if isinstance(y, str) else y
-    mx, my = _complete_pair(cx, cy)
-    sx, sy = dsum(mx), dsum(my)
-    sxy = dsum(mx * my)
-    n = F.count(mx * my)
-    return (sxy - sx * sy / n) / (n - F.lit(1))
-
-
-def sql_dcovar_samp(ex: str, ey: str) -> str:
-    mx, my = _sql_complete_pair(ex, ey)
-    sx, sy = sql_dsum(mx), sql_dsum(my)
-    sxy = sql_dsum(f"({mx}) * ({my})")
-    n = f"COUNT(({mx}) * ({my}))"
-    return f"((({sxy}) - ({sx}) * ({sy}) / ({n})) / (({n}) - 1))"
-
-
 # ---------------------------------------------------------------------------
 # Windowed variants: same exact-decimal-moment technique over window frames.
 # DuckDB computes sliding sums with a segment tree (different add order than
@@ -165,8 +114,6 @@ def sql_dcovar_samp(ex: str, ey: str) -> str:
 
 def dsum_w(col: Column | str, w) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    if _FAST:
-        return F.sum(c).over(w)
     return F.sum(c.cast(_SUM_TYPE)).over(w).cast("double")
 
 

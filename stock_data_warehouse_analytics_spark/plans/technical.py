@@ -10,9 +10,8 @@ deterministic order — same series the W8/W9 rolling queries use).
 100 TB design notes:
 - one hash-partitioned shuffle on the series key, then every expression
   is whole-stage-codegen'd JVM arithmetic — no UDFs, no second pass;
-- rolling moments use the exact-decimal trick (``plans/exact.py``) only
-  because the driver's oracle hash-compares values; the fast-mode flag
-  swaps them for plain double sums;
+- rolling moments use the exact-decimal trick (``plans/exact.py``)
+  because the driver's oracle hash-compares values;
 - the EWMA is deliberately *bounded-lookback* (the (1−α)^j tail beyond
   L=10 rows weighs < 6% here and is dropped): an unbounded EWMA is a
   sequential recurrence that cannot be a frame aggregate — the bounded

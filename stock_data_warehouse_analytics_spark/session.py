@@ -137,9 +137,12 @@ def session_memo(spark: SparkSession, key, build):
     return per_session[key]
 
 
-# weak so (a) entries die with their session and (b) a NEW session
-# allocated at a garbage-collected session's address is never
-# mistaken for an already-shipped one (the id()-in-a-set bug)
+# SparkContexts whose workers have the package zip.  Keyed on the
+# context, not the session: ``addPyFile`` changes the context, which
+# every ``newSession()`` shares.  Weak so (a) entries die with their
+# context and (b) a NEW context allocated at a garbage-collected one's
+# address is never mistaken for an already-shipped one (the
+# id()-in-a-set bug)
 _SHIPPED: "weakref.WeakSet" = weakref.WeakSet()
 
 
@@ -150,9 +153,10 @@ def _ship_package(spark: SparkSession) -> None:
     through (a module-level helper captured in a closure) would fail
     on an externally provided session whose workers don't have the
     repo on PYTHONPATH.  Shipping a zip via ``addPyFile`` makes that
-    failure mode impossible.  Idempotent per session; best-effort (a
-    cluster with a read-only tmp just keeps the by-value discipline)."""
-    if spark in _SHIPPED:
+    failure mode impossible.  Idempotent per SparkContext; best-effort
+    (a cluster with a read-only tmp just keeps the by-value discipline)."""
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
         return
     try:
         import tempfile
@@ -187,8 +191,8 @@ def _ship_package(spark: SparkSession) -> None:
                             )
                             zf.write(full, rel)
             os.replace(tmp, zpath)
-        spark.sparkContext.addPyFile(zpath)
-        _SHIPPED.add(spark)
+        sc.addPyFile(zpath)
+        _SHIPPED.add(sc)
     except Exception:  # noqa: BLE001 — defensive shipping only
         pass
 

@@ -1,63 +1,10 @@
-"""Fast-aggregate mode (plain double sums) must agree with the exact
-decimal-moment mode to float-noise tolerance and restore cleanly."""
+"""Accuracy audits of the approximate aggregates (HLL++ distinct
+counts, quantile sketches) and value identity of the session-staged
+quantile panel."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
-
-from stock_data_warehouse_analytics_spark.plans import exact as ex
-
 SF = "/root/testdata/sf0.01"
-
-
-@pytest.fixture
-def fast_mode():
-    ex.set_fast_aggregates(True)
-    yield
-    ex.set_fast_aggregates(False)
-
-
-def test_fast_mode_matches_exact_within_float_noise(spark, fast_mode):
-    from stock_data_warehouse_analytics_spark.plans.registry import (
-        QUERIES,
-        get_queries,
-    )
-
-    get_queries()
-    name = "q1_pricing_summary"
-
-    fast_rows = QUERIES[name].fn(spark, SF).collect()
-    ex.set_fast_aggregates(False)
-    exact_rows = QUERIES[name].fn(spark, SF).collect()
-
-    assert len(fast_rows) == len(exact_rows)
-    for fr, er in zip(fast_rows, exact_rows):
-        for col in fr.asDict():
-            fv, evv = fr[col], er[col]
-            if isinstance(fv, float):
-                assert math.isclose(fv, evv, rel_tol=1e-9, abs_tol=1e-9), (
-                    col,
-                    fv,
-                    evv,
-                )
-            else:
-                assert fv == evv, (col, fv, evv)
-
-
-def test_fast_mode_changes_plan_to_plain_double_sum(spark, fast_mode):
-    from stock_data_warehouse_analytics_spark.plans.registry import (
-        QUERIES,
-        get_queries,
-    )
-
-    get_queries()
-    fast_plan = QUERIES["q1_pricing_summary"].fn(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
-    assert "decimal" not in fast_plan.lower(), fast_plan
-    ex.set_fast_aggregates(False)
-    exact_plan = QUERIES["q1_pricing_summary"].fn(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
-    assert "decimal" in exact_plan.lower()
 
 
 def test_approx_quantile_audit_bounds(spark):

@@ -674,28 +674,56 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
                 spark.conf.set(k, v)
 
 
-def test_ticker_pivot_enumeration_cached(spark):
-    """The stock-OLAP pivot-value enumeration (distinct Ticker) must run
-    ONE scan per semantically-equal fact per session, not one per pivot
-    call (VERDICT r02 'What's wrong' #2)."""
+def test_warehouse_tickers_one_job_and_pivot_parity(spark):
+    """The stock pivots' ticker list is a property of the facade: on one
+    ``StockWarehouse``, ``tickers`` and building ``quarterly_price``,
+    ``monthly_volume`` and ``per_ticker_quarterly_stats`` start exactly
+    one job (the ticker collect) before any result is collected; the
+    operators themselves only build plans.  Called with ``tickers=None``
+    the pivots (Spark's own sorted pivot-values pass) give the same
+    columns and rows as with the explicit list.  A ticker with rows only
+    before the OLAP year filter is not a pivot column, and a ticker
+    missing a month gets a 0 volume there."""
     from pyspark.sql import functions as F
 
+    from stock_data_warehouse_analytics_spark.api import StockWarehouse
     from stock_data_warehouse_analytics_spark.operators import stock_olap
 
-    rows = [
-        ("AAA", f"2024-0{m}-01", 10.0 + m, 100 + m) for m in range(1, 7)
-    ] + [("BBB", f"2024-0{m}-01", 20.0 + m, 200 + m) for m in range(1, 7)]
+    rows = (
+        [("BBB", f"2024-0{m}-01", 20.0 + m, 200 + m) for m in range(1, 7)]
+        + [("AAA", f"2024-0{m}-01", 10.0 + m, 100 + m) for m in range(1, 7)]
+        + [("CCC", f"2024-0{m}-01", 30.0 + m, 300 + m) for m in (2, 5)]
+        + [("OLD", "2023-06-01", 5.0, 50)]
+    )
     fact = (
         spark.createDataFrame(rows, ["Ticker", "Date", "Close", "Volume"])
         .withColumn("Date", F.to_date("Date"))
+        .coalesce(1)
     )
-    df = stock_olap.prepare_olap_frame(fact)
-    before = stock_olap._TICKER_SCANS[0]
-    stock_olap.quarterly_price(df).collect()
-    stock_olap.monthly_volume(df).collect()
-    stock_olap.monthly_close_pivot(df).collect()
-    scans = stock_olap._TICKER_SCANS[0] - before
-    assert scans == 1, f"expected 1 enumeration scan, got {scans}"
+    wh = StockWarehouse.over(fact)
+    sc = spark.sparkContext
+    group = "warehouse-tickers"
+    sc.setJobGroup(group, group)
+    try:
+        tickers = wh.tickers
+        frames = {
+            "quarterly_price": wh.quarterly_price(),
+            "monthly_volume": wh.monthly_volume(),
+            "per_ticker_quarterly_stats": wh.per_ticker_quarterly_stats(),
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert tickers == ["AAA", "BBB", "CCC"]
+    assert wh.tickers is tickers  # one collect per instance
+
+    for name in ("quarterly_price", "monthly_volume"):
+        explicit = frames[name]
+        implicit = getattr(stock_olap, name)(wh._olap)
+        assert implicit.columns == explicit.columns == [*explicit.columns[:2], *tickers]
+        assert implicit.collect() == explicit.collect(), name
+    assert [r.CCC for r in frames["monthly_volume"].collect()] == [0, 302, 0, 0, 305, 0]
+    assert frames["per_ticker_quarterly_stats"].count() == 6
 
 
 @pytest.mark.parametrize(

@@ -2,7 +2,7 @@
 plus the structural guards that keep the package to one way to stage
 and one way to route small inputs; ``get_spark``'s merge of the
 driver's Java options, and the compiler-thread count of the JVM it
-launched.
+launched, and the package zip it ships once per SparkContext.
 
 Driver-only: no test here runs a Spark job.
 """
@@ -117,13 +117,32 @@ def _package_lines():
 def test_weak_key_dictionary_only_in_session_module():
     """Every session-scoped cache goes through ``session_memo``: a
     hand-rolled ``WeakKeyDictionary`` anywhere else in the package is
-    a second staging path."""
+    a second staging path, and a cache keyed on plan semantics
+    (``semanticHash``/``sameSemantics``) is one with its own staleness
+    rule."""
+    marks = re.compile(r"WeakKeyDictionary|semanticHash|sameSemantics")
     offenders = [
         f"{rel}:{lineno}"
         for rel, lineno, line in _package_lines()
-        if "WeakKeyDictionary" in line and rel != "session.py"
+        if marks.search(line) and rel != "session.py"
     ]
     assert offenders == []
+
+
+def test_package_shipped_once_per_spark_context(spark):
+    """``addPyFile`` changes the SparkContext, which every
+    ``newSession()`` shares: tuning new sessions leaves one package zip
+    among the context's Python includes, not one per session."""
+    from stock_data_warehouse_analytics_spark.session import tune_for_engine
+
+    for _ in range(2):
+        tune_for_engine(spark.newSession())
+    zips = [
+        f
+        for f in spark.sparkContext._python_includes
+        if f.startswith("stock_data_warehouse_analytics_spark_pyfiles_")
+    ]
+    assert len(zips) == 1, zips
 
 
 def test_one_small_input_rule():
