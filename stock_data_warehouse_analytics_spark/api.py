@@ -13,7 +13,7 @@ instances, and no process-global mode changes a result.  A raw fact
 whose files total at most ``localrel.ONE_PARTITION_MAX_BYTES`` (the
 dashboard's ~1.3k rows) is one Date-sorted partition, so no call plans
 a shuffle above it and each widget event pays about one Spark job, not
-one per Exchange; a larger fact keeps one partition per file and the
+one per Exchange; a larger fact keeps its scan's file splits and the
 distributed plans.  A UI (streamlit or otherwise) binds widgets to these
 methods; the engine ends here.
 """

@@ -53,12 +53,14 @@ def parse_volume(col: Column) -> Column:
     after the double multiply (cast long matches Python int())."""
     s = _cleaned_str(col)
     num_str = F.regexp_extract(s, r"^(-?[\d\.]+)([KkMmBb]?)$", 1)
-    suffix = F.upper(F.regexp_extract(s, r"^(-?[\d\.]+)([KkMmBb]?)$", 2))
+    suffix = F.regexp_extract(s, r"^(-?[\d\.]+)([KkMmBb]?)$", 2)
     num = num_str.try_cast("double")
+    # both cases listed, no case mapping: Spark maps case through ICU,
+    # whose first use in a JVM costs seconds of CPU (PERF.md)
     mult = (
-        F.when(suffix == "K", F.lit(1_000.0))
-        .when(suffix == "M", F.lit(1_000_000.0))
-        .when(suffix == "B", F.lit(1_000_000_000.0))
+        F.when(suffix.isin("K", "k"), F.lit(1_000.0))
+        .when(suffix.isin("M", "m"), F.lit(1_000_000.0))
+        .when(suffix.isin("B", "b"), F.lit(1_000_000_000.0))
         .otherwise(F.lit(1.0))
     )
     matched = num_str != ""

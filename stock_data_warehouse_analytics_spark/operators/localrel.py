@@ -38,9 +38,10 @@ Catalyst estimate:
   :data:`DRIVER_MAX_ROWS` rows, counted;
 - :data:`ONE_PARTITION_MAX_BYTES` puts the raw stock fact in one
   partition (``sources.stock_csv.load_stock_facts``): input files
-  totalling at most that many bytes on disk, summed on the driver
-  (``session.get_spark`` keeps one C2 JIT thread under the same cap on
-  the inputs a caller names);
+  totalling at most that many bytes on disk, summed on the driver;
+  above it the fact keeps its one scan's file splits, not one partition
+  per file (``session.get_spark`` keeps one C2 JIT thread under the
+  same cap on the inputs a caller names);
 - :data:`QUANTILE_GROUP_MAX_ROWS` sends ``ranking.grouped_exact_quantiles``
   down its zero-cut route (one whole-group sort per group, no sketch
   pass): a largest group of at most that many rows, counted.

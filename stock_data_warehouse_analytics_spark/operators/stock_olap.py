@@ -47,7 +47,6 @@ def yearly_growth(
     df: DataFrame,
     from_year: int = 2024,
     to_year: int = 2025,
-    tickers: list[str] | None = None,
 ) -> DataFrame:
     """A4 — golden ``02_growth_24_25.csv``: per-ticker yearly avg Close
     unstacked wide + growth% (olap_analysis.py:46-48; J2 same-row

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .api import StockWarehouse
 from .schemas import TICKERS
-from .sources.stock_csv import write_csv_single
+from .sources.stock_csv import csv_lines, write_csv_single, write_lines
 
 __all__ = ["run_etl", "run_olap", "run_mining", "run_charts", "main"]
 
@@ -48,19 +48,23 @@ def run_etl(
     spark: SparkSession, input_dir: str, output_dir: str
 ) -> DataFrame:
     """ETL: raw CSVs → cleaned per-ticker CSVs + merged All.csv
-    (preprocess_stocks.py:189-230).  Returns the merged fact DataFrame:
+    (preprocess_stocks.py:189-230), from one collect of the fact's CSV
+    lines ordered by (Ticker, Date): a file per ticker of ``TICKERS``
+    present, then All.csv.  Returns the merged fact DataFrame:
     the session's cached ``StockWarehouse(spark, input_dir).fact``, the
     one bounded intermediate every stage and the dashboard reuse.  Under
     ``session_memo``'s staleness contract, refreshing a rewritten input
     directory needs a fresh session."""
     os.makedirs(output_dir, exist_ok=True)
     fact = StockWarehouse(spark, input_dir).fact
-    present = {r.Ticker for r in fact.select("Ticker").distinct().collect()}
+    header, rows = csv_lines(fact.orderBy("Ticker", "Date"), "Ticker")
+    lines: dict[str, list[str]] = {}
+    for t, line in rows:
+        lines.setdefault(t, []).append(line)
     for t in TICKERS:
-        if t in present:
-            per = fact.filter(fact.Ticker == t).orderBy("Date")
-            write_csv_single(per, os.path.join(output_dir, f"{t}.csv"))
-    write_csv_single(fact.orderBy("Ticker", "Date"), os.path.join(output_dir, "All.csv"))
+        if t in lines:
+            write_lines(os.path.join(output_dir, f"{t}.csv"), header, lines[t])
+    write_lines(os.path.join(output_dir, "All.csv"), header, (r[1] for r in rows))
     return fact
 
 

@@ -10,9 +10,14 @@
   sentinels in one ticker's Close and Volume cells, and over the
   reference's six tickers;
 - the fact's two routes, one Date-sorted partition (input under the byte
-  cap) and the union of file scans (over it), per-ticker files and the
+  cap) and the scan's file splits (over it), per-ticker files and the
   all-CSV fallback alike: the same rows from all 12 facade methods, no
-  shuffle above the one-partition fact, and no job to choose the route;
+  shuffle above the one-partition fact, one CSV scan and no job to load;
+- the ETL in one scan and one collect: two jobs for ``run_etl``,
+  lower-case volume suffixes, files with different headers joined by
+  name, a file that matches two ticker patterns under both tickers, and
+  Spark's names for empty or repeated header names;
+- no case mapping and no ``input_file_name`` in the stock-path modules;
 - a dashboard opened after the refresh in the same session reads the
   refresh's fact (one raw load) and serves the same tables;
 - ``run_olap`` runs over one ticker; ``run_mining`` over one or two
@@ -115,6 +120,10 @@ def _write_raw(
 
 
 TICKERS = ["AST", "HVN", "NCT"]
+PKG_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "stock_data_warehouse_analytics_spark",
+)
 
 
 def _refresh(spark, raw, out):
@@ -290,10 +299,11 @@ FACADE = [
 def test_fact_routes_serve_the_same_rows(spark, tmp_path, monkeypatch, names):
     """Raw input under ``localrel.ONE_PARTITION_MAX_BYTES`` gives a
     one-partition fact with no shuffle above it in any facade plan; a cap
-    of 0 forces the other route, one partition per file.  Both routes
-    serve the same rows from every facade method, the load starts one job
-    per CSV scan (its header read) on both, so choosing the route starts
-    none, and file names that match no ticker (the all-CSV fallback)
+    of 0 forces the other route, the scan's own file splits, not
+    coalesced.  Both routes serve the same rows from every facade method
+    and read the files in one CSV scan; loading starts no job on either
+    (the header is read on the driver, the route is chosen from file
+    sizes), and file names that match no ticker (the all-CSV fallback)
     still give the Ticker."""
     from stock_data_warehouse_analytics_spark.api import StockWarehouse
     from stock_data_warehouse_analytics_spark.operators import localrel
@@ -308,20 +318,17 @@ def test_fact_routes_serve_the_same_rows(spark, tmp_path, monkeypatch, names):
     monkeypatch.setattr(
         stock_csv, "read_raw", lambda *a, **k: scans.append(a) or read_raw(*a, **k)
     )
-    sc = spark.sparkContext
     facts, jobs = {}, {}
     for route, cap in (("one", localrel.ONE_PARTITION_MAX_BYTES), ("over_cap", 0)):
         monkeypatch.setattr(localrel, "ONE_PARTITION_MAX_BYTES", cap)
-        group = f"load-{route}-{tmp_path.name}"
-        sc.setJobGroup(group, group)
-        try:
-            facts[route] = stock_csv.load_stock_facts(spark, str(raw)).cache()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[route] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs["one"] == jobs["over_cap"] == len(scans) / 2
+        jobs[route] = _jobs_of(
+            spark, f"load-{route}-{tmp_path.name}",
+            lambda: facts.setdefault(route, stock_csv.load_stock_facts(spark, str(raw)).cache()),
+        )
+    assert jobs == {"one": 0, "over_cap": 0}
+    assert len(scans) == 2  # one scan per load
     assert facts["one"].rdd.getNumPartitions() == 1
-    assert facts["over_cap"].rdd.getNumPartitions() == len(names)
+    assert facts["over_cap"].rdd.getNumPartitions() > 1
     tickers = sorted(r.Ticker for r in facts["one"].select("Ticker").distinct().collect())
     assert tickers == sorted(n.upper() for n in names)
 
@@ -334,3 +341,166 @@ def test_fact_routes_serve_the_same_rows(spark, tmp_path, monkeypatch, names):
         assert rows == [repr(r) for r in getattr(over_cap, method)().collect()], method
     for fact in facts.values():
         fact.unpersist()
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts, counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_etl_is_one_scan_and_one_collect(spark, tmp_path):
+    """``run_etl`` on a fresh session fact starts two jobs: the cache's
+    build (a query stage of its own under AQE) and the one collect of
+    the CSV lines that every cleaned file is written from.  No header
+    inference, no distinct-ticker job, no job per sink."""
+    from stock_data_warehouse_analytics_spark.pipeline import run_etl
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for seed, t in enumerate(TICKERS):
+        _write_raw(raw / f"{t}.csv", t, 60, seed)
+    facts = []
+    out = tmp_path / "cleaned"
+    jobs = _jobs_of(
+        spark, f"etl-{tmp_path.name}",
+        lambda: facts.append(run_etl(spark, str(raw), str(out))),
+    )
+    assert jobs == 2
+    assert sorted(os.listdir(out)) == sorted(["All.csv", *(f"{t}.csv" for t in TICKERS)])
+    facts[0].unpersist()
+
+
+def test_volume_suffix_case_is_ignored(spark):
+    """Lower-case ``k/m/b`` volume suffixes parse to the values of the
+    upper-case ones (the reference's ``[KkMmBb]``), truncated alike."""
+    from pyspark.sql import functions as F
+
+    from stock_data_warehouse_analytics_spark.functions.parsers import parse_volume
+
+    cells = ["903.30K", "1.76M", "2.5B", "-0.0019K", "12", "1,234.5K", "7.1X"]
+    values = spark.sql(
+        "SELECT * FROM VALUES " + ", ".join(f"('{c}', '{c.lower()}')" for c in cells)
+        + " AS t(u, l)"
+    ).select(parse_volume(F.col("u")), parse_volume(F.col("l"))).collect()
+    assert [tuple(r) for r in values] == [
+        (903300, 903300), (1760000, 1760000), (2500000000, 2500000000),
+        (-1, -1), (12, 12), (1234500, 1234500), (None, None),
+    ]
+
+
+def test_files_with_different_headers_union_by_name(spark, tmp_path):
+    """Files whose headers differ are read in one scan per header line
+    and joined by name: English and Vietnamese headers give the same
+    columns, and a file without ``% Thay đổi`` gives null
+    ChangePercent, not another column's values."""
+    from stock_data_warehouse_analytics_spark.schemas import FACT_COLUMNS
+    from stock_data_warehouse_analytics_spark.sources import stock_csv
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_raw(raw / "HVN.csv", "HVN", 20, 0)
+    rows = [
+        ["Date", "Close", "Open", "High", "Low", "Volume", "Change%"],
+        ["02/01/2024", "10,000.5", "9,950.0", "10,100.0", "9,900.0", "1.5m", "0.50%"],
+        ["03/01/2024", "10,200.0", "10,000.0", "10,300.0", "9,990.0", "2k", "1.99%"],
+    ]
+    with open(raw / "AST.csv", "w", encoding="utf-8", newline="") as f:
+        csv.writer(f, lineterminator="\n").writerows(rows)
+    with open(raw / "NCT.csv", "w", encoding="utf-8-sig", newline="") as f:
+        w = csv.writer(f, quoting=csv.QUOTE_ALL, lineterminator="\n")
+        w.writerow(HEADER[:6])
+        w.writerow(["04/01/2024", "5,000.0", "4,900.0", "5,100.0", "4,800.0", "3.25K"])
+
+    fact = stock_csv.load_stock_facts(spark, str(raw))
+    assert fact.columns == FACT_COLUMNS
+    got = {
+        (r.Ticker, str(r.Date)): (r.Close, r.Volume, r.ChangePercent)
+        for r in fact.collect()
+    }
+    assert len(got) == 23
+    assert got["AST", "2024-01-02"] == (10000.5, 1_500_000, 0.5)
+    assert got["AST", "2024-01-03"] == (10200.0, 2_000, 1.99)
+    assert got["NCT", "2024-01-04"] == (5000.0, 3_250, None)
+    assert all(v[2] is not None for (t, _), v in got.items() if t == "HVN")
+
+
+def test_file_matching_two_tickers_feeds_both(spark, tmp_path):
+    """A file whose name matches two ticker patterns (``*AST*`` and
+    ``*HVN*``) gives its rows to both tickers, as the reference's
+    per-ticker glob loop does, in the fact and in the cleaned files."""
+    from stock_data_warehouse_analytics_spark.pipeline import run_etl
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    days = _write_raw(raw / "HVN_AST.csv", "HVN", 30, 0)
+    _write_raw(raw / "NCT.csv", "NCT", 30, 1)
+    out = tmp_path / "cleaned"
+    fact = run_etl(spark, str(raw), str(out))
+    counts = {r.Ticker: r["count"] for r in fact.groupBy("Ticker").count().collect()}
+    assert counts == {"HVN": 30, "AST": 30, "NCT": 30}
+    assert sorted(os.listdir(out)) == ["AST.csv", "All.csv", "HVN.csv", "NCT.csv"]
+    for t in ("HVN", "AST"):
+        with open(out / f"{t}.csv", encoding="utf-8") as f:
+            got = list(csv.DictReader(f))
+        assert [r["Date"] for r in got] == [d.isoformat() for d in days]
+        assert {r["Ticker"] for r in got} == {t}
+    fact.unpersist()
+
+
+def test_header_names_follow_spark(spark, tmp_path):
+    """``read_raw`` names the columns as Spark's own header inference
+    does: a BOM dropped, quotes and doubled quotes undone, leading
+    blanks ignored, an empty name as ``_c<i>`` and a name repeated in
+    any case as name + ``<i>``."""
+    from stock_data_warehouse_analytics_spark.sources.stock_csv import read_raw
+
+    p = tmp_path / "h.csv"
+    p.write_text(
+        '\ufeff"Ngày",  Close,"", "say ""hi""",close,Mở,,"a,b",ngày\n\n'
+        '1,2,3,4,5,6,7,8,9\n',
+        encoding="utf-8",
+    )
+    want = (
+        spark.read.option("header", True)
+        .option("quote", '"')
+        .option("escape", '"')
+        .option("ignoreLeadingWhiteSpace", True)
+        .csv(str(p))
+    )
+    got = read_raw(spark, str(p))
+    assert got.columns == want.columns
+    assert got.columns[1] == "Close1" and got.columns[2] == "_c2"
+    assert got.collect() == want.collect()
+
+
+def test_stock_path_maps_no_case():
+    """No case mapping and no ``input_file_name`` on the stock path.  In
+    Spark 4.1 ``upper``/``lower``/``initcap`` on UTF8_BINARY strings go
+    through ICU (``spark.sql.icu.caseMappings.enabled``), whose first use
+    in a JVM cost 2.17 CPU-s for one ``upper`` over 1,290 volume strings
+    against 0.39 with ICU mappings off (PERF.md); the ticker comes from
+    ``_metadata.file_name``."""
+    modules = [
+        "pipeline.py", "api.py", "sources/stock_csv.py", "functions/parsers.py",
+        "functions/derivations.py", "operators/windows.py",
+        *(f"operators/{m}" for m in os.listdir(os.path.join(PKG_DIR, "operators"))
+          if m.startswith("stock_") and m.endswith(".py")),
+    ]
+    marks = re.compile(
+        r"\bF\.(upper|lower|initcap)\b|input_file_name"
+        r"|(?<![.\w])(upper|lower|initcap|ucase|lcase)\s*\("
+    )
+    offenders = []
+    for rel in modules:
+        with open(os.path.join(PKG_DIR, rel), encoding="utf-8") as fh:
+            offenders += [
+                f"{rel}:{n}" for n, line in enumerate(fh, 1) if marks.search(line)
+            ]
+    assert len(modules) >= 9 and offenders == []
