@@ -1,34 +1,19 @@
-"""Literal local relations — small bounded frames without Python-RDD
-partitions.
+"""Literal local relations — small bounded frames whose plan is a
+``LocalRelation``.
 
-``spark.createDataFrame(list_of_tuples, schema)`` backs the frame with
-a pickled Python-RDD partition, so EVERY job that scans it (including
-each broadcast build and each re-execution of an uncached plan) pays a
-Python-worker round trip — measured at ~0.3 s on an idle box and up to
-~5 s per job under load (round-9 bisect: a 60-row coalesce(1).count()
-at 5.5 s while a 32-task JVM scan of real data ran in 0.2 s).  A
-literal plan over ``spark.range(1)`` stays entirely JVM-side:
-broadcasts come straight from the plan, and no Python worker is ever
-launched.
+:func:`literal_df` builds one Arrow table from the rows, typed by the
+DDL schema, and hands it to ``spark.createDataFrame``: the rows travel
+to the JVM as Arrow record batches and the plan is a ``LocalRelation``, so
+collecting the frame starts no job and a join broadcasts it from its
+exact size.  ``spark.createDataFrame(list_of_tuples, schema)`` is no
+substitute: on pyspark 4.1.2 its plan is a ``LogicalRDD`` over pickled
+Python rows, and every job that scans it (each collect, each broadcast
+build) runs a Python-worker task.
 
-Two literal encodings, same plan shape, chosen automatically:
-
-- ``from_json(lit(payload))`` + explode — ONE string literal carries
-  the whole table across py4j and Jackson materializes it JVM-side at
-  runtime.  Per-cell ``F.lit`` calls are a py4j round trip EACH, so a
-  60-centroid × 64-dim table costs ~4k driver→JVM calls and a
-   Catalyst tree with ~4k literal nodes (~seconds of analysis); the
-  JSON form is one call and one node.  Floats survive exactly
-  (``json.dumps`` emits the shortest round-trip decimal; Jackson's
-  ``parseDouble`` returns the identical IEEE bits), longs are exact.
-- per-cell ``F.lit(...).cast(...)`` structs — the fallback for value
-  types JSON can't carry faithfully (dates/timestamps/decimals,
-  non-finite floats), kept for the rare caller that needs them.
-
-For BOUNDED frames only: every value is embedded in the query plan, so
-callers keep rows at O(100s) — grid/sweep tables, quantile targets,
-centroid tables, per-group offset maps.  Data-sized frames keep the
-normal read path.
+For BOUNDED frames only: the rows are held in the driver and in the
+plan, so callers keep them at O(100s) — grid/sweep tables, quantile
+targets, centroid tables, per-group offset maps.  Data-sized frames
+keep the normal read path.
 
 Three small-input rules live here, each on an exact fact rather than a
 Catalyst estimate:
@@ -52,10 +37,13 @@ from __future__ import annotations
 import json
 import logging
 import math
+from datetime import timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, _parse_datatype_string
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import TimestampType, _parse_datatype_string
 
 # Row cap for the driver small paths (CC union-find, BPE merge loop).
 DRIVER_MAX_ROWS = 10_000
@@ -98,100 +86,23 @@ def collect_if_small(df: DataFrame):
     return rows if small else None
 
 
-def _to_json_value(v, dt):
-    """Coerce ``v`` to the JSON value whose ``from_json`` parse equals
-    ``F.lit(v).cast(dt)`` — or raise ValueError to trigger the
-    per-cell-literal fallback.  Mirrors the cast the legacy path
-    applies (int → string field becomes "5", int → double becomes
-    5.0), so both encodings produce identical frames."""
-    if v is None:
-        return None
-    name = dt.typeName()
-    if name in ("integer", "long", "short", "byte"):
-        if isinstance(v, bool) or not isinstance(v, int):
-            raise ValueError(v)
-        # Range-check against the target type: an out-of-range value
-        # would reach from_json in PERMISSIVE mode and silently null
-        # the ENTIRE row, where the legacy F.lit path wraps or fails
-        # loudly — raising here routes such rows to the legacy path
-        # instead (advisor r9, medium).
-        bits = {"byte": 8, "short": 16, "integer": 32, "long": 64}[name]
-        lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
-        if not (lo <= v <= hi):
-            raise ValueError(v)
-        return v
-    if name in ("double", "float"):
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            raise ValueError(v)
-        f = float(v)
-        if not math.isfinite(f):
-            raise ValueError(v)
-        return f
-    if name == "string":
-        # Non-str values coerced with Python str() diverge from the
-        # legacy F.lit(v).cast('string') (True → 'True' vs 'true',
-        # 1e20 → '1e+20' vs '1.0E20') — require str so non-str inputs
-        # fall back to the legacy cast path (advisor r9, low).
-        if not isinstance(v, str):
-            raise ValueError(v)
-        return v
-    if name == "boolean":
-        if not isinstance(v, bool):
-            raise ValueError(v)
-        return v
-    if name == "array":
-        if not isinstance(v, (list, tuple)):
-            raise ValueError(v)
-        return [_to_json_value(x, dt.elementType) for x in v]
-    raise ValueError(dt)  # dates/timestamps/decimals → legacy path
-
-
 def literal_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """A DataFrame of ``rows`` (tuples/lists matching ``schema``, a DDL
-    string like ``"cell int, cvec array<double>"``) built as a pure
-    literal plan — the JVM-side replacement for small
-    ``createDataFrame`` calls.  Values may be None (cast to the field
-    type); empty ``rows`` falls back to an empty ``createDataFrame``
-    (no job ever scans it)."""
-    st = _parse_datatype_string(f"struct<{schema}>")
+    string like ``"cell int, cvec array<double>"``) as a local relation:
+    one Arrow table typed by the schema.  Values may be None; a value
+    Arrow cannot hold in its field's type (an int out of range, a
+    non-str in a string field) raises.  A naive ``datetime`` in a
+    ``timestamp`` field means process-local time, as in ``collect()``."""
+    struct = _parse_datatype_string(f"struct<{schema}>")
+    arrow = to_arrow_schema(struct)
     rows = list(rows)
-    if not rows:
-        return spark.createDataFrame([], schema)
-    try:
-        recs = [
-            {
-                f.name: _to_json_value(v, f.dataType)
-                for v, f in zip(row, st.fields)
-            }
-            for row in rows
-        ]
-    except ValueError:
-        recs = None
-    if recs is not None:
-        payload = json.dumps(recs, ensure_ascii=False)
-        return (
-            spark.range(1)
-            .select(
-                F.explode(
-                    F.from_json(F.lit(payload), ArrayType(st))
-                ).alias("_s")
-            )
-            .select("_s.*")
-        )
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(row, st.fields)
-            ]
-        )
-        for row in rows
-    ]
-    return (
-        spark.range(1)
-        .select(F.explode(F.array(*structs)).alias("_s"))
-        .select("_s.*")
-    )
+    arrays = []
+    for i, (f, t) in enumerate(zip(struct.fields, arrow.types)):
+        col = [row[i] for row in rows]
+        if isinstance(f.dataType, TimestampType):  # Arrow reads naive as UTC
+            col = [None if v is None else v.astimezone(timezone.utc) for v in col]
+        arrays.append(pa.array(col, t))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
 
 
 def literal_map(d: dict, value_type: str = "bigint"):

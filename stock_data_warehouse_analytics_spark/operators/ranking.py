@@ -329,10 +329,8 @@ def grouped_exact_quantiles(
             frac = pos - lo
             target_rows.append((g, label, lo + 1, min(lo + 2, n_g), frac))
     # carry the group column's real type into the helper tables so the
-    # joins stay equi-joins on the native type (no implicit casts);
-    # literal local relations (operators/localrel.py) — these tiny
-    # broadcast sides would otherwise pay a Python-RDD worker round
-    # trip on every build
+    # joins stay equi-joins on the native type (no implicit casts); as
+    # local relations they broadcast from their exact size
     g_type = df.schema[group_col].dataType.simpleString()
     offsets = localrel.literal_df(
         spark, offset_rows, f"{group_col} {g_type}, {_BUCKET} int, _rk_offset long"

@@ -411,8 +411,7 @@ def fit_ivf_quantizer(
         emb.sparkSession,
         [(i, [float(x) for x in cen]) for i, cen in enumerate(centers)],
         "cell int, cvec array<double>",
-    )  # literal local relation: the broadcast probe side must not pay
-    # a Python-RDD worker round trip per query batch
+    )  # a local relation: the probe side broadcasts from its exact size
     return assigned, centers_df
 
 

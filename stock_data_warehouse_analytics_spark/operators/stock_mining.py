@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .localrel import literal_df
 from .windows import lag_pct_change, lead_, ordered_window, zscore
 
 __all__ = [
@@ -201,10 +202,11 @@ def kmeans_exact_small(features: DataFrame, k: int = 3) -> DataFrame:
         if sse < best_sse - 1e-12:
             best, best_sse = a, sse
     pdf["Cluster"] = best
-    spark = features.sparkSession
-    # pandas through Arrow gives a LocalRelation, whose collect starts no
-    # job; a localrel.literal_df result (Range + explode) starts one.
-    return spark.createDataFrame(pdf)
+    return literal_df(
+        features.sparkSession,
+        pdf.itertuples(index=False),
+        "Ticker string, Return double, Volume double, Cluster bigint",
+    )
 
 
 def kmeans_clusters(features: DataFrame, k: int = 3, seed: int = 42) -> DataFrame:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.localrel import literal_df
 from ..operators.similarity import (
     _plane,
     kcenter_select,
@@ -298,8 +299,6 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
             {f"cell_{nc}": c for nc, c in books.items()},
             vec_col="_cn",
         ).localCheckpoint(eager=True)
-        from ..operators.localrel import literal_df
-
         centers = {
             nc: literal_df(
                 spark,
@@ -308,10 +307,8 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
             )
             for nc, c in books.items()
         }
-        # ONE stacked centroid table as a LITERAL local relation
-        # (literal_df's from_json encoding: one string literal carries
-        # all Σsweep × dim doubles across py4j — the per-cell F.lit
-        # form cost ~4 s of driver→JVM calls for this table alone)
+        # ONE stacked centroid table as a local relation: one Arrow
+        # batch carries all Σsweep × dim doubles
         centers_all = literal_df(
             spark,
             [
@@ -409,14 +406,7 @@ def sim_ivf_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(prefs, ["query_id", "cell"])
         .select("query_id", "pr")
     )
-    # literal local relation, not createDataFrame: python-list frames
-    # are Python-RDD-backed and every job over them pays a Python-
-    # worker round trip; the literal explode stays JVM-side
-    pts = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p) for p in _NPROBE_SWEEP])
-        ).alias("nprobe")
-    )
+    pts = literal_df(spark, [(p,) for p in _NPROBE_SWEEP], "nprobe int")
     hits = (
         pts.join(tpr, F.col("pr") <= F.col("nprobe"), "left")
         .groupBy("nprobe")
@@ -536,11 +526,7 @@ def sim_ivf_ncells_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pr") <= _NCELLS_NPROBE)
         .select("n_cells", "query_id", "cell")
     )
-    pts = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(nc) for nc in _NCELLS_SWEEP])
-        ).alias("n_cells")
-    )  # literal local relation — JVM-side, no Python-RDD task
+    pts = literal_df(spark, [(nc,) for nc in _NCELLS_SWEEP], "n_cells int")
     hits = pts.join(
         truth.select("query_id", "neighbor_id")
         .join(assigned_all, "neighbor_id")

@@ -355,8 +355,8 @@ def olap_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # no broadcast hint on the hits side (it descends from the fact
     # scan — the registry audit bans hints over scale-growing tables);
-    # both sides are ≤ 2·k rows here and the literal tgt side
-    # auto-broadcasts from its own size estimate
+    # the tgt side is a local relation of ≤ k rows and auto-broadcasts
+    # from its exact size
     return (
         hits.join(tgt, F.col("_lo") == F.col("_r"))
         .select("bucket", "n_rows", F.col("x").alias("lo"), "_hi")

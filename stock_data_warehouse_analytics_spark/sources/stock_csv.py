@@ -261,14 +261,13 @@ def csv_lines(df: DataFrame, *keys: str) -> tuple[str, list]:
     """``df``'s CSV header and, in one ``collect()``, its rows as
     ``(*keys, line)``: each line is ``to_csv`` over the row — the
     generator and default options of Spark's CSV writer.  The header is
-    ``to_csv`` over the column names, which a SQL ``VALUES`` relation
-    carries as a local relation, so it starts no job."""
+    ``to_csv`` over the column names, one ``localrel.literal_df`` row,
+    so it starts no job."""
     cols = [f"_{i}" for i in range(len(df.columns))]
     key_cols = [cols[df.columns.index(k)] for k in keys]
     rows = df.toDF(*cols).select(*key_cols, F.to_csv(F.struct(*cols))).collect()
-    names = df.sparkSession.sql(
-        "SELECT * FROM VALUES (" + ", ".join(f":{c}" for c in cols) + ")",
-        args=dict(zip(cols, df.columns)),
+    names = localrel.literal_df(
+        df.sparkSession, [df.columns], ", ".join(f"{c} string" for c in cols)
     )
     header = names.select(F.to_csv(F.struct(*names.columns))).collect()[0][0]
     return header, rows

@@ -20,3 +20,15 @@ def spark():
     spark = get_spark("tests", master=f"local[{cpus}]")
     yield spark
     spark.stop()
+
+
+def jobs_of(spark, group: str, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts, counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

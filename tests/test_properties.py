@@ -20,12 +20,15 @@ from .conftest import SF_MEDIUM
 
 
 @pytest.fixture(scope="module")
-def fact(spark):
+def fact(spark, tmp_path_factory):
+    from perfbench.gen import stock_csvs
     from stock_data_warehouse_analytics_spark.sources.stock_csv import (
         load_stock_facts,
     )
 
-    df = load_stock_facts(spark, "/root/reference/stock_data")
+    raw = str(tmp_path_factory.mktemp("raw"))
+    stock_csvs(7, raw)  # HVN, AST, NCT, SCS, VJC, VTR raw files
+    df = load_stock_facts(spark, raw)
     df.cache()
     yield df
     df.unpersist()

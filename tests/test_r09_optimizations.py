@@ -7,8 +7,8 @@ never WHAT — these tests pin the equivalences directly:
   ≡ the bucketed route, bit for bit;
 - _bucket_of: the compact higher-order bucket expression ≡ the
   chained when-sum it replaced;
-- literal_df: the from_json encoding ≡ the per-cell-literal encoding
-  (values, types, None handling, float bits);
+- literal_df: an Arrow local relation that round-trips every field
+  type the package uses and whose collect starts no job;
 - literal_map ≡ create_map literals;
 - hyperplane_signature: the folded 2-D-constant form ≡ the chained
   per-plane literal fold it replaced;
@@ -17,11 +17,17 @@ never WHAT — these tests pin the equivalences directly:
 
 from __future__ import annotations
 
+import ast
+import math
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from stock_data_warehouse_analytics_spark.operators import localrel
 from stock_data_warehouse_analytics_spark.operators import ranking as R
+
+from .conftest import jobs_of
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -70,53 +76,110 @@ def test_bucket_of_matches_chained_when(spark):
     assert all(r.a == r.b for r in got)
 
 
-def test_literal_df_json_equals_legacy(spark):
-    from stock_data_warehouse_analytics_spark.operators.localrel import (
-        _to_json_value,
-        literal_df,
-    )
+def _cells(v):
+    """``v`` with NaN made comparable (NaN != NaN), through rows and
+    lists."""
+    if isinstance(v, (tuple, list)):
+        return [_cells(x) for x in v]
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+
+def test_literal_df_round_trips_as_local_relation(spark, monkeypatch):
+    """Every field type the package passes to ``literal_df`` round-trips
+    exactly, numpy scalars and a generator of rows included; a naive
+    timestamp means process-local time, so it rejoins its source under
+    any process TZ; the plan is a ``LocalRelation`` and collecting it
+    starts no job."""
+    import datetime as dt
+    import decimal
+    import time
+
+    import numpy as np
     from pyspark.sql.types import _parse_datatype_string
 
-    schema = "k int, s string, x double, arr array<double>, b boolean"
-    rows = [
-        (1, "a", 0.1 + 0.2, [1.5, -2.25e-300], True),
-        (2, None, None, None, False),
-        (3, "naïve ✓ \"quoted\"", 5, [0.0], None),  # int 5 into double
-    ]
-    json_df = literal_df(spark, rows, schema)
-    # force the legacy path by making coercion fail via a date sentinel,
-    # then rebuild legacy frame manually (same construction literal_df
-    # falls back to)
-    st = _parse_datatype_string(f"struct<{schema}>")
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(row, st.fields)
-            ]
-        )
-        for row in rows
-    ]
-    legacy_df = (
-        spark.range(1)
-        .select(F.explode(F.array(*structs)).alias("_s"))
-        .select("_s.*")
+    schema = (
+        "k int, n bigint, x double, s string, b boolean, arr array<double>, "
+        "d date, t timestamp, m decimal(10,2)"
     )
-    a = sorted(map(tuple, json_df.collect()))
-    b = sorted(map(tuple, legacy_df.collect()))
-    assert a == b
-    # float bit-exactness explicitly
-    assert a[0][2] == 0.1 + 0.2 and a[0][3][1] == -2.25e-300
-    # non-JSON-safe values still work via the fallback path
-    import datetime
+    ts = [dt.datetime(2024, 7, 9, 14, 30, 0, 123456), dt.datetime(1999, 12, 31, 23, 59, 59)]
+    rows = [
+        (1, 2**62, 0.1 + 0.2, 'naïve ✓ "quoted"', True, [1.5, -2.25e-300, math.inf],
+         dt.date(2024, 1, 2), ts[0], decimal.Decimal("12.34")),
+        (np.int32(2), np.int64(-7), np.float64(math.nan), np.str_("Ngày"), np.bool_(False),
+         [-math.inf, 0.0], dt.date(1999, 12, 31), ts[1], decimal.Decimal("-0.05")),
+        (3, None, -math.inf, None, None, None, None, None, None),
+    ]
+    want = [_cells(r) for r in rows]
+    try:
+        for tz in ("America/New_York", "Asia/Ho_Chi_Minh", "UTC"):
+            monkeypatch.setenv("TZ", tz)
+            time.tzset()
+            df = localrel.literal_df(spark, (r for r in rows), schema)
+            assert df._jdf.queryExecution().optimizedPlan().toString().startswith(
+                "LocalRelation"
+            )
+            got = []
+            assert jobs_of(spark, f"literal-{tz}", lambda: got.extend(df.collect())) == 0
+            assert [_cells(r) for r in got] == want, tz
+            assert got[0].x == 0.1 + 0.2 and got[0].arr[1] == -2.25e-300
+            # the JVM holds the instant pyspark's own literal encodes
+            for t in ts:
+                assert df.filter(F.col("t") == F.lit(t)).count() == 1, (tz, t)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    empty = localrel.literal_df(spark, [], schema)
+    assert empty.schema == _parse_datatype_string(f"struct<{schema}>")
+    assert jobs_of(spark, "literal-empty", lambda: empty.collect()) == 0
+    assert empty.collect() == []
 
-    d = literal_df(
-        spark, [(datetime.date(2024, 1, 2), 7)], "d date, k int"
-    ).collect()
-    assert d[0].d == datetime.date(2024, 1, 2) and d[0].k == 7
-    # coercion guard: _to_json_value refuses what JSON can't carry
-    with pytest.raises(ValueError):
-        _to_json_value(float("nan"), st.fields[2].dataType)
+
+def _literal_frame_builders(tree):
+    """``(line, what)`` for each call in ``tree`` that builds a literal
+    frame by hand: a ``createDataFrame``, a ``range(1)`` whose select
+    explodes literals, or a SQL ``VALUES`` bound through ``args=``."""
+    found = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        name, recv = node.func.attr, node.func.value
+        if name == "createDataFrame":
+            found.append((node.lineno, name))
+        elif (
+            name == "select"
+            and isinstance(recv, ast.Call)
+            and isinstance(recv.func, ast.Attribute)
+            and recv.func.attr == "range"
+            and [ast.unparse(a) for a in recv.args] == ["1"]
+            and "explode(" in ast.unparse(node)
+        ):
+            found.append((node.lineno, "range(1) explode"))
+        elif (
+            name == "sql"
+            and any(k.arg == "args" for k in node.keywords)
+            and "VALUES" in ast.unparse(node).upper()
+        ):
+            found.append((node.lineno, "VALUES with args="))
+    return found
+
+
+def test_literal_frames_go_through_literal_df():
+    """``localrel.literal_df`` is the package's one way to build a
+    literal frame: no other module hand-builds one."""
+    pkg = os.path.dirname(os.path.dirname(localrel.__file__))
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in sorted(files):
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == localrel.__file__:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            offenders += [
+                f"{os.path.relpath(path, pkg)}:{n} {what}"
+                for n, what in _literal_frame_builders(tree)
+            ]
+    assert offenders == []
 
 
 def test_literal_map_equals_create_map(spark):

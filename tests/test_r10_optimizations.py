@@ -10,8 +10,8 @@ the exact behavior of the path it replaced:
   (``localrel.DRIVER_MAX_ROWS``), whatever Catalyst estimates;
 - topk_lsh's cand_sigs/query_sigs overrides == the two-Arrow-pass fast
   path (the chunk_ann_lsh_topk rewiring);
-- literal_df's r10 hardening routes out-of-range ints and non-str
-  strings to the legacy per-cell-literal path with identical frames;
+- literal_df raises on an out-of-range int and on a non-str in a
+  string field;
 - literal_map rejects non-string keys loudly;
 - with_predicted_lang's bound scores == predicted_lang, whatever the
   input's column names.
@@ -111,22 +111,20 @@ def test_topk_lsh_sig_overrides_match_two_pass(spark):
     assert _rows(base) == _rows(override)
 
 
-def test_literal_df_range_check_falls_back_identically(spark):
+def test_literal_df_rejects_values_its_fields_cannot_hold(spark):
+    import pyarrow as pa
+
     from stock_data_warehouse_analytics_spark.operators.localrel import (
         literal_df,
     )
 
-    # int overflowing the declared int32 field: must NOT null the row
-    # (the from_json PERMISSIVE failure mode) — the legacy path wraps
-    # exactly like F.lit().cast("int")
-    rows = [(2**31 + 5, "a"), (7, "b")]
-    df = literal_df(spark, rows, "x int, s string")
-    got = {r.s: r.x for r in df.collect()}
-    assert got["b"] == 7
-    assert got["a"] == ((2**31 + 5 + 2**31) % 2**32) - 2**31  # int32 wrap
-    # non-str into a string field: legacy cast semantics (true, not True)
-    df2 = literal_df(spark, [(True,)], "s string")
-    assert df2.collect()[0].s == "true"
+    # an int out of its int32 field's range raises, where the earlier
+    # encodings wrapped it like F.lit().cast("int")
+    with pytest.raises(pa.ArrowInvalid):
+        literal_df(spark, [(2**31 + 5, "a"), (7, "b")], "x int, s string")
+    # a non-str in a string field raises, where they cast True to 'true'
+    with pytest.raises(pa.ArrowTypeError):
+        literal_df(spark, [(True,)], "s string")
 
 
 @pytest.mark.parametrize("as_string", [False, True])

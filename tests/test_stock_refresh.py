@@ -39,6 +39,8 @@ import pytest
 
 from stock_data_warehouse_analytics_spark.sources.stock_csv import write_csv_single
 
+from .conftest import jobs_of
+
 
 def _spark_writer_bytes(df, out_dir) -> bytes:
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(str(out_dir))
@@ -321,7 +323,7 @@ def test_fact_routes_serve_the_same_rows(spark, tmp_path, monkeypatch, names):
     facts, jobs = {}, {}
     for route, cap in (("one", localrel.ONE_PARTITION_MAX_BYTES), ("over_cap", 0)):
         monkeypatch.setattr(localrel, "ONE_PARTITION_MAX_BYTES", cap)
-        jobs[route] = _jobs_of(
+        jobs[route] = jobs_of(
             spark, f"load-{route}-{tmp_path.name}",
             lambda: facts.setdefault(route, stock_csv.load_stock_facts(spark, str(raw)).cache()),
         )
@@ -343,18 +345,6 @@ def test_fact_routes_serve_the_same_rows(spark, tmp_path, monkeypatch, names):
         fact.unpersist()
 
 
-def _jobs_of(spark, group: str, fn) -> int:
-    """The number of Spark jobs ``fn()`` starts, counted through a job
-    group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_etl_is_one_scan_and_one_collect(spark, tmp_path):
     """``run_etl`` on a fresh session fact starts two jobs: the cache's
     build (a query stage of its own under AQE) and the one collect of
@@ -368,7 +358,7 @@ def test_etl_is_one_scan_and_one_collect(spark, tmp_path):
         _write_raw(raw / f"{t}.csv", t, 60, seed)
     facts = []
     out = tmp_path / "cleaned"
-    jobs = _jobs_of(
+    jobs = jobs_of(
         spark, f"etl-{tmp_path.name}",
         lambda: facts.append(run_etl(spark, str(raw), str(out))),
     )

@@ -87,6 +87,7 @@ def test_bucketed_join_has_no_shuffle(spark, warehouse):
 def test_partitioned_fact_prunes_partitions(spark, tmp_path):
     """write_fact_parquet partitions by Ticker; a Ticker-filtered read
     must show partition pruning (no data files of other tickers read)."""
+    from perfbench.gen import stock_csvs
     from stock_data_warehouse_analytics_spark.sources.sinks import (
         write_fact_parquet,
     )
@@ -94,7 +95,9 @@ def test_partitioned_fact_prunes_partitions(spark, tmp_path):
         load_stock_facts,
     )
 
-    fact = load_stock_facts(spark, "/root/reference/stock_data")
+    raw = str(tmp_path / "raw")
+    stock_csvs(7, raw)  # HVN among the generated tickers
+    fact = load_stock_facts(spark, raw)
     path = str(tmp_path / "fact_parquet")
     write_fact_parquet(fact, path)
 
