@@ -1,16 +1,29 @@
-"""Distributed Lloyd k-means — the custom trainer behind the IVF coarse
-quantizer and (in multi-subspace form) the PQ codebooks.
+"""Lloyd k-means — the one implementation behind every clustering path
+in the package: one numpy nearest-centroid kernel, one distributed
+trainer and one driver trainer.
 
-Why not ``pyspark.ml.KMeans`` everywhere: each ml fit carries several
-jobs of fixed overhead (k-means‖ init passes, Arrow→Vector conversion,
-model bookkeeping) — measured 6–14 s for codebook-sized fits whose
-actual arithmetic is milliseconds.  This trainer is the minimal honest
-formulation: per iteration, ONE Arrow ``mapInPandas`` scan emits
-per-partition (code, count, sum) partials (≤ partitions·k rows), the
-driver reduces them and rebroadcasts the k×dim centroid array — the
-dim-bounded side of the state-size rule (same as the PC1 Gram matrix
-and the IVF centroid table).  Seeding is deterministic (k rows with the
-smallest md5-derived id hashes), so fits are reproducible with no RNG.
+- ``pq_train`` is the distributed trainer: ``m`` subspaces trained
+  together.  ``m=1`` is the IVF coarse quantizer
+  (``similarity.fit_ivf_quantizer``); ``m>1`` gives the PQ codebooks of
+  ``similarity.topk_ivfpq`` and ``emb_product_quantization``.
+- ``lloyd_kernels()`` builds the kernel (``nearest``) and the driver
+  trainer (``lloyd``) for bounded arrays: the two-level IVF's per-cell
+  fit, the N_CELLS sweep's sampled fits and the stock k-means past its
+  exact bound.
+- ``assign_codes_multi`` and ``pq_reconstruct`` are the map-only
+  encoders against trained codebooks.
+
+Why not ``pyspark.ml.KMeans``: each ml fit carries several jobs of
+fixed overhead (k-means‖ init passes, Arrow→Vector conversion, model
+bookkeeping) — measured 6–14 s for codebook-sized fits whose actual
+arithmetic is milliseconds.  The distributed trainer is the minimal
+honest formulation: per iteration, ONE Arrow ``mapInPandas`` scan of
+the vector column emits per-partition (subspace, code, count, sum)
+partials (≤ partitions·m·k rows), the driver reduces them and
+rebroadcasts the codebooks — the dim-bounded side of the state-size
+rule (same as the PC1 Gram matrix and the IVF centroid table).
+Seeding is deterministic (k rows with the smallest md5-derived id
+hashes), so fits are reproducible with no RNG.
 """
 
 from __future__ import annotations
@@ -21,120 +34,40 @@ from pyspark.sql import functions as F
 
 from .dedup import hash_int60
 
-__all__ = ["lloyd_fit", "assign_codes", "pq_train", "pq_reconstruct"]
+__all__ = ["lloyd_kernels", "assign_codes_multi", "pq_train", "pq_reconstruct"]
 
 
-def lloyd_fit(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    iters: int = 10,
-) -> np.ndarray:
-    """Train k centroids over ``vec_col`` (array<numeric>); returns the
-    (k, dim) centroid ndarray.  ``iters`` + 0 extra jobs beyond the
-    deterministic-seed collect; empty clusters keep their previous
-    centroid."""
-    base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    seed_rows = (
-        base.withColumn("_h", hash_int60(F.col("_id").cast("string")))
-        .orderBy("_h", "_id")
-        .limit(k)
-        .select("_v")
-        .collect()
-    )
-    if not seed_rows:
-        raise ValueError("lloyd_fit: input DataFrame is empty — cannot seed")
-    centers = np.array([r._v for r in seed_rows], dtype=np.float64)
-    # degrade gracefully when the input has fewer than k rows: the seed
-    # collect returned < k centers, so cnt/nz must be sized to match
-    # (else centers[nz] raises a boolean-index length mismatch)
-    k = min(k, centers.shape[0])
-    part_schema = "code int, cnt long, sums array<double>"
+def lloyd_kernels():
+    """Build ``(nearest, lloyd)`` as NESTED closures so cloudpickle
+    ships them BY VALUE into ``mapInPandas``/``applyInPandas`` workers,
+    where this package need not be importable (the
+    ``multimodal._png_codec`` pattern).
 
-    def make_pass(C: np.ndarray):
-        Cc = C.copy()
+    ``nearest(X, C)``: each row's nearest centroid index by squared
+    euclidean distance ``||x||² − 2·x·c + ||c||²``.
 
-        def partial(batches):
-            import numpy as _np
-            import pandas as _pd
+    ``lloyd(X, order, k, iters)``: Lloyd over a bounded array on one
+    process.  The seeds are the rows ``order[:k]``; each iteration
+    assigns with ``nearest`` and moves every non-empty cluster to its
+    members' mean (an empty cluster keeps its centroid).  Returns the
+    centroid array."""
+    import numpy as _np
 
-            kk, dim = Cc.shape
-            acc_cnt = _np.zeros(kk, dtype=_np.int64)
-            acc_sum = _np.zeros((kk, dim), dtype=_np.float64)
-            seen = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                seen = True
-                X = _np.vstack(pdf["_v"].to_numpy()).astype(_np.float64)
-                d2 = (
-                    (X * X).sum(1)[:, None]
-                    - 2.0 * X @ Cc.T
-                    + (Cc * Cc).sum(1)[None, :]
-                )
-                code = d2.argmin(1)
-                for ci in range(kk):
-                    mask = code == ci
-                    n = int(mask.sum())
-                    if n:
-                        acc_cnt[ci] += n
-                        acc_sum[ci] += X[mask].sum(0)
-            if not seen:
-                return
-            rows = [
-                (ci, int(acc_cnt[ci]), acc_sum[ci].tolist())
-                for ci in range(kk)
-                if acc_cnt[ci] > 0
-            ]
-            yield _pd.DataFrame(rows, columns=["code", "cnt", "sums"])
+    def nearest(X, C):
+        d2 = (X * X).sum(1)[:, None] - 2.0 * X @ C.T + (C * C).sum(1)[None, :]
+        return d2.argmin(1)
 
-        return partial
+    def lloyd(X, order, k, iters):
+        centers = X[order[: min(k, len(X))]].astype(_np.float64)
+        for _ in range(iters):
+            code = nearest(X, centers)
+            for ci in range(len(centers)):
+                mask = code == ci
+                if mask.any():
+                    centers[ci] = X[mask].mean(0)
+        return centers
 
-    for _ in range(iters):
-        parts = base.mapInPandas(make_pass(centers), part_schema).collect()
-        cnt = np.zeros(k, dtype=np.int64)
-        tot = np.zeros_like(centers)
-        for r in parts:
-            cnt[r.code] += r.cnt
-            tot[r.code] += np.array(r.sums)
-        nz = cnt > 0
-        centers[nz] = tot[nz] / cnt[nz, None]
-    return centers
-
-
-def assign_codes(
-    df: DataFrame,
-    centers: np.ndarray,
-    *,
-    vec_col: str,
-    code_col: str = "code",
-) -> DataFrame:
-    """Map-only nearest-centroid assignment against the broadcast
-    (closure-captured) centroid array — Arrow batches, numpy argmin,
-    all input columns passed through."""
-    Cc = centers.copy()
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema = f"{fields}, {code_col} int"
-
-    def assign(batches):
-        import numpy as _np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
-            d2 = (
-                (X * X).sum(1)[:, None]
-                - 2.0 * X @ Cc.T
-                + (Cc * Cc).sum(1)[None, :]
-            )
-            yield pdf.assign(**{code_col: d2.argmin(1)})
-
-    return df.mapInPandas(assign, schema=out_schema)
+    return nearest, lloyd
 
 
 def assign_codes_multi(
@@ -143,16 +76,17 @@ def assign_codes_multi(
     *,
     vec_col: str,
 ) -> DataFrame:
-    """Nearest-centroid assignment against SEVERAL codebooks in ONE
+    """Nearest-centroid assignment against one or more codebooks in ONE
     Arrow pass — the N_CELLS tuning sweep assigns the corpus to every
-    candidate index size without paying one corpus scan per index.
-    Emits one int column per codebook name; all input columns pass
-    through."""
+    candidate index size without paying one corpus scan per index, and
+    a single codebook is ``{code_col: C}``.  Emits one int column per
+    codebook name; all input columns pass through."""
     books = {name: c.copy() for name, c in codebooks.items()}
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
     out_schema = fields + "".join(f", {name} int" for name in books)
+    nearest, _ = lloyd_kernels()
 
     def assign(batches):
         import numpy as _np
@@ -161,12 +95,7 @@ def assign_codes_multi(
             if not len(pdf):
                 continue
             X = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
-            xx = (X * X).sum(1)[:, None]
-            cols = {}
-            for name, Cc in books.items():
-                d2 = xx - 2.0 * X @ Cc.T + (Cc * Cc).sum(1)[None, :]
-                cols[name] = d2.argmin(1)
-            yield pdf.assign(**cols)
+            yield pdf.assign(**{name: nearest(X, C) for name, C in books.items()})
 
     return df.mapInPandas(assign, schema=out_schema)
 
@@ -180,17 +109,14 @@ def pq_train(
     iters: int = 5,
     id_col: str = "neighbor_id",
 ) -> list[np.ndarray]:
-    """Train product-quantization codebooks — ``m`` subspaces of
-    ``dim/m`` dims, ``k`` centroids each — with ONE Arrow scan per
-    Lloyd iteration training ALL subspaces (the
-    ``emb_product_quantization`` loop shape, packaged for reuse by the
-    IVF-PQ index).  Driver state: the m·k·(dim/m) codebook only.
-    Deterministic seeding: the ``k`` rows with smallest md5(id)."""
-    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim_total = int(first.d)
-    assert dim_total % m == 0, (dim_total, m)
-    sub = dim_total // m
-
+    """Train ``m`` codebooks — one per subspace of ``dim/m`` dims, ``k``
+    centroids each — with ONE Arrow scan of ``vec_col`` per Lloyd
+    iteration training ALL subspaces; returns the list of (k, dim/m)
+    arrays.  Seeding: the ``k`` rows with the smallest md5(id) seed
+    every subspace, and ``dim`` is their length.  Jobs: the seed
+    collect + ``iters``.  Fewer than ``k`` rows train that many
+    centroids; an empty cluster keeps its previous centroid.  Driver
+    state: the m·k·(dim/m) codebook only."""
     seed_rows = (
         df.withColumn("_h", hash_int60(F.col(id_col).cast("string")))
         .orderBy("_h", id_col)
@@ -198,11 +124,16 @@ def pq_train(
         .select(vec_col)
         .collect()
     )
+    if not seed_rows:
+        raise ValueError("pq_train: input DataFrame is empty — cannot seed")
     seeds = np.array([r[0] for r in seed_rows], dtype=np.float64)
-    k_eff = min(k, seeds.shape[0])
-    codebooks = [
-        seeds[:k_eff, s * sub : (s + 1) * sub].copy() for s in range(m)
-    ]
+    k_eff, dim_total = seeds.shape
+    if dim_total % m:
+        raise ValueError(f"pq_train: dim {dim_total} is not a multiple of m={m}")
+    sub = dim_total // m
+    codebooks = [seeds[:, s * sub : (s + 1) * sub].copy() for s in range(m)]
+    vecs = df.select(vec_col)
+    nearest, _ = lloyd_kernels()
     part_schema = "subspace int, code int, cnt long, sums array<double>"
 
     def make_pass(cbs):
@@ -222,13 +153,7 @@ def pq_train(
                 X = _np.vstack(pdf[vec_col].to_numpy()).astype(_np.float64)
                 for s in range(m):
                     Xs = X[:, s * sub : (s + 1) * sub]
-                    C = cb_arr[s]
-                    d2 = (
-                        (Xs * Xs).sum(1)[:, None]
-                        - 2.0 * Xs @ C.T
-                        + (C * C).sum(1)[None, :]
-                    )
-                    code = d2.argmin(1)
+                    code = nearest(Xs, cb_arr[s])
                     for ci in range(k_eff):
                         mask = code == ci
                         n = int(mask.sum())
@@ -250,7 +175,7 @@ def pq_train(
         return partial
 
     for _ in range(iters):
-        parts = df.mapInPandas(make_pass(codebooks), part_schema).collect()
+        parts = vecs.mapInPandas(make_pass(codebooks), part_schema).collect()
         cnt = np.zeros((m, k_eff), dtype=np.int64)
         tot = np.zeros((m, k_eff, sub), dtype=np.float64)
         for r in parts:
@@ -282,6 +207,7 @@ def pq_reconstruct(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
     out_schema = f"{fields}, {rec_col} array<double>"
+    nearest, _ = lloyd_kernels()
 
     def rec(batches):
         import numpy as _np
@@ -293,13 +219,7 @@ def pq_reconstruct(
             out = _np.empty_like(X[:, : m * sub])
             for s in range(m):
                 Xs = X[:, s * sub : (s + 1) * sub]
-                C = cbs[s]
-                d2 = (
-                    (Xs * Xs).sum(1)[:, None]
-                    - 2.0 * Xs @ C.T
-                    + (C * C).sum(1)[None, :]
-                )
-                out[:, s * sub : (s + 1) * sub] = C[d2.argmin(1)]
+                out[:, s * sub : (s + 1) * sub] = cbs[s][nearest(Xs, cbs[s])]
             yield pdf.assign(**{rec_col: list(out)})
 
     return df.mapInPandas(rec, schema=out_schema)

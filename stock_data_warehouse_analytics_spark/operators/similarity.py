@@ -356,21 +356,19 @@ def fit_ivf_quantizer(
     emb: DataFrame,
     *,
     n_cells: int = 16,
-    seed: int = 42,
     max_iter: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fit_sample_per_cell: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Fit the IVF coarse quantizer ONCE — the custom distributed Lloyd
-    trainer (``operators/kmeans.py``: one Arrow scan per iteration,
-    driver state = the k×dim centroid array, deterministic md5-hash
-    seeding; replaced ``pyspark.ml.KMeans``, whose per-fit fixed
-    overhead dominated codebook-sized fits).  Returns
-    ``(assigned, centers_df)`` — the cell-assigned corpus and the k×dim
-    centroid table (the only state that ever reaches the driver,
-    bounded by construction).  ``seed`` is accepted for signature
-    stability but unused: seeding is hash-deterministic, no RNG.
+    """Fit the IVF coarse quantizer ONCE — the distributed Lloyd trainer
+    with one subspace (``operators/kmeans.pq_train`` with ``m=1``: one
+    Arrow scan per iteration, driver state = the k×dim centroid array,
+    deterministic md5-hash seeding, no RNG; replaced
+    ``pyspark.ml.KMeans``, whose per-fit fixed overhead dominated
+    codebook-sized fits).  Returns ``(assigned, centers_df)`` — the
+    cell-assigned corpus and the k×dim centroid table (the only state
+    that ever reaches the driver, bounded by construction).
 
     At scale the quantizer is fit once (typically on a sample) and
     reused across every query batch; ``topk_ivf_probe`` is the
@@ -379,7 +377,7 @@ def fit_ivf_quantizer(
     (Callers fitting SEVERAL quantizers over one corpus — the N_CELLS
     tuning sweep — use ``plans/llm_similarity._ncells_index`` instead:
     one shared normalize pass + one multi-codebook assignment.)"""
-    from .kmeans import assign_codes, lloyd_fit
+    from .kmeans import assign_codes_multi, pq_train
 
     c = emb.select(
         F.col(id_col).alias("neighbor_id"), normalize(F.col(vec_col)).alias("_cn")
@@ -395,16 +393,16 @@ def fit_ivf_quantizer(
         if n > target:
             bucket = hash_int60(F.col("neighbor_id").cast("string")) % 1_000_000
             # clamp: the floor can reach 0 when n > target·1e6 (an empty
-            # fit sample would crash lloyd_fit); and a hash sample can
+            # fit sample would crash pq_train); and a hash sample can
             # come up short of n_cells seed rows — fall back to the full
             # input in that case (fit cost is then the caller's choice)
             keep = max(1, int(target * 1_000_000 // n))
             sampled = c.filter(bucket < keep).localCheckpoint(eager=True)
             fit_input = sampled if sampled.count() >= n_cells else c
-    centers = lloyd_fit(
-        fit_input, id_col="neighbor_id", vec_col="_cn", k=n_cells, iters=max_iter
+    (centers,) = pq_train(
+        fit_input, vec_col="_cn", m=1, k=n_cells, iters=max_iter
     )
-    assigned = assign_codes(c, centers, vec_col="_cn", code_col="cell")
+    assigned = assign_codes_multi(c, {"cell": centers}, vec_col="_cn")
     from .localrel import literal_df
 
     centers_df = literal_df(
@@ -475,7 +473,6 @@ def topk_ivf(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
     max_iter: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -484,7 +481,7 @@ def topk_ivf(
     in one call (fit-per-call convenience form; batch/repeated callers
     should fit once and probe many times)."""
     assigned, centers_df = fit_ivf_quantizer(
-        emb, n_cells=n_cells, seed=seed, max_iter=max_iter,
+        emb, n_cells=n_cells, max_iter=max_iter,
         id_col=id_col, vec_col=vec_col,
     )
     return topk_ivf_probe(
@@ -855,7 +852,7 @@ def semantic_dedup_incremental(
     ``topk_ivf_probe`` and ``dedup_incremental_new_batch``."""
     import numpy as np
 
-    from .kmeans import assign_codes
+    from .kmeans import assign_codes_multi
 
     assigned_old, centers_df = fit_ivf_quantizer(
         old, n_cells=n_cells, max_iter=max_iter, id_col=id_col,
@@ -867,8 +864,8 @@ def semantic_dedup_incremental(
     new_norm = new.select(
         F.col(id_col).alias("neighbor_id"), normalize(F.col(vec_col)).alias("_cn")
     )
-    assigned_new = assign_codes(
-        new_norm, centers, vec_col="_cn", code_col="cell"
+    assigned_new = assign_codes_multi(
+        new_norm, {"cell": centers}, vec_col="_cn"
     ).localCheckpoint(eager=True)  # reused three times below
 
     n = assigned_new.select(
@@ -975,15 +972,15 @@ def fit_ivf2_quantizer(
     vectors, where a single-level √n-cell quantizer's fit and routing
     tables outgrow their budgets: a coarse level-1 quantizer (the
     existing sampled distributed Lloyd — driver state k1×dim) and,
-    INSIDE each coarse cell, k2 sub-centroids fit by a per-cell numpy
-    Lloyd that runs WHERE THE CELL'S DATA LIVES (``applyInPandas`` over
-    cells — the level-2 fit never touches the driver and all cells fit
-    in parallel).  Sub-centroids are recovered relationally as the
+    INSIDE each coarse cell, k2 sub-centroids fit by the one-process
+    Lloyd of ``operators/kmeans.lloyd_kernels`` run WHERE THE CELL'S
+    DATA LIVES (``applyInPandas`` over cells — the level-2 fit never
+    touches the driver and all cells fit in parallel).  Sub-centroids are recovered relationally as the
     element-wise mean of each sub-cell's members (posexplode + group —
     the per-label-centroid pattern of ``plans/emb_iter.py``), i.e. one
     extra Lloyd half-step: still a valid quantizer, never a collect.
 
-    Deterministic: level-1 seeding is md5-ordered (``lloyd_fit``);
+    Deterministic: level-1 seeding is md5-ordered (``pq_train``);
     level-2 seeds are each cell's ``n_sub`` smallest-md5 members.
 
     Returns ``(assigned, centers1_df, sub_centers)``:
@@ -991,6 +988,8 @@ def fit_ivf2_quantizer(
     sub_centers(cell, sub, svec) — routing tables of k1 and k1·k2 rows
     respectively, both broadcastable at any corpus size."""
     import hashlib
+
+    from .kmeans import lloyd_kernels
 
     assigned1, centers1_df = fit_ivf_quantizer(
         emb,
@@ -1003,10 +1002,10 @@ def fit_ivf2_quantizer(
 
     k2 = n_sub
     iters = sub_iters
+    nearest, lloyd = lloyd_kernels()
 
     def sub_assign(pdf):
         import numpy as _np
-        import pandas as _pd
 
         X = _np.vstack(pdf["_cn"].to_numpy()).astype(_np.float64)
         ids = pdf["neighbor_id"].astype(str).to_numpy()
@@ -1015,25 +1014,7 @@ def fit_ivf2_quantizer(
                 [hashlib.md5(i.encode()).hexdigest() for i in ids]
             )
         )
-        k = min(k2, len(ids))
-        C = X[order[:k]].copy()
-        for _ in range(iters):
-            d2 = (
-                (X * X).sum(1)[:, None]
-                - 2.0 * X @ C.T
-                + (C * C).sum(1)[None, :]
-            )
-            code = d2.argmin(1)
-            for ci in range(k):
-                m = code == ci
-                if m.any():
-                    C[ci] = X[m].mean(0)
-        d2 = (
-            (X * X).sum(1)[:, None]
-            - 2.0 * X @ C.T
-            + (C * C).sum(1)[None, :]
-        )
-        return pdf.assign(sub=d2.argmin(1))
+        return pdf.assign(sub=nearest(X, lloyd(X, order, k2, iters)))
 
     fields = "neighbor_id long, _cn array<double>, cell int, sub int"
     assigned = (

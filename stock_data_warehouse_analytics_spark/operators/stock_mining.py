@@ -9,15 +9,17 @@ no driver-side loop.  OLS itself is closed-form least squares via
 numpy (sklearn is not available here; ``LinearRegression`` is plain
 OLS, so ``lstsq`` reproduces it to float precision).
 
-The scale-out clustering path uses ``pyspark.ml.clustering.KMeans``;
-for the reference's 6-point input an exact enumerated k-means is also
-provided (globally optimal, deterministic — label-free comparison per
-SURVEY.md §4.2 item 5).
+M4 k-means clusters one point per ticker.  Up to 12 tickers it is
+exact: every set partition is scored and the globally optimal one wins
+(the reference clusters 6).  Past 12 it runs the package's driver
+Lloyd trainer (``operators/kmeans.lloyd_kernels``) seeded in md5(Ticker)
+order.  Both are deterministic; the result contract is co-membership,
+not label values (SURVEY.md §4.2 item 5).
 """
 
 from __future__ import annotations
 
-import itertools
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -32,12 +34,12 @@ __all__ = [
     "regression_same_day",
     "regression_next_day",
     "kmeans_features",
-    "kmeans_clusters",
     "kmeans_exact_small",
     "zscore_anomalies",
 ]
 
 _REG_SCHEMA = "Ticker string, R2_Score double, MSE double, Intercept double"
+_EXACT_MAX_TICKERS = 12  # S(12, 3) = 86 526 partitions, scored in ~0.1 s
 
 
 def prepare_mining_frame(fact: DataFrame, min_year: int = 2024) -> DataFrame:
@@ -176,58 +178,66 @@ def _standardize_pop(pdf: pd.DataFrame, cols: list[str]) -> np.ndarray:
     return (X - X.mean(axis=0)) / X.std(axis=0)  # ddof=0 (StandardScaler)
 
 
+def _restricted_growth(n: int, k: int) -> np.ndarray:
+    """Every partition of ``n`` items into exactly ``k`` blocks, one row
+    each in restricted-growth form (item 0 has label 0, each item's
+    label is at most one more than the largest label before it), rows
+    in lexicographic order.  A labeling's restricted-growth form is the
+    first labeling of its partition in ``itertools.product`` order."""
+    labels = np.zeros((1, 1), dtype=np.int64)
+    top = np.zeros(1, dtype=np.int64)  # largest label so far, per row
+    for _ in range(1, n):
+        width = np.minimum(top + 2, k)  # next label: 0 .. min(top+1, k-1)
+        row = np.repeat(np.arange(len(labels)), width)
+        nxt = np.arange(len(row)) - np.repeat(np.cumsum(width) - width, width)
+        labels = np.column_stack([labels[row], nxt])
+        top = np.maximum(top[row], nxt)
+    return labels[top == k - 1]
+
+
 def kmeans_exact_small(features: DataFrame, k: int = 3) -> DataFrame:
-    """M4 exact path: globally optimal k-means by enumerating set
-    partitions — deterministic, no seed sensitivity.  Only for bounded
-    group counts (the reference clusters 6 tickers; S(6,3)=90
-    partitions).  Compare by co-membership, not label values
-    (SURVEY.md §4.2 item 5)."""
+    """M4 k-means over the per-ticker features, standardized with the
+    population std.  Up to ``_EXACT_MAX_TICKERS`` rows it is globally
+    optimal: every set partition into ``k`` blocks is scored by its
+    within-cluster SSE in one vectorized pass, and in lexicographic
+    order the first one that beats the best so far by more than 1e-12
+    wins; its restricted-growth labels are the Cluster ids.  Past the
+    bound it is Lloyd on the driver (``operators/kmeans.lloyd_kernels``,
+    10 iterations), seeded by the ``k`` tickers with the smallest
+    md5(Ticker) hex digests.  Compare by co-membership, not label
+    values (SURVEY.md §4.2 item 5)."""
     pdf = features.toPandas().sort_values("Ticker").reset_index(drop=True)
     n = len(pdf)
-    if n > 12:
-        raise ValueError("exact k-means is for bounded inputs; use kmeans_clusters")
     if n < k:  # no assignment uses all k labels (sklearn raises too)
         raise ValueError(f"n_samples={n} should be >= n_clusters={k}")
     X = _standardize_pop(pdf, ["Return", "Volume"])
 
-    best, best_sse = None, np.inf
-    for assign in itertools.product(range(k), repeat=n):
-        if len(set(assign)) != k:
-            continue
-        a = np.asarray(assign)
-        sse = 0.0
-        for c in range(k):
-            pts = X[a == c]
-            sse += float(((pts - pts.mean(axis=0)) ** 2).sum())
-        if sse < best_sse - 1e-12:
-            best, best_sse = a, sse
+    if n > _EXACT_MAX_TICKERS:
+        from .kmeans import lloyd_kernels
+
+        nearest, lloyd = lloyd_kernels()
+        order = np.argsort(
+            [hashlib.md5(t.encode()).hexdigest() for t in pdf["Ticker"]]
+        )
+        best = nearest(X, lloyd(X, order, k, 10))
+    else:
+        labels = _restricted_growth(n, k)
+        member = labels[:, :, None] == np.arange(k)  # (partition, item, block)
+        means = np.einsum("pik,id->pkd", member, X) / member.sum(1)[:, :, None]
+        dev = X[None] - np.take_along_axis(means, labels[:, :, None], 1)
+        sse = (dev**2).sum((1, 2))
+        # only a strict running minimum can beat the best by > 1e-12
+        prev_min = np.minimum.accumulate(np.concatenate([[np.inf], sse[:-1]]))
+        best, best_sse = None, np.inf
+        for i in np.flatnonzero(sse < prev_min):
+            if sse[i] < best_sse - 1e-12:
+                best, best_sse = labels[i], sse[i]
     pdf["Cluster"] = best
     return literal_df(
         features.sparkSession,
         pdf.itertuples(index=False),
         "Ticker string, Return double, Volume double, Cluster bigint",
     )
-
-
-def kmeans_clusters(features: DataFrame, k: int = 3, seed: int = 42) -> DataFrame:
-    """M4 scale path — ``pyspark.ml`` StandardScaler + KMeans(seed):
-    distributed Lloyd over any number of groups.  Label ids are not
-    comparable across implementations; verify partition structure."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import StandardScaler, VectorAssembler
-
-    assembled = VectorAssembler(
-        inputCols=["Return", "Volume"], outputCol="_raw"
-    ).transform(features)
-    scaled = (
-        StandardScaler(inputCol="_raw", outputCol="_feat", withMean=True, withStd=True)
-        .fit(assembled)
-        .transform(assembled)
-    )
-    model = KMeans(k=k, seed=seed, featuresCol="_feat", predictionCol="Cluster").fit(
-        scaled
-    )
-    return model.transform(scaled).select("Ticker", "Return", "Volume", "Cluster")
 
 
 def zscore_anomalies(mining: DataFrame, threshold: float = 2.0) -> DataFrame:

@@ -81,8 +81,10 @@ def run_olap(spark: SparkSession, fact: DataFrame, results_dir: str) -> None:
 
 
 def run_mining(spark: SparkSession, fact: DataFrame, results_dir: str) -> None:
-    """Mining result tables 01–04 (datamining_analysis.py).  k-means
-    uses k=3: with fewer than 3 tickers left for clustering this raises
+    """Mining result tables 01–04 (datamining_analysis.py), over any
+    number of tickers: k-means (k=3) is exact up to 12 tickers and
+    Lloyd past that (``stock_mining.kmeans_exact_small``).  With fewer
+    than 3 tickers left for clustering it raises
     ``ValueError("n_samples=… should be >= n_clusters=3")``, sklearn's
     message, after writing tables 01–02."""
     _sink(fact, results_dir, MINING_SINKS)

@@ -206,39 +206,13 @@ def _tune_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_memo(spark, ("llm_similarity.tune_truth", sf_dir), build)
 
 
-def _lloyd_numpy(X, H, k: int, iters: int):
-    """Driver-side Lloyd over an ALREADY-BOUNDED sample array — the
-    exact math of ``operators.kmeans.lloyd_fit`` (md5-hash seeding:
-    k rows with the smallest (hash, order) keys; d² argmin assignment;
-    empty clusters keep their previous centroid) without its
-    per-iteration Spark job round.  Only ever called on the ≤
-    max(sweep)·fit_sample_per_cell-row fit sample (the bounded-by-
-    construction side of the state-size rule, like the k×dim centroid
-    table itself)."""
-    import numpy as np
-
-    order = np.lexsort((np.arange(len(H)), H))
-    centers = X[order[: min(k, len(X))]].astype(np.float64).copy()
-    k = centers.shape[0]
-    for _ in range(iters):
-        d2 = (
-            (X * X).sum(1)[:, None]
-            - 2.0 * X @ centers.T
-            + (centers * centers).sum(1)[None, :]
-        )
-        code = d2.argmin(1)
-        for ci in range(k):
-            mask = code == ci
-            if mask.any():
-                centers[ci] = X[mask].mean(0)
-    return centers
-
-
 def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """The whole N_CELLS sweep's index state, built ONCE per (session,
     sf_dir): one normalize+materialize pass over the corpus, ONE
     bounded sample collect feeding every sweep point's Lloyd fit on
-    the driver (nested ``fit_sample_per_cell``-style hash samples —
+    the driver (``operators/kmeans.lloyd_kernels``' driver trainer,
+    seeded in (md5 hash, sample order) order, over nested
+    ``fit_sample_per_cell``-style hash samples —
     the collect is ≤ max(sweep)·200 rows BY CONSTRUCTION regardless of
     corpus size, the same bounded-artifact contract as the k×dim
     centroid table), then ONE multi-codebook assignment pass
@@ -249,7 +223,7 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     import numpy as np
 
     from ..operators.dedup import hash_int60
-    from ..operators.kmeans import assign_codes_multi
+    from ..operators.kmeans import assign_codes_multi, lloyd_kernels
     from ..operators.similarity import normalize
 
     def build():
@@ -277,6 +251,7 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
         X_all = np.array([r._cn for r in sample], dtype=np.float64)
         H_all = np.array([r._h for r in sample], dtype=np.int64)
         B_all = np.array([r._b for r in sample], dtype=np.int64)
+        _, lloyd = lloyd_kernels()
         books: dict[int, "object"] = {}
         for nc in _NCELLS_SWEEP:
             target = nc * 200  # fit_sample_per_cell=200 discipline
@@ -290,7 +265,7 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
             # compares index SIZES, and the hash seeding does most of
             # the placement — extra Lloyd rounds shift absolute recall
             # a little but not the size comparison
-            books[nc] = _lloyd_numpy(X, H, k=nc, iters=3)
+            books[nc] = lloyd(X, np.lexsort((np.arange(len(H)), H)), nc, 3)
         multi = assign_codes_multi(
             # the checkpointed corpus is one local split — fan the
             # Arrow kernel out (same single-split gotcha as the PNG

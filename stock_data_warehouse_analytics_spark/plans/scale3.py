@@ -300,107 +300,67 @@ def emb_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract test checks code ranges, determinism, and that PQ
     reconstruction beats the global-mean baseline in every subspace.
 
-    Scale/implementation: a CUSTOM distributed Lloyd loop that trains
-    ALL 8 codebooks in one data pass per iteration — one Arrow
-    ``mapInPandas`` scan emits per-partition (subspace, code) partial
-    sums (≤ partitions·8·16 rows, codebook-sized × partitions), the
-    driver reduces them and rebroadcasts the 8·16·8-float codebook
-    (the dim-bounded side of the state-size rule, same as the PC1 Gram
-    and IVF-fit paths).  5 iterations + 1 distortion pass = 6 jobs;
-    the 8-sequential-``pyspark.ml``-fits formulation measured 10-14 s
-    at sf0.1 from per-fit fixed overhead alone — this one ~3 s.
+    Scale/implementation: the codebooks come from the package's
+    distributed Lloyd trainer (``operators/kmeans.pq_train``), which
+    trains ALL 8 codebooks in one Arrow scan per iteration (per-partition
+    (subspace, code) partial sums, reduced on the driver; the
+    8·16·8-float codebook is the only driver state — the dim-bounded
+    side of the state-size rule).  One more map pass assigns every
+    vector with the shared nearest-centroid kernel and emits
+    per-partition (subspace, code) counts and squared distortion.  The
+    seed collect, 5 iterations and the distortion pass are one job
+    each; the 8-sequential-``pyspark.ml``-fits formulation measured
+    10-14 s at sf0.1 from per-fit fixed overhead alone — this one ~3 s.
     Deterministic init: the 16 corpus vectors with the smallest
     md5-derived vec_id hashes seed every subspace."""
-    import numpy as np
+    from ..operators.kmeans import lloyd_kernels, pq_train
 
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .localCheckpoint(eager=True)  # every Lloyd pass reuses one scan
     )
-    # deterministic seeds: 16 rows by smallest hash_int60(vec_id)
-    seed_rows = (
-        emb.withColumn("h", hash_int60(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-        .select("embedding")
-        .collect()
+    codebooks = pq_train(
+        emb, vec_col="embedding", id_col="vec_id", m=_PQ_M, k=_PQ_K, iters=5
     )
-    seeds = np.array([r.embedding for r in seed_rows], dtype=np.float64)
-    # codebooks[s]: (K, DIM) — subspace s seeded from the same 16 rows
-    codebooks = [
-        seeds[:, s * _PQ_DIM : (s + 1) * _PQ_DIM].copy() for s in range(_PQ_M)
-    ]
+    m, dim, k = _PQ_M, _PQ_DIM, len(codebooks[0])
+    nearest, _ = lloyd_kernels()
 
-    m, dim, k = _PQ_M, _PQ_DIM, _PQ_K
-    part_schema = (
-        "subspace int, code int, cnt long, sums array<double>, sq double"
-    )
+    def distortion(batches):
+        import numpy as _np
+        import pandas as _pd
 
-    def make_pass(cbs: list, with_sq: bool):
-        cb_arr = [c.copy() for c in cbs]
-
-        def partial(batches):
-            import numpy as _np
-
-            acc_cnt = _np.zeros((m, k), dtype=_np.int64)
-            acc_sum = _np.zeros((m, k, dim), dtype=_np.float64)
-            acc_sq = _np.zeros((m, k), dtype=_np.float64)
-            seen = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                seen = True
-                X = _np.vstack(pdf["embedding"].to_numpy()).astype(_np.float64)
-                for s in range(m):
-                    Xs = X[:, s * dim : (s + 1) * dim]
-                    C = cb_arr[s]
-                    d2 = (
-                        (Xs * Xs).sum(1)[:, None]
-                        - 2.0 * Xs @ C.T
-                        + (C * C).sum(1)[None, :]
-                    )
-                    code = d2.argmin(1)
-                    for ci in range(k):
-                        mask = code == ci
-                        n = int(mask.sum())
-                        if not n:
-                            continue
+        acc_cnt = _np.zeros((m, k), dtype=_np.int64)
+        acc_sq = _np.zeros((m, k), dtype=_np.float64)
+        seen = False
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            seen = True
+            X = _np.vstack(pdf["embedding"].to_numpy()).astype(_np.float64)
+            for s, C in enumerate(codebooks):
+                Xs = X[:, s * dim : (s + 1) * dim]
+                code = nearest(Xs, C)
+                for ci in range(k):
+                    mask = code == ci
+                    n = int(mask.sum())
+                    if n:
                         acc_cnt[s, ci] += n
-                        acc_sum[s, ci] += Xs[mask].sum(0)
-                        if with_sq:
-                            acc_sq[s, ci] += float(
-                                ((Xs[mask] - C[ci]) ** 2).sum()
-                            )
-            if not seen:
-                return
-            import pandas as _pd
-
-            rows = [
-                (s, ci, int(acc_cnt[s, ci]), acc_sum[s, ci].tolist(),
-                 float(acc_sq[s, ci]))
-                for s in range(m)
-                for ci in range(k)
-                if acc_cnt[s, ci] > 0
-            ]
+                        acc_sq[s, ci] += float(((Xs[mask] - C[ci]) ** 2).sum())
+        if seen:
             yield _pd.DataFrame(
-                rows, columns=["subspace", "code", "cnt", "sums", "sq"]
+                [
+                    (s, ci, int(acc_cnt[s, ci]), float(acc_sq[s, ci]))
+                    for s in range(m)
+                    for ci in range(k)
+                    if acc_cnt[s, ci] > 0
+                ],
+                columns=["subspace", "code", "cnt", "sq"],
             )
 
-        return partial
-
-    for _ in range(5):
-        parts = emb.mapInPandas(make_pass(codebooks, False), part_schema).collect()
-        cnt = np.zeros((m, k), dtype=np.int64)
-        tot = np.zeros((m, k, dim), dtype=np.float64)
-        for r in parts:
-            cnt[r.subspace, r.code] += r.cnt
-            tot[r.subspace, r.code] += np.array(r.sums)
-        for s in range(m):
-            nz = cnt[s] > 0
-            codebooks[s][nz] = tot[s][nz] / cnt[s][nz, None]
-
-    final = emb.mapInPandas(make_pass(codebooks, True), part_schema)
+    final = emb.select("embedding").mapInPandas(
+        distortion, "subspace int, code int, cnt long, sq double"
+    )
     return (
         final.groupBy("subspace")
         .agg(

@@ -84,17 +84,6 @@ def test_kmeans_golden_co_membership(mining):
     assert partition(got.Cluster.tolist()) == partition(want.Cluster.tolist())
 
 
-def test_kmeans_ml_path_runs(mining):
-    from stock_data_warehouse_analytics_spark.operators.stock_mining import (
-        kmeans_clusters,
-        kmeans_features,
-    )
-
-    out = kmeans_clusters(kmeans_features(mining), k=3).toPandas()
-    assert set(out.columns) == {"Ticker", "Return", "Volume", "Cluster"}
-    assert out.Cluster.nunique() == 3
-
-
 def test_anomalies_golden(mining):
     from stock_data_warehouse_analytics_spark.operators.stock_mining import (
         zscore_anomalies,
@@ -301,6 +290,54 @@ def test_regression_next_day_drops_null_features(spark):
     got = regression_next_day(df).toPandas()
     assert sorted(got.Ticker) == ["AAA", "BBB"]
     assert got[["R2_Score", "MSE", "Intercept"]].notna().all().all()
+
+
+def _kmeans_by_product(X: np.ndarray, k: int):
+    """The exact k-means as first written: every labeling in
+    ``itertools.product`` order, those using fewer than ``k`` labels
+    skipped, the first that beats the best by more than 1e-12 wins."""
+    import itertools
+
+    best, best_sse = None, np.inf
+    for assign in itertools.product(range(k), repeat=len(X)):
+        if len(set(assign)) != k:
+            continue
+        a = np.asarray(assign)
+        sse = 0.0
+        for c in range(k):
+            pts = X[a == c]
+            sse += float(((pts - pts.mean(axis=0)) ** 2).sum())
+        if sse < best_sse - 1e-12:
+            best, best_sse = a, sse
+    return best
+
+
+@pytest.mark.parametrize("n", [4, 5, 6, 7, 8])
+def test_kmeans_exact_small_matches_product_enumeration(spark, n):
+    """The restricted-growth enumeration picks the labels the product
+    enumeration picked, on random features, with a duplicated ticker
+    (tied partitions) and on an integer grid (many tied SSEs)."""
+    from stock_data_warehouse_analytics_spark.operators.stock_mining import (
+        _standardize_pop,
+        kmeans_exact_small,
+    )
+
+    rng = np.random.default_rng(n)
+    for case in ("random", "duplicate", "grid"):
+        ret = rng.normal(0, 0.01, n)
+        vol = rng.uniform(1e4, 1e7, n)
+        if case == "duplicate":
+            ret[1], vol[1] = ret[0], vol[0]
+        if case == "grid":
+            ret, vol = np.round(ret * 100) / 100, np.round(vol / 1e6) * 1e6
+        pdf = pd.DataFrame(
+            {"Ticker": [f"T{i}" for i in range(n)], "Return": ret, "Volume": vol}
+        )
+        feats = spark.createDataFrame(pdf)
+        got = kmeans_exact_small(feats, k=3).toPandas()
+        want = _kmeans_by_product(_standardize_pop(pdf, ["Return", "Volume"]), 3)
+        assert list(got.Ticker) == list(pdf.Ticker)
+        assert got.Cluster.tolist() == want.tolist(), case
 
 
 def test_kmeans_exact_small_rejects_fewer_groups_than_k(spark):

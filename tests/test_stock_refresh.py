@@ -21,7 +21,10 @@
 - a dashboard opened after the refresh in the same session reads the
   refresh's fact (one raw load) and serves the same tables;
 - ``run_olap`` runs over one ticker; ``run_mining`` over one or two
-  tickers raises k-means' declared error.
+  tickers raises k-means' declared error;
+- k-means on generated raw files at its exact bound (12 tickers, the
+  optimal partition) and past it (13 tickers, Lloyd, every refresh
+  output written).
 
 Needs no reference data.
 """
@@ -285,6 +288,66 @@ def test_mining_needs_three_tickers(spark, tmp_path):
         with pytest.raises(ValueError, match=f"n_samples={n} should be >= n_clusters=3"):
             run_mining(spark, fact, str(out / "mining"))
         fact.unpersist()
+
+
+def _kmeans_points(spark, raw):
+    """The facade's k-means rows and the standardized features it
+    clustered."""
+    from stock_data_warehouse_analytics_spark.api import StockWarehouse
+    from stock_data_warehouse_analytics_spark.operators.stock_mining import (
+        _standardize_pop,
+    )
+
+    wh = StockWarehouse(spark, str(raw))
+    got = wh.kmeans().toPandas()
+    wh.close()
+    return got, _standardize_pop(got, ["Return", "Volume"])
+
+
+def _is_lloyd_fixed_point(X, labels) -> bool:
+    """Every point is nearest to its own cluster's mean."""
+    import numpy as np
+
+    means = np.array([X[labels == c].mean(0) for c in range(labels.max() + 1)])
+    d2 = ((X[:, None, :] - means[None]) ** 2).sum(2)
+    return bool((d2[np.arange(len(X)), labels] <= d2.min(1) + 1e-12).all())
+
+
+def test_kmeans_at_the_exact_bound(spark, tmp_path):
+    """12 generated tickers take the exact path: three clusters in
+    restricted-growth labels (the first ticker in cluster 0), and an
+    optimal partition is a Lloyd fixed point."""
+    from perfbench.gen import stock_csvs
+
+    stock_csvs(7, str(tmp_path), tickers=[f"S{i:02d}" for i in range(12)])
+    got, X = _kmeans_points(spark, tmp_path)
+    labels = got.Cluster.to_numpy()
+    assert len(got) == 12 and sorted(set(labels)) == [0, 1, 2]
+    assert all(labels[i] <= labels[:i].max(initial=-1) + 1 for i in range(12))
+    assert _is_lloyd_fixed_point(X, labels)
+
+
+def test_refresh_past_the_exact_bound(spark, tmp_path):
+    """13 generated tickers: k-means runs Lloyd on the driver instead of
+    raising, and the refresh writes all four mining tables."""
+    from perfbench.gen import stock_csvs
+
+    tickers = [f"S{i:02d}" for i in range(13)]
+    raw = tmp_path / "raw"
+    stock_csvs(7, str(raw), tickers=tickers)
+    out = tmp_path / "out"
+    _refresh(spark, raw, out).unpersist()
+    mining = out / "datamining_results"
+    assert sorted(os.listdir(mining)) == [
+        "01_regression_same_day.csv", "02_regression_next_day.csv",
+        "03_kmeans_clusters.csv", "04_anomalies.csv",
+    ]
+    with open(mining / "03_kmeans_clusters.csv", encoding="utf-8") as f:
+        clusters = {r["Ticker"]: int(r["Cluster"]) for r in csv.DictReader(f)}
+    assert sorted(clusters) == tickers
+    got, X = _kmeans_points(spark, raw)
+    assert dict(zip(got.Ticker, got.Cluster)) == clusters
+    assert _is_lloyd_fixed_point(X, got.Cluster.to_numpy())
 
 
 FACADE = [

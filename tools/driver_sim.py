@@ -18,7 +18,8 @@ sentinel, floats → repr), rows are sorted, and the two value matrices
 are sha256-hashed; a query passes when row count, sorted schema names,
 and the hash all agree.  Rows-only queries (no oracle entry) pass when
 the DataFrame evaluates without error (the driver's weaker check; each
-such query carries a named substitute test, see QUERIES.md).
+such query carries a named substitute test, see QUERIES.md); their line
+prints the same value hash, so two trees can be diffed on them.
 
 Exit status: 0 iff every query passes.  Takes ~5 min for the full
 registry on local[8].
@@ -121,6 +122,7 @@ def main() -> int:
                 n_rows_only += 1
                 print(
                     f"[{i}/{len(names)}] {name}: ROWS-ONLY rows={len(s_rows)}"
+                    f" hash={_matrix_hash(s_cols, s_rows)}"
                     f" ({time.time() - t1:.1f}s)"
                 )
                 continue
